@@ -154,8 +154,8 @@ object Graph {
     // superseded round's corpus-scale edge blocks (round-14 verdict
     // #2/#6) — without them each peel leaves its whole edge frame in the
     // block manager until GC notices.
-    val chain = new graft.plans.PlanGuard.CheckpointChain()
-    var sym = chain.step("kcore_seed",
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    var sym = frames.round("kcore_seed",
       raw.union(raw.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     for (r <- 1 to rounds) {
       val alive = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -163,11 +163,11 @@ object Graph {
       val peeled = sym
         .join(alive, Seq("src"), "left_semi")
         .join(alive.select(col("src").as("dst")), Seq("dst"), "left_semi")
-      sym = if (r == rounds) chain.last("kcore_round", peeled)
-        else chain.step("kcore_round", peeled)
+      sym = if (r == rounds) frames.last("kcore_round", peeled)
+        else frames.round("kcore_round", peeled)
     }
-    sym.groupBy(col("src")).agg(count(lit(1)).as("degree"))
-      .select(col("src").as("node"), col("degree"))
+    frames.close(sym.groupBy(col("src")).agg(count(lit(1)).as("degree"))
+      .select(col("src").as("node"), col("degree")))
   }
 
   /** Root-and-depth resolution over a FOREST given as `(node, parent)`
@@ -192,8 +192,8 @@ object Graph {
     // LAZY checkpoint chain (rounds 13/14): the kCore rationale —
     // truncated lineage per round, barrier jobs materialize and release
     // superseded rounds' node-table-scale blocks.
-    val chain = new graft.plans.PlanGuard.CheckpointChain()
-    var st = chain.step("treepaths_seed", nodes.select(col("node"),
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    var st = frames.round("treepaths_seed", nodes.select(col("node"),
       coalesce(col("parent"), col("node")).as("ptr"),
       when(col("parent").isNull, 0L).otherwise(1L).as("depth")))
     for (r <- 1 to rounds) {
@@ -202,10 +202,10 @@ object Graph {
           col("depth").as("hop")), Seq("ptr"))
         .select(col("node"), col("nxt").as("ptr"),
           (col("depth") + col("hop")).as("depth"))
-      st = if (r == rounds) chain.last("treepaths_round", doubled)
-        else chain.step("treepaths_round", doubled)
+      st = if (r == rounds) frames.last("treepaths_round", doubled)
+        else frames.round("treepaths_round", doubled)
     }
-    st.select(col("node"), col("ptr").as("root_key"), col("depth"))
+    frames.close(st.select(col("node"), col("ptr").as("root_key"), col("depth")))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) with a FIXED
@@ -283,12 +283,12 @@ object Graph {
       rounds: Int = 4): DataFrame = {
     val raw = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    val sym = raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist()
     // LAZY checkpoint chain (rounds 13/14): the kCore rationale —
     // barrier jobs materialize and release superseded rounds' blocks.
-    val chain = new graft.plans.PlanGuard.CheckpointChain()
-    var dist = chain.step("bfs_seed",
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    val sym = frames.persist(
+      raw.union(raw.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+    var dist = frames.round("bfs_seed",
       seeds.select(col("node")).distinct().withColumn("dist", lit(0L)))
     for (r <- 1 to rounds) {
       val relaxed = sym
@@ -296,10 +296,10 @@ object Graph {
         .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
       val merged = dist.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      dist = if (r == rounds) chain.last("bfs_round", merged)
-        else chain.step("bfs_round", merged)
+      dist = if (r == rounds) frames.last("bfs_round", merged)
+        else frames.round("bfs_round", merged)
     }
-    dist
+    frames.close(dist)
   }
 
   /** Weighted single/multi-source shortest paths with a FIXED round count
@@ -325,13 +325,13 @@ object Graph {
       rounds: Int = 4): DataFrame = {
     val raw = edges.select(col("src"), col("dst"), col("w"))
       .filter(col("src") =!= col("dst"))
-    val sym = raw.union(raw.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .persist()
     // LAZY checkpoint chain (rounds 13/14): the kCore rationale —
     // barrier jobs materialize and release superseded rounds' blocks.
-    val chain = new graft.plans.PlanGuard.CheckpointChain()
-    var dist = chain.step("sssp_seed",
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    val sym = frames.persist(
+      raw.union(raw.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+        .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
+    var dist = frames.round("sssp_seed",
       seeds.select(col("node")).distinct().withColumn("dist", lit(0L)))
     for (r <- 1 to rounds) {
       val relaxed = sym
@@ -339,10 +339,10 @@ object Graph {
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       val merged = dist.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      dist = if (r == rounds) chain.last("sssp_round", merged)
-        else chain.step("sssp_round", merged)
+      dist = if (r == rounds) frames.last("sssp_round", merged)
+        else frames.round("sssp_round", merged)
     }
-    dist
+    frames.close(dist)
   }
 
   /** The identical computation as DuckDB SQL: `edgesCte` must produce

@@ -964,13 +964,23 @@ object Dedup {
     */
   private def blockStructs(blockTokens: Int) = {
     val toks = TextOps.tokens(col("text"))
-    transform(
+    // NULL for NULL text under either ANSI setting: with ANSI off,
+    // size(NULL) is −1, the sequence below becomes [0], and a NULL text
+    // would emit one phantom NULL block
+    when(col("text").isNotNull, transform(
       // integer block count: Column `/` is double division, so truncate
       // back (non-negative operands — identical to floor division)
       sequence(lit(0), ((size(toks) - 1) / blockTokens).cast("int")),
       i => struct(i.as("idx"),
-        array_join(slice(toks, i * blockTokens + 1, lit(blockTokens)), " ").as("block")))
+        array_join(slice(toks, i * blockTokens + 1, lit(blockTokens)), " ").as("block"))))
   }
+
+  /** `n_blocks` of a [[blockStructs]] array, NULL for NULL text: with
+    * `spark.sql.ansi.enabled=false` Spark's `size(NULL)` is −1, not NULL.
+    */
+  private def nBlocks(blocksArr: Column): Column =
+    when(col("text").isNull, lit(null)).otherwise(size(blocksArr))
+      .cast("long").as("n_blocks")
 
   /** Reassemble kept (idx, block) rows per doc: blocks in original order,
     * space-joined, plus the survivor count.
@@ -1008,9 +1018,8 @@ object Dedup {
     // re-exploded the corpus and ran a (doc_id, n_blocks) DISTINCT just to
     // recover a value that is a pure projection of the document row
     // (round 14: one corpus explode pass + one distinct shuffle + one join
-    // removed). NULL text ⇒ NULL n_blocks in both shapes (size(NULL) is
-    // NULL, and the old explode emitted no row to left-join back).
-    docs.select(col("doc_id"), size(blocksArr).cast("long").as("n_blocks"))
+    // removed). NULL text ⇒ NULL n_blocks, see [[nBlocks]].
+    docs.select(col("doc_id"), nBlocks(blocksArr))
       .join(clean, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("clean_text"), lit("")).as("clean_text"),
@@ -1182,7 +1191,7 @@ object Dedup {
       blockTokens: Int = 16, windowDur: String = "10 seconds"): DataFrame = {
     val blocksArr = blockStructs(blockTokens)
     val blocks = docs
-      .select(col("doc_id"), col(tsCol), size(blocksArr).cast("long").as("n_blocks"),
+      .select(col("doc_id"), col(tsCol), nBlocks(blocksArr),
         explode(blocksArr).as("b"))
       .select(col("doc_id"), col(tsCol), col("n_blocks"),
         col("b.idx").as("idx"), col("b.block").as("block"))
@@ -1699,33 +1708,29 @@ object Dedup {
         .collect().head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
     }
-    // LAZY checkpoints (round-13 optimization): the checksum action that
-    // immediately follows each checkpoint materializes it, so every round
+    // LAZY round chain (round-13 optimization): the checksum action that
+    // immediately follows each round materializes it, so a lazy round
     // costs ONE job instead of two (checkpoint job + checksum job); the
     // lineage truncation the loop needs is unchanged — the next round
-    // builds on the stored checkpoint blocks either way. Once round r's
-    // checksum has materialized it, round r−1's lineage is truncated away
-    // everywhere, so its corpus-scale edge blocks are released
-    // immediately (round-14 verdict #2) — the loop holds at most TWO
-    // rounds' blocks at any moment and leaves only the final round's.
-    var edges = canon(pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .guardedCheckpointLazy("components_seed")
+    // builds on the stored checkpoint blocks either way. Superseded
+    // rounds are released at the chain's barriers and at close, not per
+    // round: the per-round release cost d9 5x on a 32-core box.
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    var edges = frames.round("components_seed",
+      canon(pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))))
     var prev = checksum(edges)
     var converged = false
     while (!converged) {
-      val next = smallStar(largeStar(edges))
-        .guardedCheckpointLazy("components_round")
-      val cs = checksum(next)
-      org.apache.spark.sql.graft.CheckpointRelease.release(edges)
+      edges = frames.round("components_round", smallStar(largeStar(edges)))
+      val cs = checksum(edges)
       converged = cs == prev
       prev = cs
-      edges = next
     }
     // converged: every component is a star rooted at its minimum
     val s = sym(edges)
-    s.groupBy(col("a").as("doc_id"))
+    frames.close(s.groupBy(col("a").as("doc_id"))
       .agg(min(col("b")).as("minb"))
-      .select(col("doc_id"), least(col("doc_id"), col("minb")).as("group_id"))
+      .select(col("doc_id"), least(col("doc_id"), col("minb")).as("group_id")))
   }
 
   /** SimHash (16-bit) over token ids: for each bit of g(id) = (a·id+b) mod

@@ -2476,15 +2476,8 @@ object TextOps {
     */
   private[graft] def bpeMergeTable(docs: DataFrame, rounds: Int,
       docMod: Long, maxChars: Int,
-      driverMaxHist: Long = bpeDriverMaxHist): Seq[(Long, String, String, Long)] = {
-    val (merges, state) = bpeLoop(docs, rounds, docMod, maxChars, driverMaxHist)
-    // after round 1 the final state is a localCheckpoint leaf where
-    // Dataset.unpersist is a no-op (round-8 ADVICE) — release its
-    // corpus-sample-sized blocks deterministically; safe, never read again
-    state.unpersist()
-    org.apache.spark.sql.graft.CheckpointRelease.release(state)
-    merges
-  }
+      driverMaxHist: Long = bpeDriverMaxHist): Seq[(Long, String, String, Long)] =
+    bpeLoop(docs, rounds, docMod, maxChars, driverMaxHist)((merges, _) => merges)
 
   /** Tokenizer FERTILITY of the learned BPE vocabulary (x63) — apply the
     * [[bpeMerges]] merge table to the sampled corpus and report, per
@@ -2778,13 +2771,14 @@ object TextOps {
     * same tie-break (property-pinned against the driver-side reference
     * BPE; x62/x65/x66 hashes unchanged).
     *
-    * Returns the merge table plus the FINAL state histogram (caller
-    * unpersists + releases).
+    * Hands the merge table and the FINAL state histogram to `use`; the
+    * state's blocks are released when `use` returns.
     */
-  private[graft] def bpeLoop(docs: DataFrame, rounds: Int, docMod: Long,
+  private[graft] def bpeLoop[A](docs: DataFrame, rounds: Int, docMod: Long,
       maxChars: Int,
       driverMaxHist: Long = bpeDriverMaxHist,
-      compactEvery: Int = 16): (Seq[(Long, String, String, Long)], DataFrame) = {
+      compactEvery: Int = 16)(
+      use: (Seq[(Long, String, String, Long)], DataFrame) => A): A = {
     val SEP = "\u0001"
     val hist = bpeInitialHistogram(docs, docMod, maxChars)
     val nHist = hist.count()
@@ -2798,7 +2792,7 @@ object TextOps {
       val rows = hist.collect()
         .map(r => (r.getString(0).split(SEP), r.getLong(1)))
       val (merges, fin) = bpeLoopDriver(rows, rounds)
-      return (merges,
+      return use(merges,
         fin.toSeq.map { case (t, c) => (t.mkString(SEP), c) }.toDF("s", "c"))
     }
     // SIZE the state to the data: the sampled histogram is usually far
@@ -2836,15 +2830,13 @@ object TextOps {
     require(compactEvery >= 1, "compactEvery must be ≥ 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    var base = hist.coalesce(stateParts).persist()
+    // every base and delta checkpoint is released when the loop closes
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    var base = frames.persist(hist.coalesce(stateParts))
     var delta: DataFrame = Seq.empty[(String, Long)].toDF("s", "c")
     var touchedKeys: List[String] = Nil
     def baseLive: Column =
       touchedKeys.foldLeft(lit(true))((acc, p) => acc && !col("s").contains(p))
-    def release(df: DataFrame): Unit = {
-      df.unpersist()
-      org.apache.spark.sql.graft.CheckpointRelease.release(df)
-    }
     // DRIVER-MEMORY BOUND of this dict (round-10 verdict #3 — the one
     // driver structure whose worst case grows with corpus DIVERSITY
     // rather than a constant): `counts` holds every distinct ADJACENT
@@ -2894,11 +2886,10 @@ object TextOps {
         // partitions at x65's depth. (No re-collapse: two state rows may
         // carry the same `s` after a merge — counts are weighted, so a
         // split histogram row is still exact.)
-        val nextDelta = delta.filter(!touchPred)
+        val nextDelta = frames.eager("bpe_delta", delta.filter(!touchPred)
           .select(col("s"), col("c"))
           .unionByName(rewritten)
-          .coalesce(stateParts)
-          .guardedCheckpoint("bpe_delta")
+          .coalesce(stateParts))
         // the round's ONE metadata collect: the touched slice's
         // before/after pair-count delta (reads the rewritten cache the
         // checkpoint job just filled)
@@ -2912,31 +2903,25 @@ object TextOps {
             if (v > 0L) counts(key) = v else { counts.remove(key); () }
           }
         rewritten.unpersist()
-        // Dataset.unpersist is a no-op on a checkpoint leaf — release the
-        // superseded round's blocks deterministically (round-0's empty
-        // local delta releases as a no-op)
-        release(delta)
         delta = nextDelta
         touchedKeys ::= (l + SEP + rr)
         if (touchedKeys.size >= compactEvery) {
-          val compacted = base.filter(baseLive).select(col("s"), col("c"))
+          base = frames.eager("bpe_compact", base.filter(baseLive)
+            .select(col("s"), col("c"))
             .unionByName(delta)
-            .coalesce(stateParts)
-            .guardedCheckpoint("bpe_compact")
-          release(base); release(delta)
-          base = compacted
+            .coalesce(stateParts))
           delta = Seq.empty[(String, Long)].toDF("s", "c")
           touchedKeys = Nil
         }
       }
     }
-    // ONE final compaction so the caller gets (and releases) a single
-    // checkpoint leaf — the pre-round-10 state contract
-    val state = base.filter(baseLive).select(col("s"), col("c"))
-      .unionByName(delta)
-      .coalesce(stateParts)
-      .guardedCheckpoint("bpe_state")
-    release(base); release(delta)
-    (merges.toSeq, state)
+    // ONE final compaction so `use` reads a single checkpoint leaf — the
+    // pre-round-10 state contract
+    val out = use(merges.toSeq, frames.eager("bpe_state",
+      base.filter(baseLive).select(col("s"), col("c"))
+        .unionByName(delta)
+        .coalesce(stateParts)))
+    frames.close()
+    out
   }
 }

@@ -129,23 +129,10 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
   def beamSearchServed(embeddings: DataFrame, graph: DataFrame,
       queryIds: Seq[Long], entryIds: Seq[Long], k: Int = 5, beam: Int = 32,
       rounds: Int = 4): DataFrame = {
-    val unit = withUnit(embeddings).select(col("vec_id"), col("unit")).persist()
-    beamSearchServedUnits(unit, graph, queryIds, entryIds, k, beam, rounds)
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    val unit = frames.persist(withUnit(embeddings).select(col("vec_id"), col("unit")))
+    frames.close(beamSearchOver(unit, graph, queryIds, entryIds, k, beam, rounds))
   }
-
-  /** [[beamSearchServed]] with the unit-vector frame PRECOMPUTED by the
-    * caller — the form multi-serve reads use so one corpus-scale
-    * normalization cache feeds every walk instead of each serve persisting
-    * its own identical copy (round-9 verdict #3). Caller owns the
-    * persist/release; the graph-edge cache is still per-graph here (the
-    * two serves of a decision read walk DIFFERENT graphs).
-    */
-  private[ops] def beamSearchServedUnits(unit: DataFrame, graph: DataFrame,
-      queryIds: Seq[Long], entryIds: Seq[Long], k: Int, beam: Int,
-      rounds: Int): DataFrame =
-    beamSearchOver(unit,
-      graph.select(col("src_id"), col("neighbor_id")).persist(),
-      queryIds, entryIds, k, beam, rounds)
 
   /** Persisted unit-vector store for the graph serve path — the
     * point-lookup seam [[beamSearch]]'s cost model names, implemented:
@@ -173,23 +160,24 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
     * the frontier, not the corpus, which is the serve cost model a 100 TB
     * deployment needs. The driver pays one bounded collect per round (the
     * tunedNprobe/navEntryIds discipline: metadata, never data).
+    *
+    * Query batches are capped at 4096 ids: the per-round collect is
+    * |Q|·beam·(graphK+1) rows, so driver memory scales with the batch
+    * (4096·32·25 longs ≈ 26 MB is the accepted worst case). A larger
+    * batch fails with `IllegalArgumentException` before any table is
+    * read — shard it instead.
     */
   def beamSearchServedPruned(spark: org.apache.spark.sql.SparkSession,
       unitsTable: String, graph: DataFrame, queryIds: Seq[Long],
       entryIds: Seq[Long], k: Int = 5, beam: Int = 32,
       rounds: Int = 4): DataFrame = {
-    // batch-size ceiling (round-14 ADVICE): the per-round frontier collect
-    // below is |Q|·beam·(graphK+1) ROWS since round 13 (the id dedup moved
-    // driver-side), not distinct ids — driver memory scales with the query
-    // batch, so a large-|Q| caller must shard its batch instead of
-    // silently inflating the collect (4096·32·25 longs ≈ 26 MB is the
-    // accepted worst case).
     require(queryIds.size <= 4096,
       s"beamSearchServedPruned: query batch ${queryIds.size} exceeds the " +
         "4096 ceiling the per-round driver collect is sized for — shard the batch")
     def unitsFor(ids: Seq[Long]): DataFrame =
       spark.table(unitsTable).filter(col("vec_id").isInCollection(ids))
-    val g = graph.select(col("src_id"), col("neighbor_id")).persist()
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    val g = frames.persist(graph.select(col("src_id"), col("neighbor_id")))
     val queries = F.broadcast(unitsFor(queryIds)
       .select(col("vec_id").as("query_id"), col("unit").as("qv")))
     def scoreAndPrune(cand: DataFrame, candIds: Seq[Long]): DataFrame = {
@@ -205,41 +193,35 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
         .filter(col("rn") <= beam)
         .select(col("query_id"), col("node"), col("sim"))
     }
-    var state = scoreAndPrune(
+    var state = frames.eager("served_beam_seed", scoreAndPrune(
       queries.select(col("query_id")).crossJoin(
         F.broadcast(unitsFor(entryIds).select(col("vec_id").as("node")))),
-      entryIds).guardedCheckpoint("served_beam_seed")
+      entryIds))
     for (_ <- 1 to rounds) {
-      // LAZY checkpoint (round-13): the candidate-id collect right below
-      // is the materializing action, so the frontier costs one job, not
-      // two; the id dedup moves to the driver (the collected column is
-      // the same ≤ |Q|·beam·(graphK+1) bounded metadata either way),
-      // saving the per-round distinct's shuffle+job.
-      val expanded = state.select(col("query_id"), col("node").as("src_id"))
-        .join(g, Seq("src_id"))
-        .select(col("query_id"), col("neighbor_id").as("node"))
-        .unionByName(state.select(col("query_id"), col("node")))
-        .distinct()
-        .guardedCheckpointLazy("served_beam_frontier")
+      // LAZY frontier round (round-13): the candidate-id collect right
+      // below is the materializing action, so the frontier costs one job,
+      // not two; the id dedup moves to the driver (the collected column
+      // is the same ≤ |Q|·beam·(graphK+1) bounded metadata either way),
+      // saving the per-round distinct's shuffle+job. Superseded states
+      // and frontiers (all |Q|·beam·(graphK+1)-bounded) are released at
+      // close.
+      val expanded = frames.round("served_beam_frontier",
+        state.select(col("query_id"), col("node").as("src_id"))
+          .join(g, Seq("src_id"))
+          .select(col("query_id"), col("neighbor_id").as("node"))
+          .unionByName(state.select(col("query_id"), col("node")))
+          .distinct())
       // the bounded per-round collect: candidate ids only, never vectors
       val candIds = expanded.select(col("node"))
         .collect().map(_.getLong(0)).distinct.toSeq
-      val next = scoreAndPrune(expanded, candIds).guardedCheckpoint("served_beam_round")
-      // the eager round checkpoint just materialized `next`, so the
-      // previous state and the collected frontier are superseded —
-      // release their blocks now (round-14 verdict #2; both frames are
-      // |Q|·beam·(graphK+1)-bounded, but per-round leaks still accumulate
-      // across a serve fleet)
-      org.apache.spark.sql.graft.CheckpointRelease.release(state)
-      org.apache.spark.sql.graft.CheckpointRelease.release(expanded)
-      state = next
+      state = frames.eager("served_beam_round", scoreAndPrune(expanded, candIds))
     }
     val wf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("sim").desc, col("node").asc)
-    state.withColumn("rank", F.row_number().over(wf))
+    frames.close(state.withColumn("rank", F.row_number().over(wf))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("node").as("neighbor_id"),
-        col("rank").cast("long").as("rank"))
+        col("rank").cast("long").as("rank")))
   }
 
 
@@ -552,9 +534,9 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
     // scale caches of the same computation), released eagerly once the
     // |Q|-row report has materialized
     val unit = withUnit(embeddings).select(col("vec_id"), col("unit")).persist()
-    val servedApp = beamSearchServedUnits(unit, spark.table(oldTable),
+    val servedApp = beamSearchOver(unit, spark.table(oldTable),
       queryIds, oldEntries, k, beam, rounds)
-    val servedReb = beamSearchServedUnits(unit, rebuilt,
+    val servedReb = beamSearchOver(unit, rebuilt,
       queryIds, rebuiltEntries, k, beam, rounds)
     val truth = bruteForceTopKOver(unit, queryIds, k)
     def hitsOf(served: DataFrame, name: String): DataFrame = truth

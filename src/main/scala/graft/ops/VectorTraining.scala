@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.plans.PlanGuard.GuardedCheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 
@@ -279,7 +278,8 @@ private[ops] trait VectorTraining { self: VectorCore =>
     // walk). Materializing the sample as a driver-local relation makes
     // the bound real and machine-checked — and mirrors the driver-side
     // collect this mode exists to reproduce.
-    val samp = (if (exactOrder) {
+    val frames = new graft.plans.PlanGuard.CheckpointChain
+    val samp = frames.persist(if (exactOrder) {
       val cap = 8 * target
       val rows = sampled.limit(cap + 1).collect()
       require(rows.length <= cap,
@@ -287,97 +287,79 @@ private[ops] trait VectorTraining { self: VectorCore =>
           s"only; use the production (batched) mode for corpus-scale training")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), sampled.schema)
         .repartition(1).sortWithinPartitions(col("vec_id"))
-    } else sampled).persist()
-    var cur: DataFrame = null
-    try {
-      val sn = samp.count()
-      require(sn >= c, s"sample $sn smaller than C=$c")
-      // ---- init: batched farthest-point over the sample frame ----
-      // first centroid = the smallest-vec_id sample row (the driver
-      // trainer's sample(0) under its vec_id-sorted collect)
-      val firstVec = samp.orderBy(col("vec_id")).limit(1)
-        .select(col("unit")).head().getSeq[Double](0).toArray
-      val dim = firstVec.length
-      val chosen = scala.collection.mutable.ArrayBuffer[Array[Double]](firstVec)
-      val batchSize = if (exactOrder) 1 else math.max(1, (c - 1 + initRounds - 1) / initRounds)
-      cur = samp.select(col("vec_id"), col("unit"),
-        dot(col("unit"), typedlit(firstVec.toSeq)).as("maxsim")).persist()
-      cur.count()
-      while (chosen.size < c) {
-        val take = math.min(batchSize, c - chosen.size)
-        // the `take` farthest points from the chosen set — smallest
-        // max-cosine, ties to the smaller vec_id (TakeOrdered: no global
-        // sort materializes)
-        val batch = cur.orderBy(col("maxsim").asc, col("vec_id").asc).limit(take)
-          .select(col("unit")).collect().map(_.getSeq[Double](0).toArray)
-        val bf = centroidFrame(spark,
-          batch.toIndexedSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) })
-        // eager LOCAL CHECKPOINT, not persist: the max-sim frame is
-        // rebuilt on itself every round, and a persisted-but-unbroken
-        // lineage makes Catalyst re-analyze a plan that grows by one
-        // join+agg per round — O(rounds²) driver analysis that dominated
-        // the build (measured 65 → ~8 s at fixture scale). The checkpoint
-        // truncates the plan to a constant-size leaf; blocks are
-        // |sample|-row metadata reclaimed by the context cleaner.
-        val next = cur.join(F.broadcast(bf))
-          .select(col("vec_id"), col("unit"), col("maxsim"),
-            dot(col("unit"), col("c")).as("bs"))
-          .groupBy(col("vec_id"))
-          .agg(first(col("unit")).as("unit"),
-            greatest(first(col("maxsim")), max(col("bs"))).as("maxsim"))
-          .guardedCheckpoint("maxmin_round")
-        // release the superseded round's blocks deterministically — see
-        // CheckpointRelease (unpersist alone is a no-op on checkpoint
-        // leaves; round 0's persisted frame still goes through it)
-        cur.unpersist()
-        org.apache.spark.sql.graft.CheckpointRelease.release(cur)
-        cur = next
-        chosen ++= batch
-      }
-      // ---- Lloyd: distributed assignment + per-bucket mean sums ----
-      var cents: Array[Array[Double]] = chosen.toArray
-      for (_ <- 0 until iters) {
-        val cf = centroidFrame(spark,
-          cents.toIndexedSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) })
-        val assigned0 = assignToCentroids(samp, cf)
-        // exact-order mode: sums must accumulate in vec_id order on one
-        // partition to bit-match the driver loop's per-cluster fold
-        val assigned = if (exactOrder)
-          assigned0.repartition(1).sortWithinPartitions(col("vec_id"))
-        else assigned0
-        val sums = assigned
-          .select(col("bucket"), posexplode(col("unit")).as(Seq("i", "x")))
-          .groupBy(col("bucket"), col("i"))
-          .agg(sum(col("x")).as("sx"))
-          .groupBy(col("bucket"))
-          .agg(sort_array(collect_list(struct(col("i"), col("sx")))).as("arr"))
-          .collect()
-          .map { r =>
-            val arr = r.getSeq[org.apache.spark.sql.Row](1)
-            (r.getLong(0), arr.map(_.getDouble(1)).toArray)
-          }.toMap
-        cents = Array.tabulate(c) { j =>
-          sums.get(j.toLong) match {
-            case None => cents(j) // empty cluster: keep the old centroid
-            case Some(mean) =>
-              var s = 0.0
-              var i = 0
-              while (i < dim) { s += mean(i) * mean(i); i += 1 }
-              val nrm = math.sqrt(s)
-              if (nrm == 0.0) cents(j) else mean.map(_ / nrm)
-          }
+    } else sampled)
+    val sn = samp.count()
+    require(sn >= c, s"sample $sn smaller than C=$c")
+    // ---- init: batched farthest-point over the sample frame ----
+    // first centroid = the smallest-vec_id sample row (the driver
+    // trainer's sample(0) under its vec_id-sorted collect)
+    val firstVec = samp.orderBy(col("vec_id")).limit(1)
+      .select(col("unit")).head().getSeq[Double](0).toArray
+    val dim = firstVec.length
+    val chosen = scala.collection.mutable.ArrayBuffer[Array[Double]](firstVec)
+    val batchSize = if (exactOrder) 1 else math.max(1, (c - 1 + initRounds - 1) / initRounds)
+    var cur = frames.persist(samp.select(col("vec_id"), col("unit"),
+      dot(col("unit"), typedlit(firstVec.toSeq)).as("maxsim")))
+    cur.count()
+    while (chosen.size < c) {
+      val take = math.min(batchSize, c - chosen.size)
+      // the `take` farthest points from the chosen set — smallest
+      // max-cosine, ties to the smaller vec_id (TakeOrdered: no global
+      // sort materializes)
+      val batch = cur.orderBy(col("maxsim").asc, col("vec_id").asc).limit(take)
+        .select(col("unit")).collect().map(_.getSeq[Double](0).toArray)
+      val bf = centroidFrame(spark,
+        batch.toIndexedSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+      // eager LOCAL CHECKPOINT, not persist: the max-sim frame is
+      // rebuilt on itself every round, and a persisted-but-unbroken
+      // lineage makes Catalyst re-analyze a plan that grows by one
+      // join+agg per round — O(rounds²) driver analysis that dominated
+      // the build (measured 65 → ~8 s at fixture scale). The checkpoint
+      // truncates the plan to a constant-size leaf; the rounds'
+      // |sample|-row blocks are released when the trainer closes.
+      cur = frames.eager("maxmin_round", cur.join(F.broadcast(bf))
+        .select(col("vec_id"), col("unit"), col("maxsim"),
+          dot(col("unit"), col("c")).as("bs"))
+        .groupBy(col("vec_id"))
+        .agg(first(col("unit")).as("unit"),
+          greatest(first(col("maxsim")), max(col("bs"))).as("maxsim")))
+      chosen ++= batch
+    }
+    // ---- Lloyd: distributed assignment + per-bucket mean sums ----
+    var cents: Array[Array[Double]] = chosen.toArray
+    for (_ <- 0 until iters) {
+      val cf = centroidFrame(spark,
+        cents.toIndexedSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+      val assigned0 = assignToCentroids(samp, cf)
+      // exact-order mode: sums must accumulate in vec_id order on one
+      // partition to bit-match the driver loop's per-cluster fold
+      val assigned = if (exactOrder)
+        assigned0.repartition(1).sortWithinPartitions(col("vec_id"))
+      else assigned0
+      val sums = assigned
+        .select(col("bucket"), posexplode(col("unit")).as(Seq("i", "x")))
+        .groupBy(col("bucket"), col("i"))
+        .agg(sum(col("x")).as("sx"))
+        .groupBy(col("bucket"))
+        .agg(sort_array(collect_list(struct(col("i"), col("sx")))).as("arr"))
+        .collect()
+        .map { r =>
+          val arr = r.getSeq[org.apache.spark.sql.Row](1)
+          (r.getLong(0), arr.map(_.getDouble(1)).toArray)
+        }.toMap
+      cents = Array.tabulate(c) { j =>
+        sums.get(j.toLong) match {
+          case None => cents(j) // empty cluster: keep the old centroid
+          case Some(mean) =>
+            var s = 0.0
+            var i = 0
+            while (i < dim) { s += mean(i) * mean(i); i += 1 }
+            val nrm = math.sqrt(s)
+            if (nrm == 0.0) cents(j) else mean.map(_ / nrm)
         }
       }
-      cents.toIndexedSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    } finally {
-      if (cur != null) {
-        // cur is a checkpoint leaf after init round 1, where unpersist is
-        // a no-op (round-8 ADVICE) — release its sample-sized blocks too
-        cur.unpersist()
-        org.apache.spark.sql.graft.CheckpointRelease.release(cur)
-      }
-      samp.unpersist()
-      ()
     }
+    frames.close()
+    cents.toIndexedSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) }
   }
 }

@@ -137,79 +137,137 @@ object PlanGuard {
     df.localCheckpoint(true)
   }
 
-  /** [[guardedCheckpoint]] with LAZY materialization (round-13
-    * optimization): same guard walk over the same pre-checkpoint plan,
-    * but the checkpoint RDD is computed by the CALLER'S next action
-    * instead of an extra eager job — one job per loop round instead of
-    * two. Sound at exactly TWO site shapes (round-14 ADVICE: name both —
-    * the loops below use (b), not (a)):
-    *   (a) an action over the full frame follows IMMEDIATELY (a
-    *       checksum/collect/next-round eager checkpoint), or
-    *   (b) a fully-lazy round chain whose SINGLE consumer job
-    *       materializes the persist-backed blocks in round order — each
-    *       round's blocks are stored at first compute, so the 2-3
-    *       references per round read stored blocks (block-store
-    *       getOrElseUpdate), never the lineage.
-    * A lazy checkpoint matching NEITHER shape — referenced by several
-    * separate jobs before any materializes it — recomputes its lineage
-    * per reference: the exact blowup the eager form exists to prevent.
-    * Every call site states which shape it is.
-    */
-  def guardedCheckpointLazy(name: String, df: DataFrame): DataFrame = {
-    assertNoCorpusProducts(name, df)
-    df.localCheckpoint(false)
-  }
-
-  /** Round ledger for the fixed-round lazy-checkpoint loops (round-14
-    * verdict #2/#6): lazy checkpoints collapse the per-round jobs, but
-    * they also mean no round's blocks can be RELEASED inside the loop —
-    * unpersisting a local checkpoint invalidates it, and a lazy round is
-    * only safe to drop once a LATER materialization has truncated every
-    * lineage that could re-read it. Without release, every superseded
-    * round's corpus-scale blocks squat in the block manager until GC +
-    * ContextCleaner notice (the round-13 verdict's `Block rdd_* already
-    * exists` accumulation; at 100 TB they evict working storage).
+  /** The one owner of the frames an iterative operator manages itself:
+    * per-round checkpoints, one-off eager checkpoints and loop-local
+    * caches. Every loop in `ops/` and `operators/` routes its frames
+    * through one instance, so no operator checkpoints lazily or releases
+    * blocks on its own (PlanSpec bans both in those sources).
     *
-    * `step` checkpoints a round lazily and remembers it; every
-    * `barrierEvery`-th step — and always at [[last]] — the round is
-    * checkpointed EAGERLY instead: the barrier's one job materializes the
-    * whole pending chain in round order, after which every remembered
-    * predecessor is superseded (its lineage truncated away) and its
-    * blocks are released. This simultaneously caps
-    *   - block residency: ≤ `barrierEvery` rounds' blocks live at once,
-    *     and after [[last]] only the RETURNED frame's blocks remain;
-    *   - recompute exposure on executor loss (round-13 verdict #3): a
-    *     lost block forces recompute through at most `barrierEvery`
-    *     rounds, not the whole loop (the eager form bounded this to one
-    *     round at one job PER round; the barrier pays one job per K).
-    * Default K=5: the fleet's seed+4-round chains pay exactly ONE eager
-    * barrier (the final, releasing one) and kCore's seed+8 chain gets a
-    * single mid-loop barrier.
+    *   - [[round]]: a LAZY checkpoint of the loop's next state — the
+    *     round's blocks are persist-backed and stored at first compute, so
+    *     a single consumer job (or the action right after the round)
+    *     materializes the chain in round order with no extra job. Every
+    *     `BarrierEvery`-th round is checkpointed EAGERLY instead; that
+    *     barrier's one job materializes the pending chain, after which
+    *     every earlier round is superseded (its lineage truncated away)
+    *     and its blocks are released. Each round supersedes the previous
+    *     one: the rounds form ONE state chain.
+    *   - [[last]]: the loop's final round as an eager barrier — releases
+    *     every earlier round; the loop's consumer reads only the returned
+    *     frame's stored blocks.
+    *   - [[eager]]: an eager checkpoint outside the round chain.
+    *   - [[persist]]: a loop-local cache.
+    *   - [[close]]: releases every registered frame whose plan no longer
+    *     occurs (`sameResult`) in the result's analyzed plan — which still
+    *     spells out the plans of the caches it reads, so a frame read only
+    *     through a kept cache is kept too. The result must not read a lazy
+    *     round that no action has materialized yet (end the chain with
+    *     [[last]], or run an action over the round first, as the
+    *     convergence loops do).
+    *
+    * Each checkpointing entry point runs [[assertNoCorpusProducts]] over
+    * the pre-checkpoint plan first, so nothing hides behind a truncated
+    * lineage. After [[last]] only [[close]] is accepted; after [[close]]
+    * nothing is.
+    *
+    * What `BarrierEvery` = 5 bounds: block residency (at most five rounds'
+    * blocks live at once) and the rounds one barrier job computes. It does
+    * NOT bound recompute on a lost block: a materialized barrier's lineage
+    * is truncated, so losing one of its blocks fails the next job that
+    * reads it with a `SparkException` naming the missing checkpoint block
+    * (`CheckpointChainSpec` removes such a block mid-loop and pins this).
+    * The fleet's seed + 4-round chains pay exactly one eager barrier (the
+    * final one); kCore's seed + 8 chain adds a single mid-loop barrier.
     */
-  final class CheckpointChain(barrierEvery: Int = 5) {
-    private val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  final class CheckpointChain {
+    // the operator method that opened the scope, named by the terminal-
+    // state errors (frame 0 is getStackTrace, 1 this constructor)
+    private val loop = {
+      val f = Thread.currentThread.getStackTrace()(2)
+      s"${f.getClassName.stripSuffix("$")}.${f.getMethodName}"
+    }
+    private val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // the round chain since the last barrier, that barrier's output first
+    private val chain = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     private var sinceBarrier = 0
-    def step(name: String, df: DataFrame): DataFrame = {
+    private var ended: Option[String] = None
+
+    def round(name: String, df: DataFrame): DataFrame = {
+      open("round")
       sinceBarrier += 1
-      if (sinceBarrier >= barrierEvery) barrier(name, df)
+      if (sinceBarrier == CheckpointChain.BarrierEvery) barrier(name, df)
       else {
-        val out = guardedCheckpointLazy(name, df)
-        pending += out
+        assertNoCorpusProducts(name, df)
+        val out = own(df.localCheckpoint(false))
+        chain += out
         out
       }
     }
-    /** The loop's FINAL round: eager barrier, so every earlier round's
-      * blocks are released and the caller's consumer reads only the
-      * returned frame's stored blocks.
-      */
-    def last(name: String, df: DataFrame): DataFrame = barrier(name, df)
+
+    def last(name: String, df: DataFrame): DataFrame = {
+      open("last")
+      ended = Some("last")
+      barrier(name, df)
+    }
+
+    def eager(name: String, df: DataFrame): DataFrame = {
+      open("eager")
+      own(guardedCheckpoint(name, df))
+    }
+
+    def persist(df: DataFrame): DataFrame = {
+      open("persist")
+      own(df.persist())
+    }
+
+    def close(result: DataFrame): DataFrame = {
+      val plan = result.queryExecution.analyzed
+      releaseOwned(f => !plan.exists(_.sameResult(f.queryExecution.analyzed)))
+      result
+    }
+
+    /** [[close]] for a loop whose result is driver-side. */
+    def close(): Unit = releaseOwned(_ => true)
+
+    private def open(call: String): Unit = ended.foreach { how =>
+      throw new IllegalStateException(s"[frames] $loop: $call after $how")
+    }
+
+    private def own(df: DataFrame): DataFrame = { owned += df; df }
+
+    private def releaseOwned(unread: DataFrame => Boolean): Unit = {
+      if (ended.contains("close")) open("close")
+      owned.filter(unread).foreach(CheckpointChain.release)
+      owned.clear()
+      chain.clear()
+      ended = Some("close")
+    }
+
     private def barrier(name: String, df: DataFrame): DataFrame = {
       val out = guardedCheckpoint(name, df) // eager: materializes the chain
-      pending.foreach(org.apache.spark.sql.graft.CheckpointRelease.release)
-      pending.clear()
-      pending += out // superseded once the NEXT barrier materializes
+      chain.foreach(CheckpointChain.release)
+      owned --= chain
+      chain.clear()
+      chain += own(out) // superseded once the NEXT barrier materializes
       sinceBarrier = 0
       out
+    }
+  }
+
+  object CheckpointChain {
+    private val BarrierEvery = 5
+
+    /** Frees a frame's blocks now. `Dataset.unpersist()` only evicts
+      * CacheManager entries; a local checkpoint is a `LogicalRDD` leaf
+      * whose blocks live as RDD-level persistence the CacheManager never
+      * sees, so this reaches through the analyzed plan to the checkpointed
+      * RDD. Unpersisting a materialized local checkpoint INVALIDATES it
+      * (Spark's documented contract): only call this on a frame that is
+      * never read again. A plain, uncached frame is a no-op.
+      */
+    private[graft] def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
+      case _ => df.unpersist(blocking = false); ()
     }
   }
 
@@ -220,8 +278,6 @@ object PlanGuard {
   implicit class GuardedCheckpointOps(private val df: DataFrame) {
     def guardedCheckpoint(name: String): DataFrame =
       PlanGuard.guardedCheckpoint(name, df)
-    def guardedCheckpointLazy(name: String): DataFrame =
-      PlanGuard.guardedCheckpointLazy(name, df)
   }
 
   /** Hinted-broadcast guard at the LOGICAL layer (round 10): a

@@ -15,8 +15,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * deliberately hinted stream-static corpus join) pins that the walk
   * actually sees through the micro-batch machinery.
   *
-  * Lives in `org.apache.spark.sql.graft` (the [[CheckpointRelease]]
-  * pattern) because `StreamingQueryWrapper` — the public handle's
+  * Lives in `org.apache.spark.sql.graft` because `StreamingQueryWrapper` — the public handle's
   * concrete class, and the only path to `StreamExecution.lastExecution`
   * — is `private[sql]`.
   *

@@ -99,16 +99,15 @@ object Probe {
           (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
             if (r.isNullAt(2)) 0L else r.getLong(2))
         }
-        var edges = time("seed canon+ckpt")(
-          canon(pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
-            .localCheckpoint())
+        var edges = time("seed canon+ckpt")(graft.plans.PlanGuard.guardedCheckpoint(
+          "probe_seed", canon(pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))))
         var prev = time("seed checksum")(checksum(edges))
         var converged = false
         var round = 0
         while (!converged) {
           round += 1
           val next = time(s"round $round star+ckpt")(
-            smallStar(largeStar(edges)).localCheckpoint())
+            graft.plans.PlanGuard.guardedCheckpoint("probe_round", smallStar(largeStar(edges))))
           val cs = time(s"round $round checksum")(checksum(next))
           converged = cs == prev
           prev = cs

@@ -998,15 +998,13 @@ object EngineProperties extends Properties("graft") {
         Gen.chooseNum(1, 3)) { (texts, rounds, compactEvery) =>
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      def run(driverMaxHist: Long, ce: Int) = {
-        val (merges, state) =
-          graft.ops.TextOps.bpeLoop(df, rounds, 1L, 400, driverMaxHist, ce)
-        val hist = state.collect().map(r => r.getString(0) -> r.getLong(1))
-          .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-        state.unpersist()
-        org.apache.spark.sql.graft.CheckpointRelease.release(state)
-        (merges, hist)
-      }
+      // the loop's owner releases the state once the reader returns
+      def run(driverMaxHist: Long, ce: Int) =
+        graft.ops.TextOps.bpeLoop(df, rounds, 1L, 400, driverMaxHist, ce) {
+          (merges, state) =>
+            (merges, state.collect().map(r => r.getString(0) -> r.getLong(1))
+              .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap)
+        }
       val (dm, ds) = run(0L, compactEvery) // forced distributed
       val (rm, rs) = run(Long.MaxValue, 16) // driver reference
       Prop(dm == rm && ds == rs) :| s"dist ($dm, $ds) driver ($rm, $rs)"
@@ -1023,14 +1021,15 @@ object EngineProperties extends Properties("graft") {
     Prop.forAll(genCorpus, Gen.chooseNum(1, 6)) { (texts, rounds) =>
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val (merges, state) = graft.ops.TextOps.bpeLoop(df, rounds, 1L, 400)
       // the loop's state is the (s, c) HISTOGRAM (round-9) — compare as a
-      // weighted multiset of final strings (rows may split the same `s`)
-      val want = state.collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-      state.unpersist()
-      org.apache.spark.sql.graft.CheckpointRelease.release(state)
+      // weighted multiset of final strings (rows may split the same `s`);
+      // the loop's owner releases it once the reader returns
+      val (merges, want) = graft.ops.TextOps.bpeLoop(df, rounds, 1L, 400) {
+        (merges, state) =>
+          (merges, state.collect()
+            .map(r => r.getString(0) -> r.getLong(1))
+            .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap)
+      }
       val got = graft.ops.TextOps.bpeInitialState(df, 1L, 400)
         .select(org.apache.spark.sql.graft.BpeApply.column(
           col("s"), typedlit(merges.map(_._2)), typedlit(merges.map(_._3))).as("s"))

@@ -685,7 +685,7 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("LeftSemi") &&
       (plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoop")),
       s"join path must broadcast-semi-prune the postings:\n$plan")
-    org.apache.spark.sql.graft.CheckpointRelease.release(served)
+    graft.plans.PlanGuard.CheckpointChain.release(served)
   }
 
   test("round-7 additions keep their scale shapes: trained serve exchange-free, " +
@@ -1095,22 +1095,29 @@ class PlanSpec extends SparkSpec {
     // were converted; a NEW raw localCheckpoint would re-open the gate's
     // blind spot, so the ban is enforced on source text. plans/PlanGuard
     // itself (the one legitimate raw call) is outside the banned roots.
+    // Lazy checkpoints and block releases are banned too: they exist only
+    // inside the loop-frame owner (PlanGuard.CheckpointChain), which loops
+    // open with its fixed schedule — `new CheckpointChain`, no arguments.
     import scala.jdk.CollectionConverters._
+    val banned = Seq(".localCheckpoint(", "guardedCheckpointLazy",
+      "CheckpointRelease", "CheckpointChain(")
     val roots = Seq("src/main/scala/graft/ops", "src/main/scala/graft/operators")
     val offenders = roots.flatMap { r =>
       java.nio.file.Files.walk(java.nio.file.Paths.get(r)).iterator().asScala
         .filter(_.toString.endsWith(".scala"))
         .flatMap { p =>
           java.nio.file.Files.readString(p).linesIterator.zipWithIndex.collect {
-            case (line, i) if line.contains(".localCheckpoint(") &&
+            case (line, i) if banned.exists(line.contains) &&
                 !line.trim.startsWith("//") && !line.trim.startsWith("*") =>
               s"$p:${i + 1}: ${line.trim}"
           }
         }
     }
     assert(offenders.isEmpty,
-      s"raw localCheckpoint hides plans from the gate — use " +
-        s"PlanGuard.guardedCheckpoint:\n${offenders.mkString("\n")}")
+      s"raw localCheckpoint hides plans from the gate, and lazy checkpoints " +
+        s"and releases belong to PlanGuard.CheckpointChain — use " +
+        s"PlanGuard.guardedCheckpoint or the loop's CheckpointChain:\n" +
+        offenders.mkString("\n"))
   }
 
   test("stream guard flags a hinted stream-static corpus join; the clean twin passes") {

@@ -414,6 +414,43 @@ class DedupSpec extends SparkSpec {
     assert(out(3L) === (("p q", 1L, 1L)))
   }
 
+  test("block dedup: NULL text has NULL n_blocks with ANSI off, where size(NULL) = -1") {
+    import java.sql.Timestamp
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    val corpus = Seq((0L, "a b c x y z"), (1L, null)).toDF("doc_id", "text")
+    def batch() = Dedup.blockDedup(corpus, blockTokens = 3).collect()
+      .map(r => r.getAs[Long]("doc_id") -> ((r.getAs[String]("clean_text"),
+        Option(r.getAs[java.lang.Long]("n_blocks")).map(_.longValue), r.getAs[Long]("n_kept"))))
+      .toMap
+    try {
+      spark.conf.set(key, "true")
+      val ansiOn = batch()
+      assert(ansiOn === Map(0L -> (("a b c x y z", Some(2L), 2L)), 1L -> (("", None, 0L))))
+      spark.conf.set(key, "false")
+      assert(spark.sql("SELECT size(CAST(NULL AS ARRAY<INT>))").head().getInt(0) === -1)
+      assert(batch() === ansiOn)
+      // the streaming twin: a NULL text emits no phantom block row
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx = spark.sqlContext
+      val ms = MemoryStream[(Long, Timestamp, String)]
+      val q = Dedup.streamingBlockDedup(ms.toDF().toDF("doc_id", "ts", "text"), "ts",
+        delay = "5 seconds", blockTokens = 3, windowDur = "10 seconds")
+        .writeStream.format("memory").queryName("sblockdedup_null")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
+      val t0 = java.time.Instant.parse("2024-01-01T10:00:00Z")
+      ms.addData((0L, Timestamp.from(t0), "a b c x y z"), (1L, Timestamp.from(t0), null))
+      q.drainGuarded()
+      // sentinel far past window + watermark closes the reassembly window
+      ms.addData((99L, Timestamp.from(t0.plusSeconds(3600L)), "zz zz zz"))
+      q.drainGuarded()
+      assertStreamClean("dedup_stream_null", q); q.stop()
+      val streamed = spark.table("sblockdedup_null").collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_blocks")).toMap
+      assert(streamed === Map(0L -> 2L))
+    } finally spark.conf.set(key, prev)
+  }
+
   test("streaming block dedup ≡ batch over an id-ordered feed") {
     import java.sql.Timestamp
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -875,7 +912,7 @@ class DedupSpec extends SparkSpec {
     // the report materializes eagerly and the only persistent blocks left
     // are the returned checkpoint's own (released below, restoring the
     // pre-call set exactly)
-    org.apache.spark.sql.graft.CheckpointRelease.release(rep)
+    graft.plans.PlanGuard.CheckpointChain.release(rep)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
       s"shingleIndexStaleness left persistent RDDs ${after -- before}")

@@ -564,7 +564,7 @@ class TextAndMultimodalSpec extends SparkSpec {
     assert(joinRows === rows(inList), "semi-join path drifted from the IN-list path")
     // the join path materializes eagerly and releases its postings cache:
     // releasing its own checkpoint restores the pre-call persistent set
-    org.apache.spark.sql.graft.CheckpointRelease.release(joined)
+    graft.plans.PlanGuard.CheckpointChain.release(joined)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
     // and the full served eval is PATH-independent (x64's hash contract):
     // forcing each branch of the dispatch yields identical frames

@@ -1216,4 +1216,15 @@ class VectorsSpec extends SparkSpec {
       shortlist = emb.count().toInt, m = 16, centFlat = Vectors.spacedPqCodebook(unit, 64)))
     assert(wide === exact)
   }
+
+  test("beamSearchServedPruned rejects a 4097-id batch before reading any table") {
+    // both tables are absent: any read would fail with an AnalysisException,
+    // so the IllegalArgumentException proves the ceiling is checked first
+    val e = intercept[IllegalArgumentException] {
+      Vectors.beamSearchServedPruned(spark, "absent_nav_units_table",
+        spark.range(1).toDF("absent_graph"), queryIds = 0L until 4097L,
+        entryIds = Seq(0L))
+    }
+    assert(e.getMessage.contains("query batch 4097 exceeds the 4096 ceiling"), e.getMessage)
+  }
 }

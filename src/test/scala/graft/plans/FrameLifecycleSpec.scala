@@ -1,0 +1,143 @@
+package graft.plans
+
+import graft.{SparkEntry, SparkSpec, Tables}
+import org.apache.spark.graft.TestHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Every iterative loop, run through its registry entry at sf0.001, under
+  * two checks on the frames its [[PlanGuard.CheckpointChain]] manages:
+  *   - use-after-release: no executed plan scans a checkpoint RDD that was
+  *     already released when the plan ran. Unpersist events and query
+  *     completions share the listener bus's shared queue, so they arrive
+  *     here in the order they happened;
+  *   - leaks: the persistent RDDs an entry leaves are exactly those its
+  *     returned plan references. Two entries feed their loop from an
+  *     operator that hands its cache to the caller (Dedup's documented
+  *     cache lifecycle: d9's Jaccard pairs, s24's nav graph); those inputs
+  *     are built before the snapshot, so the check covers the frames the
+  *     entry's loop creates.
+  */
+class FrameLifecycleSpec extends SparkSpec {
+  private val dir = "/root/testdata/sf0.001"
+  private val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  private val loops: Seq[(String, () => DataFrame)] = Seq(
+    "t42_kcore", "t43_tree_paths", "t53_bfs_reach", "t55_sssp",
+    "d9_dedup_groups_star", "t56_components", "s13_ann_mmr", "s24_ann_beam",
+    "s26_beam_sweep", "s33_ann_beam_served", "s34_ann_beam_pruned",
+    "x62_bpe_merges", "x63_bpe_fertility", "x65_bpe_fertility_deep",
+    "x66_bpe_fertility_served"
+  ).map(n => n -> (() => SparkEntry.queries(n)(spark, dir))) ++ Seq(
+    "artifact:dedup_groups" -> (() => {
+      spark.sql(s"DROP TABLE IF EXISTS dedup_groups_$sfx")
+      graft.ops.Dedup.materializedGroupsFor(Tables.documents(spark, dir), dir)
+    }),
+    "artifact:bpe_merges" -> (() => {
+      spark.sql(s"DROP TABLE IF EXISTS bpe_merges32_$sfx")
+      graft.ops.TextOps.materializedBpeMerges(Tables.documents(spark, dir),
+        s"bpe_merges32_$sfx", rounds = 32)
+    }),
+    // the fixture's histogram fits the driver branch; force the
+    // distributed base + delta loop, compacting every two rounds
+    "bpe_distributed" -> (() => {
+      import spark.implicits._
+      graft.ops.TextOps.bpeLoop(Tables.documents(spark, dir), 6, 20L, 400, 0L, 2) {
+        (merges, _) => merges.map(_._1).toDF("merge_rank")
+      }
+    }),
+    "maxmin_init" -> (() => {
+      val emb = Tables.embeddings(spark, dir)
+      val cents = graft.ops.Vectors.trainedCentroidsDistributed(emb, c = 12)
+      import spark.implicits._
+      cents.map(_._1).toDF("bucket")
+    }))
+
+  private val loopInputs: Map[String, () => DataFrame] = Map(
+    "d9_dedup_groups_star" -> (() => graft.ops.Dedup.jaccardPairsFromShingles(
+      graft.ops.Dedup.shingleIdsFromArrays(
+        graft.ops.Vocab.hashTokenIdArrays(Tables.documents(spark, dir)), 5), 0.5)),
+    "s24_ann_beam" -> (() => graft.ops.Vectors.navGraph(Tables.embeddings(spark, dir))))
+
+  private def foreachNode(p: SparkPlan)(f: SparkPlan => Unit): Unit = {
+    f(p)
+    (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case r: ReusedSubqueryExec => Seq(r.child)
+      case other => other.children ++ other.subqueries
+    }).foreach(foreachNode(_)(f))
+  }
+
+  /** RDD ids `plan` reads: checkpoint scans, and the cached relations it
+    * reads together with whatever THEIR plans read.
+    */
+  private def referencedRdds(plan: SparkPlan): Set[Int] = {
+    val ids = scala.collection.mutable.Set.empty[Int]
+    foreachNode(plan) {
+      case r: RDDScanExec => ids += r.rdd.id
+      case im: InMemoryTableScanExec =>
+        ids += im.relation.cacheBuilder.cachedColumnBuffers.id
+        ids ++= referencedRdds(im.relation.cacheBuilder.cachedPlan)
+      case _ => ()
+    }
+    ids.toSet
+  }
+
+  test("no loop entry scans a released frame or leaves unreferenced frames behind") {
+    val sc = spark.sparkContext
+    val released = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val useAfterRelease = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val bus = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = {
+        released.add(e.rddId); ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val queries = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        foreachNode(qe.executedPlan) {
+          case r: RDDScanExec if released.contains(r.rdd.id) =>
+            useAfterRelease.add(s"$f scanned released rdd ${r.rdd.id}:\n${qe.executedPlan}")
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = {
+        useAfterRelease.add(s"$f failed: $e"); ()
+      }
+    }
+    val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
+    sc.addSparkListener(bus)
+    spark.listenerManager.register(queries)
+    val jobCounts = try loops.map { case (name, run) =>
+      spark.sqlContext.clearCache()
+      loopInputs.get(name).foreach(_().collect())
+      TestHooks.drainListeners(sc)
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val jobsBefore = jobs.get()
+      val df = run()
+      df.collect()
+      TestHooks.drainListeners(sc)
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      val referenced = referencedRdds(df.queryExecution.executedPlan) -- before
+      if (left != referenced) leaks += s"$name left persistent RDDs " +
+        s"${(left -- referenced).map(id => id -> sc.getPersistentRDDs(id).name)} its " +
+        s"result does not read (and lost ${referenced -- left} it does)"
+      name -> (jobs.get() - jobsBefore)
+    } finally {
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(bus)
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
+    assert(useAfterRelease.isEmpty, useAfterRelease.toArray.mkString("\n"))
+    info(jobCounts.map { case (n, j) => s"$n=$j" }.mkString("jobs: ", ", ", ""))
+  }
+}
