@@ -101,14 +101,23 @@ object Maintenance {
   /** W5: idempotent append of a window result — skip if any row for this
     * `end_time` already exists (`compute_transaction_info.py:132-142`, the
     * `count(*)` probe A10, done Spark-side as a pruned `isEmpty` peek).
-    * Returns true if the write happened.
+    * The table is read with `result`'s schema, so an empty directory needs
+    * no inference. Returns true if the write happened.
     */
   def idempotentAppend(spark: SparkSession, result: DataFrame, path: String,
       endTime: java.sql.Timestamp): Boolean = {
-    val exists = scala.util.Try(spark.read.parquet(path)).toOption
-      .exists(df => !df.filter(col("end_time") === lit(endTime)).isEmpty)
+    // only a missing table means "nothing written yet": any other read
+    // failure propagates rather than re-appending a written window
+    val exists = pathExists(spark, path) &&
+      !spark.read.schema(result.schema).parquet(path)
+        .filter(col("end_time") === lit(endTime)).isEmpty
     if (!exists) result.write.mode(SaveMode.Append).parquet(path)
     !exists
+  }
+
+  def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** A9 compaction: rewrite MV partials fully collapsed (the explicit analog

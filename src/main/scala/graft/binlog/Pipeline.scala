@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.PlanGuard
 import graft.streaming.{StreamingIngest, StreamingMVs}
 
 /** The reference's two entry points, end-to-end (SURVEY.md §3.1/§3.2):
@@ -64,37 +65,49 @@ object Pipeline {
 
   /** The periodic compute job over the ingested event table: all windows
     * closed as of `now`, three metrics, idempotent append per
-    * (window, metric). Returns the number of newly written windows.
+    * (window, metric). A window is written to `stats_<metric>` iff it is
+    * closed, has events, and is not in that table yet — so a table missing
+    * a window gets it back, a late event in an already-written window
+    * changes nothing, and a late event in a window that closed empty gets
+    * it computed. Only a missing table counts as "nothing written yet";
+    * any other read failure propagates before anything is appended.
+    * Returns the number of newly written (window, metric) rows.
     */
   def runCompute(spark: SparkSession, layout: Layout, now: Timestamp,
       windowSec: Int = 300): Int = {
-    val events = spark.read.parquet(layout.eventTable)
-    // ONE per-(window, gtid) aggregation pass feeds all three metric
-    // rankings (the reference re-scans the event table per metric —
-    // 3× the I/O and shuffle for identical group rows)
-    val perWin = TransactionStats.perWindow(events, windowSec)
-      .filter(col("end_time") <= lit(now)) // W2: only closed windows
-      .persist()
-    val stats = TransactionStats.metrics.map { metric =>
-      metric -> TransactionStats.top1PerWindowFromStats(perWin, metric)
-    }
-    var written = 0
-    stats.foreach { case (metric, df) =>
-      val path = layout.statTable(metric)
-      // W5 idempotence as an anti join against already-written windows —
-      // no driver-side collect, works at any window count
-      val fresh = scala.util.Try(spark.read.parquet(path)).toOption match {
-        case Some(existing) =>
-          df.join(existing.select("end_time").distinct(), Seq("end_time"), "left_anti")
-        case None => df
+    // Job shape: one query plan — event scan → per-(window, gtid) agg →
+    // one regroup ranking all three metrics → anti-join on (metric,
+    // end_time) against the written rows — materialized once by an eager
+    // checkpoint, then one small job for the per-metric counts and one
+    // write per non-empty metric (about 10 jobs; declared schemas, so no
+    // inference jobs). A checkpoint, not a persist: appending to
+    // stats_<m> makes the CacheManager recache every cached plan reading
+    // stats_<m>, which would re-run the event scan before each later write.
+    val events = spark.read.schema(Schemas.binlogEvent).parquet(layout.eventTable)
+    val ranked = TransactionStats.top1AllMetricsFromStats(
+      TransactionStats.perWindow(events, windowSec)
+        .filter(col("end_time") <= lit(now))) // W2: only closed windows
+    // W5 idempotence as one anti join against every table's written windows
+    val written = TransactionStats.metrics
+      .filter(m => Maintenance.pathExists(spark, layout.statTable(m)))
+      .map { m =>
+        spark.read.schema(Schemas.windowTopStat).parquet(layout.statTable(m))
+          .select(lit(m).as("metric"), col("end_time"))
       }
-      val n = fresh.persist().count().toInt
-      if (n > 0) fresh.write.mode("append").parquet(path)
-      fresh.unpersist()
-      written += n
-    }
-    perWin.unpersist()
-    written
+    val fresh = written.reduceOption(_ union _)
+      .fold(ranked)(ranked.join(_, Seq("metric", "end_time"), "left_anti"))
+    val frames = new PlanGuard.CheckpointChain
+    try {
+      val snapshot = frames.eager("compute_fresh", fresh)
+      val counts = snapshot.groupBy("metric").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // an append of zero rows would still write an empty part file
+      TransactionStats.metrics.filter(counts.getOrElse(_, 0L) > 0).foreach { m =>
+        snapshot.filter(col("metric") === m).drop("metric")
+          .write.mode("append").parquet(layout.statTable(m))
+      }
+      counts.values.sum.toInt
+    } finally frames.close()
   }
 
   /** The MV read path (M3): re-summed daily counts. */

@@ -1,6 +1,7 @@
 package graft.binlog
 
 import java.sql.Timestamp
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
 /** Fixed schemas of the binlog analytics engine — the Spark rendering of the
@@ -67,6 +68,8 @@ object Schemas {
       transaction_size: Long,                 // README.md:275 (Int64)
       transaction_affected_rows: Long         // README.md:276 (UInt64→Long, cap noted)
   )
+
+  val windowTopStat: StructType = Encoders.product[WindowTopStat].schema
 
   /** MV1 target: daily event-type counts (`README.md:155-165`). */
   final case class DailyEventCount(day: java.sql.Date, event_type: String, event_count: Long)

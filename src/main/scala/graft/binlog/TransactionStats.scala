@@ -117,30 +117,51 @@ object TransactionStats {
       interval: String = "5min"): DataFrame =
     top1PerWindowFromStats(perWindow(events, windowSec, interval), metric)
 
-  /** Top-1 from an already-computed [[perWindow]] frame: lets one stats pass
-    * (persisted) feed all three metric rankings — the reference's compute
-    * job re-scans the event table per metric; one shared pass is 3× less
-    * I/O and shuffle ([[Pipeline.runCompute]] uses this).
+  /** Top-1 from an already-computed [[perWindow]] frame, for one metric.
+    * [[top1AllMetricsFromStats]] ranks all three metrics in one regroup
+    * with the same rule ([[top1By]]).
     */
-  def top1PerWindowFromStats(stats: DataFrame, metric: String): DataFrame = {
-    val payload = struct(
-      col("gtid"),
-      col("transaction_spend_time"),
-      col("transaction_size"),
-      col("transaction_affected_rows")
-    )
+  def top1PerWindowFromStats(stats: DataFrame, metric: String): DataFrame =
     stats
       .groupBy(col("end_time"), col("interval"))
-      .agg(max_by(payload, struct(col(metric), col("gtid"))).as("top"))
-      .select(
-        col("end_time"),
-        col("interval"),
-        col("top.gtid").as("gtid"),
-        col("top.transaction_spend_time").as("transaction_spend_time"),
-        col("top.transaction_size").as("transaction_size"),
-        col("top.transaction_affected_rows").as("transaction_affected_rows")
-      )
-  }
+      .agg(top1By(metric).as("top"))
+      .select(col("end_time") +: col("interval") +: unpackTop("top"): _*)
+
+  /** All three metrics' per-window top-1 from one [[perWindow]] frame, in
+    * ONE regroup (one shuffle of the group rows, three `max_by` columns),
+    * stacked into rows of `(metric, end_time, interval, gtid, …)` — what
+    * [[Pipeline.runCompute]] appends, split by `metric`, to the three
+    * result tables. Each metric's rows equal [[top1PerWindowFromStats]]'s.
+    */
+  def top1AllMetricsFromStats(stats: DataFrame): DataFrame =
+    stats
+      .groupBy(col("end_time"), col("interval"))
+      .agg(top1By(metrics.head).as(metrics.head), metrics.tail.map(m => top1By(m).as(m)): _*)
+      .select(col("end_time"), col("interval"),
+        explode(array(metrics.map(m => struct(lit(m).as("metric"), col(m).as("top"))): _*))
+          .as("r"))
+      .select(col("r.metric").as("metric") +: col("end_time") +: col("interval") +:
+        unpackTop("r.top"): _*)
+
+  /** The per-window ranking rule: the winner row's payload, by `metric`,
+    * ties broken by gtid so the winner is deterministic.
+    */
+  private def top1By(metric: String): Column =
+    max_by(
+      struct(
+        col("gtid"),
+        col("transaction_spend_time"),
+        col("transaction_size"),
+        col("transaction_affected_rows")
+      ),
+      struct(col(metric), col("gtid")))
+
+  /** The result-table columns after `end_time, interval`, out of a
+    * [[top1By]] payload column.
+    */
+  private def unpackTop(top: String): Seq[Column] =
+    Seq("gtid", "transaction_spend_time", "transaction_size", "transaction_affected_rows")
+      .map(f => col(s"$top.$f").as(f))
 
   /** Window-function rendering of O5 (`row_number` — the formulation the
     * reference author wished ClickHouse had, `README.md:376-380`). Kept for

@@ -21,8 +21,7 @@ object Probe {
       val gc = new AtomicLong; val spillMem = new AtomicLong
       val spillDisk = new AtomicLong; val fetchWait = new AtomicLong
       val run = new AtomicLong; val peakMem = new AtomicLong
-      def snap(): Seq[Long] =
-        Seq(gc.get, spillMem.get, spillDisk.get, fetchWait.get, run.get, peakMem.get)
+      def snap(): Seq[Long] = Seq(gc.get, spillMem.get, spillDisk.get, fetchWait.get, run.get)
     }
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -39,6 +38,8 @@ object Probe {
       }
     })
     def time[T](label: String)(f: => T): T = {
+      // a peak is a max, not a sum: reset it so each label reports its own
+      M.peakMem.set(0)
       val before = M.snap()
       val t0 = System.nanoTime(); val r = f
       val d = M.snap().zip(before).map { case (a, b) => a - b }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,6 +65,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       try q.stop() catch { case _: Throwable => () }
       fail(s"$name micro-batch plan hazards:\n  ${v.mkString("\n  ")}")
     }
+  }
+
+  /** Visits every node of an executed plan, reaching into adaptive plans,
+    * query stages, reused exchanges and subqueries.
+    */
+  protected def foreachNode(p: SparkPlan)(f: SparkPlan => Unit): Unit = {
+    f(p)
+    (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case r: ReusedSubqueryExec => Seq(r.child)
+      case other => other.children ++ other.subqueries
+    }).foreach(foreachNode(_)(f))
   }
 
   /** The session is shared across every suite in the JVM, and many ops

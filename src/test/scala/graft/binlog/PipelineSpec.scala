@@ -2,7 +2,12 @@ package graft.binlog
 
 import java.sql.Timestamp
 
+import org.apache.spark.graft.TestHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{SparkSpec, Tables}
 
@@ -11,6 +16,40 @@ import graft.{SparkSpec, Tables}
   * idempotent re-run (SURVEY.md §3.1–§3.3).
   */
 class PipelineSpec extends SparkSpec {
+
+  private val now = Timestamp.valueOf("2024-12-31 00:00:00")
+  private val fixture = "/root/testdata/sf0.001"
+
+  /** A fresh sf0.001 layout with every closed window computed. */
+  private def computedLayout(name: String): Pipeline.Layout = {
+    val layout = Pipeline.Layout(tmpDir(name))
+    Pipeline.runIngestBatch(spark, Tables.events(spark, fixture), layout)
+    assert(Pipeline.runCompute(spark, layout, now) > 0)
+    layout
+  }
+
+  /** Appends one late event at `at`: a one-statement transaction whose size
+    * and affected rows beat every fixture transaction.
+    */
+  private def appendLateEvent(layout: Pipeline.Layout, at: Timestamp, gtid: String): Unit = {
+    val late = spark.read.parquet(layout.eventTable).drop("day").limit(1)
+      .withColumn("execute_time", lit(at))
+      .withColumn("gtid", lit(gtid))
+      .withColumn("single_statement_size", lit("999999999"))
+      .withColumn("single_statement_affected_rows", lit(999999L))
+    val rows = java.util.Arrays.asList(late.collect(): _*)
+    Maintenance.writeEvents(spark.createDataFrame(rows, late.schema), layout.eventTable)
+  }
+
+  private def statRows(layout: Pipeline.Layout): Map[String, Set[Row]] =
+    TransactionStats.metrics.map(m =>
+      m -> spark.read.parquet(layout.statTable(m)).collect().toSet).toMap
+
+  /** Every file under the three stats tables, with its length. */
+  private def statFiles(layout: Pipeline.Layout): Set[(String, Long)] =
+    TransactionStats.metrics.flatMap { m =>
+      new java.io.File(layout.statTable(m)).listFiles().toSeq.map(f => f.getPath -> f.length)
+    }.toSet
 
   test("ingest → MVs → compute → idempotent re-run") {
     val layout = Pipeline.Layout(tmpDir("pipeline"))
@@ -57,7 +96,7 @@ class PipelineSpec extends SparkSpec {
     val shaped = BinlogEvents.shape(raw.filter(col("event_type") =!= "error"))
     val perWin = TransactionStats.perWindow(shaped).persist()
     try {
-      perWin.count() // materialize the cache, as runCompute's first count does
+      perWin.count() // materialize the cache
       val plan = TransactionStats.top1PerWindowFromStats(perWin, "transaction_size")
         .queryExecution.executedPlan.toString
       // reads the cached stats (no event re-scan), one exchange for the
@@ -118,5 +157,105 @@ class PipelineSpec extends SparkSpec {
     val a = Pipeline.readDailyCounts(spark, layoutS).orderBy("day", "event_type").collect()
     val b = Pipeline.readDailyCounts(spark, layoutB).orderBy("day", "event_type").collect()
     assert(a.toSeq === b.toSeq)
+  }
+
+  test("compute repairs a window missing from one stats table only") {
+    val layout = computedLayout("pipeline_repair")
+    val spendPath = layout.statTable("transaction_spend_time")
+    val before = statRows(layout)
+    val dropped = before("transaction_spend_time").minBy(_.getAs[Timestamp]("end_time").getTime)
+    val kept = spark.createDataFrame(
+      java.util.Arrays.asList((before("transaction_spend_time") - dropped).toSeq: _*),
+      Schemas.windowTopStat)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(spendPath))
+    kept.write.parquet(spendPath)
+
+    assert(Pipeline.runCompute(spark, layout, now) === 1)
+    assert(statRows(layout) === before)
+  }
+
+  test("a late event in an already-written window does not rewrite it") {
+    val layout = computedLayout("pipeline_late_written")
+    val before = statRows(layout)
+    val window = before("transaction_size").head.getAs[Timestamp]("end_time")
+    appendLateEvent(layout, new Timestamp(window.getTime - 1000), "late-gtid")
+    assert(Pipeline.runCompute(spark, layout, now) === 0)
+    assert(statRows(layout) === before)
+  }
+
+  test("a late event in a closed window that had no events is computed on the next run") {
+    val layout = computedLayout("pipeline_late_empty")
+    val before = statRows(layout)
+    val end = Timestamp.valueOf("2024-02-15 12:05:00")
+    assert(before.values.flatten.forall(_.getAs[Timestamp]("end_time") != end))
+    appendLateEvent(layout, Timestamp.valueOf("2024-02-15 12:02:00"), "late-gtid")
+    assert(Pipeline.runCompute(spark, layout, now) === 3)
+    val after = statRows(layout)
+    TransactionStats.metrics.foreach { m =>
+      val added = after(m) -- before(m)
+      assert(added.map(r => r.getAs[Timestamp]("end_time") -> r.getAs[String]("gtid")) ===
+        Set(end -> "late-gtid"), m)
+      assert(after(m) -- added === before(m), m)
+    }
+  }
+
+  test("a run with nothing new leaves every stats table's files as they were") {
+    val layout = computedLayout("pipeline_noop")
+    val files = statFiles(layout)
+    assert(Pipeline.runCompute(spark, layout, now) === 0)
+    assert(statFiles(layout) === files)
+  }
+
+  test("an unreadable stats table fails compute loudly and appends nothing") {
+    val layout = Pipeline.Layout(tmpDir("pipeline_corrupt"))
+    Pipeline.runIngestBatch(spark, Tables.events(spark, fixture), layout)
+    val sizeTable = new java.io.File(layout.statTable("transaction_size"))
+    sizeTable.mkdirs()
+    java.nio.file.Files.writeString(
+      new java.io.File(sizeTable, "part-00000-corrupt.parquet").toPath, "not parquet")
+    intercept[Exception](Pipeline.runCompute(spark, layout, now))
+    assert(sizeTable.list().toSeq === Seq("part-00000-corrupt.parquet"))
+    TransactionStats.metrics.filter(_ != "transaction_size").foreach { m =>
+      assert(!new java.io.File(layout.statTable(m)).exists(), m)
+    }
+  }
+
+  test("compute is one query: a tick after one new batch runs at most 10 jobs and one event scan") {
+    val layout = computedLayout("pipeline_shape")
+    appendLateEvent(layout, Timestamp.valueOf("2024-02-15 12:02:00"), "late-gtid")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val eventScans = new java.util.concurrent.atomic.AtomicInteger()
+    val eventRoot = new org.apache.hadoop.fs.Path(layout.eventTable).toUri.getPath
+    val bus = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val queries = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        foreachNode(qe.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toUri.getPath == eventRoot) =>
+            eventScans.incrementAndGet(); ()
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestHooks.drainListeners(sc)
+    val persistedBefore = sc.getPersistentRDDs.keySet.toSet
+    sc.addSparkListener(bus)
+    spark.listenerManager.register(queries)
+    val written = try {
+      val n = Pipeline.runCompute(spark, layout, now)
+      TestHooks.drainListeners(sc)
+      n
+    } finally {
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(bus)
+    }
+    info(s"jobs: ${jobs.get()}")
+    assert(written === 3)
+    assert(jobs.get() <= 10, s"${jobs.get()} jobs")
+    assert(eventScans.get() === 1)
+    assert(sc.getPersistentRDDs.keySet.toSet -- persistedBefore === Set.empty)
   }
 }

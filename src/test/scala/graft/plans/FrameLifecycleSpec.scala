@@ -4,10 +4,8 @@ import graft.{SparkEntry, SparkSpec, Tables}
 import org.apache.spark.graft.TestHooks
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, ReusedSubqueryExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Every iterative loop, run through its registry entry at sf0.001, under
@@ -63,17 +61,6 @@ class FrameLifecycleSpec extends SparkSpec {
       graft.ops.Dedup.shingleIdsFromArrays(
         graft.ops.Vocab.hashTokenIdArrays(Tables.documents(spark, dir)), 5), 0.5)),
     "s24_ann_beam" -> (() => graft.ops.Vectors.navGraph(Tables.embeddings(spark, dir))))
-
-  private def foreachNode(p: SparkPlan)(f: SparkPlan => Unit): Unit = {
-    f(p)
-    (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case r: ReusedSubqueryExec => Seq(r.child)
-      case other => other.children ++ other.subqueries
-    }).foreach(foreachNode(_)(f))
-  }
 
   /** RDD ids `plan` reads: checkpoint scans, and the cached relations it
     * reads together with whatever THEIR plans read.
