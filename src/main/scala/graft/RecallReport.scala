@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{abs, avg, col, when}
 
-import graft.ops.Vectors
+import graft.ops.{AnnSpec, Vectors}
+import graft.ops.AnnSpec._
 
 /** Recall report for the ANN surface: measure recall@k of every approximate
   * variant against the brute-force ground truth on the fixture embeddings,
@@ -18,7 +19,7 @@ import graft.ops.Vectors
   * Round-5 shape (round-4 verdict "next" #1 + #7): k = 10 at sf0.1, with
   * four sections in one artifact:
   *   - `defaults`: the PRODUCTION operating points the library ships —
-  *     [[Vectors.annTopK]] (SQ8 scan + re-rank), tuned trained-centroid
+  *     [[AnnSpec.Production]] (SQ8 scan + re-rank), tuned trained-centroid
   *     IVF ([[Vectors.tunedNprobe]]), trained PQ re-rank, trained IVF-PQ.
   *     These are the ≥ 0.8-recall flagship rows.
   *   - `parity`: the oracle-hashable spaced-deterministic forms the
@@ -31,7 +32,7 @@ import graft.ops.Vectors
   * and cross-label mean cosine both ≈ 0, true top-10 neighbors share the
   * query's label at chance rate), which is WHY bucket-pruned recall here
   * caps near the scan fraction and the compressed-scan + re-rank default
-  * ([[Vectors.annTopK]]) is the geometry-robust choice.
+  * ([[AnnSpec.Production]]) is the geometry-robust choice.
   *
   * Everything here is seeded/deterministic, so the numbers are replayable:
   * same data + same code ⇒ same artifact.
@@ -52,7 +53,8 @@ object RecallReport {
     def hits(df: DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
 
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k))
+    def ann(spec: AnnSpec): DataFrame = Vectors.topK(emb, Left(queries), k, spec)
+    val exact = hits(ann(AnnSpec()))
     val spacedIds = Vectors.spacedCentroidIds(n)
     val trained = Vectors.trainedCentroids(emb, c = spacedIds.size)
     val unit = Vectors.withUnit(emb).select(col("vec_id"), col("unit")).persist()
@@ -87,14 +89,13 @@ object RecallReport {
     // ---- the production defaults (flagship rows; target ≥ 0.8) ----
     val tuned = Vectors.tunedNprobe(emb, trained, queries, k, target = 0.9)
     val defaults = measure(Seq(
-      "ann_default_sq8_rr40" -> (() => Vectors.annTopK(emb, queries, k)),
-      s"ivf_trained_tuned_mp$tuned" -> (() =>
-        Vectors.ivfTopKMultiProbeTrained(emb, trained, queries, k, nprobe = tuned)),
+      "ann_default_sq8_rr40" -> (() => ann(Production)),
+      s"ivf_trained_tuned_mp$tuned" -> (() => ann(AnnSpec(IvfTrained(trained), Nearest(tuned)))),
       "pq_trained_m16ks64_rr80" -> (() =>
-        Vectors.pqRerankTopKWithCodebook(unit, queries, k, 80, 16, trainedPq)),
+        ann(AnnSpec(score = PqCodebook(16, trainedPq), refine = Rerank(80)))),
       s"ivfpq_trained_mp${tuned}_rr80" -> (() =>
-        Vectors.ivfPqRerankTopKTrained(emb, trained, queries, k, tuned, 80, 16, trainedPq)),
-      "quantized8bit" -> (() => Vectors.quantizedTopK(emb, queries, k)),
+        ann(AnnSpec(IvfTrained(trained), Nearest(tuned), PqCodebook(16, trainedPq), Rerank(80)))),
+      "quantized8bit" -> (() => ann(AnnSpec(score = Sq8))),
       // the round-6 navigable-graph rebuild: shipped walk (beam 32, 4
       // rounds over navGraph k=24/nAssign=3) must sit above the tuned-IVF
       // point (round-5 verdict #1's done-condition)
@@ -104,43 +105,38 @@ object RecallReport {
 
     // ---- the oracle-hashable shipped forms (what s2/s3/s6/s9/s11 run) ----
     val parity = measure(Seq(
-      "s2_ivf_spaced_mp4" -> (() => Vectors.ivfTopKMultiProbe(emb, spacedIds, queries, k, 4)),
-      "s4_ivf_spaced_mp8" -> (() => Vectors.ivfTopKMultiProbe(emb, spacedIds, queries, k, 8)),
-      "s3_lsh_multiprobe" -> (() => Vectors.lshTopKMultiProbe(emb, queries, k)),
-      "s5_lsh_multitable4" -> (() => Vectors.lshTopKMultiTable(emb, queries, k)),
+      "s2_ivf_spaced_mp4" -> (() => ann(AnnSpec(Ivf(spacedIds), Nearest(4)))),
+      "s4_ivf_spaced_mp8" -> (() => ann(AnnSpec(Ivf(spacedIds), Nearest(8)))),
+      "s3_lsh_multiprobe" -> (() => ann(AnnSpec(Lsh(), Hamming1))),
+      "s5_lsh_multitable4" -> (() => ann(AnnSpec(LshTables()))),
       "s6_twolevel_mp4" -> (() =>
-        Vectors.ivfTopKTwoLevelMultiProbe(emb, spacedIds, Vectors.coarseSubset(spacedIds),
-          queries, k, 4)),
-      "s9_pq_m16ks64_rr80" -> (() => Vectors.pqRerankTopK(emb, queries, k,
-        shortlist = 80, m = 16, ks = 64)),
+        ann(AnnSpec(IvfTwoLevel(spacedIds, Vectors.coarseSubset(spacedIds)), Nearest(4)))),
+      "s9_pq_m16ks64_rr80" -> (() => ann(AnnSpec(score = Pq(16, 64), refine = Rerank(80)))),
       "s11_ivfpq_mp4_rr40" -> (() =>
-        Vectors.ivfPqRerankTopK(emb, spacedIds, queries, k, nprobe = 4, shortlist = 40,
-          m = 16, ks = 64)),
-      "s12_pq_m8ks16_rr40" -> (() => Vectors.pqRerankTopK(emb, queries, k, shortlist = 40)),
-      "jl_rerank40" -> (() => Vectors.jlRerankTopK(emb, queries, k))
+        ann(AnnSpec(Ivf(spacedIds), Nearest(4), Pq(16, 64), Rerank(40)))),
+      "s12_pq_m8ks16_rr40" -> (() => ann(AnnSpec(score = Pq(), refine = Rerank(40)))),
+      "jl_rerank40" -> (() => ann(AnnSpec(score = Jl(16), refine = Rerank(40))))
     ))
 
     // ---- round-4 single-probe / ADC-only points (the closed gap) ----
     val diagnostics = measure(Seq(
-      "ivf_single_probe" -> (() => Vectors.ivfTopK(emb, spacedIds, queries, k)),
-      "ivf_trained_single" -> (() => Vectors.ivfTopKTrained(emb, trained, queries, k)),
+      "ivf_single_probe" -> (() => ann(AnnSpec(Ivf(spacedIds)))),
+      "ivf_trained_single" -> (() => ann(AnnSpec(IvfTrained(trained)))),
       "twolevel_single" -> (() =>
-        Vectors.ivfTopKTwoLevel(emb, spacedIds, Vectors.coarseSubset(spacedIds), queries, k)),
-      "lsh_single_bucket" -> (() => Vectors.lshTopK(emb, queries, k)),
-      "pq_adc_only_m8ks16" -> (() => Vectors.pqTopKWithCodebook(unit, queries, k, 8,
-        Vectors.spacedPqCodebook(unit, 16))),
-      "ivfpq_single_norerank" -> (() => Vectors.ivfPqTopK(emb, spacedIds, queries, k))
+        ann(AnnSpec(IvfTwoLevel(spacedIds, Vectors.coarseSubset(spacedIds))))),
+      "lsh_single_bucket" -> (() => ann(AnnSpec(Lsh()))),
+      "pq_adc_only_m8ks16" -> (() => ann(AnnSpec(score = Pq(8, 16)))),
+      "ivfpq_single_norerank" -> (() => ann(AnnSpec(Ivf(spacedIds), score = Pq())))
     ))
 
     // ---- tuning curves (s23/s26-style sweeps, one artifact per round) ----
     val nprobes = Seq(1, 2, 4, 8, 16, 32)
     val curveIvf = measure(nprobes.map(p =>
-      s"nprobe_$p" -> (() => Vectors.ivfTopKMultiProbe(emb, spacedIds, queries, k, p))))
+      s"nprobe_$p" -> (() => ann(AnnSpec(Ivf(spacedIds), Nearest(p))))))
     val curveIvfTrained = measure(nprobes.map(p =>
-      s"nprobe_$p" -> (() => Vectors.ivfTopKMultiProbeTrained(emb, trained, queries, k, p))))
+      s"nprobe_$p" -> (() => ann(AnnSpec(IvfTrained(trained), Nearest(p))))))
     val curveRerank = measure(Seq(20, 40, 80, 160).map(l =>
-      s"shortlist_$l" -> (() => Vectors.pqRerankTopK(emb, queries, k,
-        shortlist = l, m = 16, ks = 64))))
+      s"shortlist_$l" -> (() => ann(AnnSpec(score = Pq(16, 64), refine = Rerank(l))))))
     val curveBeam = measure(Seq(8, 16, 32, 64).map(b =>
       s"beam_$b" -> (() => Vectors.beamSearch(emb, queries, entryIds = spacedIds,
         k = k, beam = b, rounds = 4))))
@@ -265,7 +261,8 @@ object RecallReport {
       }
       val cl = rows.toDF("vec_id", "embedding", "label").persist()
       val cQueries = 0L until 16L
-      val cExact = hits(Vectors.bruteForceTopK(cl, cQueries, k))
+      def cAnn(spec: AnnSpec): DataFrame = Vectors.topK(cl, Left(cQueries), k, spec)
+      val cExact = hits(cAnn(AnnSpec()))
       def rec(df: DataFrame): Double =
         hits(df).intersect(cExact).size.toDouble / cExact.size
       val cSpaced = Vectors.spacedCentroidIds(nC)
@@ -277,7 +274,7 @@ object RecallReport {
       val cTuned = Vectors.tunedNprobe(cl, cTrained, cQueries, k, target = 0.9)
       val entries = Seq(
         s"ivf_trained_tuned_mp$cTuned" ->
-          rec(Vectors.ivfTopKMultiProbeTrained(cl, cTrained, cQueries, k, cTuned)),
+          rec(cAnn(AnnSpec(IvfTrained(cTrained), Nearest(cTuned)))),
         // round-8: the DISTRIBUTED trainer (the auto-dispatch branch past
         // C = 2 048, forced on here) at the same probe count — its batched
         // farthest-point init + Spark-job Lloyd must hold the driver
@@ -287,11 +284,11 @@ object RecallReport {
         // this row is deterministic only up to float-summation order:
         // stable on the same harness, may shift in the last recall quantum
         // (1/160) if shuffle-merge order changes across environments
-        s"ivf_dist_trained_mp$cTuned" -> rec(Vectors.ivfTopKMultiProbeTrained(cl,
-          Vectors.trainedCentroidsDistributed(cl, c = cSpaced.size),
-          cQueries, k, cTuned)),
-        "ivf_spaced_mp4" -> rec(Vectors.ivfTopKMultiProbe(cl, cSpaced, cQueries, k, 4)),
-        "lsh_multiprobe" -> rec(Vectors.lshTopKMultiProbe(cl, cQueries, k)),
+        s"ivf_dist_trained_mp$cTuned" -> rec(cAnn(AnnSpec(
+          IvfTrained(Vectors.trainedCentroidsDistributed(cl, c = cSpaced.size)),
+          Nearest(cTuned)))),
+        "ivf_spaced_mp4" -> rec(cAnn(AnnSpec(Ivf(cSpaced), Nearest(4)))),
+        "lsh_multiprobe" -> rec(cAnn(AnnSpec(Lsh(), Hamming1))),
         // spaced seeds resonate with the id-correlated label cycle here
         // (stride 44 hits only labels ≡ 0 mod 4): the honest failure row —
         // and the trained-centroid seam (the IVF discipline applied to the
@@ -317,7 +314,7 @@ object RecallReport {
             Vectors.ledgerEntryIds(spark, "recall_nav_clustered"),
             k = k, beam = 32, rounds = 4))
         },
-        "ann_default_sq8_rr40" -> rec(Vectors.annTopK(cl, cQueries, k)))
+        "ann_default_sq8_rr40" -> rec(cAnn(Production)))
       entries.foreach { case (n, r) =>
         System.err.println(f"[recall] clustered/$n%-24s recall@$k = $r%.4f")
       }

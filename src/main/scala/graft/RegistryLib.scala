@@ -527,7 +527,7 @@ private[graft] object RegistryLib {
   /** Multi-probe LSH oracle (s3's shipped default): each query probes its
     * own sign-bucket plus every Hamming-1 bucket (one plane's sign bit
     * flipped — `xor(bucket, 1<<j)`), mirroring
-    * [[graft.ops.Vectors.lshTopKMultiProbe]] bucket-for-bucket.
+    * [[graft.ops.AnnSpec.Hamming1]] bucket-for-bucket.
     */
   lazy val oracleLsh: String = {
     val planes = graft.ops.Vectors.lshPlanes(8, 64)
@@ -714,11 +714,11 @@ private[graft] object RegistryLib {
   /** Two-level IVF oracle (s6): coarse = ⌈√C⌉ spaced subset of the fine
     * seeds; fine centroids route to their nearest coarse parent; vectors
     * route coarse-first then to the nearest fine child of that parent —
-    * mirrors [[graft.ops.Vectors.ivfAssignTwoLevel]] tie-for-tie. The
+    * mirrors [[graft.ops.AnnSpec.IvfTwoLevel]] routing tie-for-tie. The
     * SEARCH side is multi-probe (round-5 default): each query probes its 4
     * nearest fine centroids scored DIRECTLY (the query side is |Q| rows —
     * hierarchical routing there saves nothing and costs recall), mirroring
-    * [[graft.ops.Vectors.ivfTopKTwoLevelMultiProbe]].
+    * `AnnSpec(IvfTwoLevel(…), Nearest(4))`.
     */
   lazy val oracleIvfTwoLevel: String =
     s"""WITH $oracleEmbCte,

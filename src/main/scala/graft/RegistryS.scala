@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 import graft.binlog.{BinlogEvents, DailyCounts, Ingest, TransactionStats}
-import graft.ops.{Dedup, TextOps, Vectors, Vocab}
+import graft.ops.{AnnSpec, Dedup, TextOps, Vectors, Vocab}
 
 import RegistryLib._
 
@@ -19,12 +19,13 @@ private[graft] object RegistryS {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- similarity search ----
     "s1_ann_bruteforce" -> ((s, dir) =>
-      Vectors.bruteForceTopK(Tables.embeddings(s, dir), 0L until 8L, k = 10)),
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 10)),
     "s16_ann_jl" -> ((s, dir) =>
       // Rademacher JL projection (64→16 dense ±1 dims, deterministic sign
       // hash) → shortlist in the small space → exact re-rank: the
       // dimensionality lever next to s8/s9's quantization levers
-      Vectors.jlRerankTopK(Tables.embeddings(s, dir), 0L until 8L, k = 10)),
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 10,
+        AnnSpec(score = AnnSpec.Jl(16), refine = AnnSpec.Rerank(40)))),
     "s17_knn_classify" -> ((s, dir) =>
       // retrieval applied to labeling: each query's label = majority vote
       // of its 10 exact nearest neighbors (votes desc, ties to smaller
@@ -153,7 +154,7 @@ private[graft] object RegistryS {
     }),
     "s32_margin_scan" -> ((s, dir) => {
       // s31's geometry-robust SCALE path, oracle-attested end-to-end (the
-      // annTopK design applied to pair mining): SQ8 byte-code scoring of
+      // AnnSpec.Production design applied to pair mining): SQ8 scoring of
       // the full (test × train) grid, per-side top-8 shortlists from the
       // compressed scores, exact re-rank of only those pairs, then the
       // margin tail — pair recovery ≈ 1.0 at 1/8 the scan bandwidth where
@@ -276,14 +277,16 @@ private[graft] object RegistryS {
     "s8_ann_quantized" -> ((s, dir) =>
       // 8-bit scalar quantization + integer-dot scoring: the 100 TB
       // memory/bandwidth form (codes are 8x smaller than float64 units)
-      Vectors.quantizedTopK(Tables.embeddings(s, dir), 0L until 8L, k = 10)),
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 10,
+        AnnSpec(score = AnnSpec.Sq8))),
     "s7_ann_filtered" -> ((s, dir) => {
       // hybrid search: neighbors drawn only from quality-passing documents
       // (vec_id ≡ doc_id); the gate is a semi join applied before scoring
       val allowed = Tables.documents(s, dir)
         .filter(TextOps.qualityPassExpr(col("text")))
         .select(col("doc_id").as("vec_id"))
-      Vectors.bruteForceTopKFiltered(Tables.embeddings(s, dir), allowed, 0L until 8L, k = 10)
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 10,
+        AnnSpec(AnnSpec.Flat(Some(allowed))))
     }),
     "s2_ann_ivf" -> ((s, dir) => {
       // ⌈√N⌉ spaced centroids like d6/s4/s6 — bucket count grows with the
@@ -293,15 +296,15 @@ private[graft] object RegistryS {
       // the 4 nearest buckets is the standard recall floor (RECALL.json
       // tracks the curve; single-probe stays a diagnostic row there)
       val emb = Tables.embeddings(s, dir)
-      Vectors.ivfTopKMultiProbe(emb, Vectors.spacedCentroidIds(emb.count()),
-        0L until 8L, k = 5, nprobe = 4)
+      Vectors.topK(emb, Left(0L until 8L), k = 5,
+        AnnSpec(AnnSpec.Ivf(Vectors.spacedCentroidIds(emb.count())), AnnSpec.Nearest(4)))
     }),
     "s27_ann_default" -> ((s, dir) =>
       // THE production one-call ANN: SQ8 compressed scan (1 byte/dim, 8×
       // below the float corpus) shortlists 4k candidates, exact re-rank
       // orders them — recall 1.0 at sf0.1 regardless of corpus geometry
-      // (bucket-pruned recall is data-bounded; see Vectors.annTopK doc)
-      Vectors.annTopK(Tables.embeddings(s, dir), 0L until 8L, k = 10)),
+      // (bucket-pruned recall is data-bounded; see AnnSpec.Production)
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 10, AnnSpec.Production)),
     "s9_ann_pq" -> ((s, dir) =>
       // product quantization at the round-5 shipped point: 16 subspaces ×
       // 64 spaced sub-centroids (16 bytes/vector — still 32× below
@@ -309,8 +312,8 @@ private[graft] object RegistryS {
       // Recall@10 = 0.89 at sf0.1 vs 0.16 for the round-4 ADC-only
       // m=8/ks=16 default (RECALL.json); the ADC-only small-code point
       // remains on the record as s12's stage 1 and a diagnostics row
-      Vectors.pqRerankTopK(Tables.embeddings(s, dir), 0L until 8L, k = 10,
-        shortlist = 80, m = 16, ks = 64)),
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 10,
+        AnnSpec(score = AnnSpec.Pq(m = 16, ks = 64), refine = AnnSpec.Rerank(80)))),
     "s11_ann_ivfpq" -> ((s, dir) => {
       // the production composition at the shipped operating point: IVF
       // multi-probe routing (nprobe=4) bounds WHICH vectors are scored, PQ
@@ -319,14 +322,16 @@ private[graft] object RegistryS {
       // quantization error affects WHICH candidates surface, not their
       // final order
       val emb = Tables.embeddings(s, dir)
-      Vectors.ivfPqRerankTopK(emb, Vectors.spacedCentroidIds(emb.count()), 0L until 8L,
-        k = 5, nprobe = 4, shortlist = 40, m = 16, ks = 64)
+      Vectors.topK(emb, Left(0L until 8L), k = 5,
+        AnnSpec(AnnSpec.Ivf(Vectors.spacedCentroidIds(emb.count())), AnnSpec.Nearest(4),
+          AnnSpec.Pq(m = 16, ks = 64), AnnSpec.Rerank(40)))
     }),
     "s12_ann_pq_rerank" -> ((s, dir) =>
       // two-stage retrieval: the PQ byte-code scan shortlists 40
       // candidates per query, then ONLY those are re-scored exactly —
       // recall ≈ brute force without a float corpus scan
-      Vectors.pqRerankTopK(Tables.embeddings(s, dir), 0L until 8L, k = 10)),
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 10,
+        AnnSpec(score = AnnSpec.Pq(), refine = AnnSpec.Rerank(40)))),
     "s10_ivf_profile" -> ((s, dir) => {
       // index health check: per-bucket population of the spaced-centroid
       // IVF assignment — the balance report that decides nprobe/centroid
@@ -341,17 +346,19 @@ private[graft] object RegistryS {
     "s3_ann_lsh" -> ((s, dir) =>
       // round-5 default: multi-probe (own bucket + all Hamming-1 buckets)
       // — the single-bucket form retrieved 1-of-20 right neighbors
-      Vectors.lshTopKMultiProbe(Tables.embeddings(s, dir), 0L until 8L, k = 5)),
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 5,
+        AnnSpec(AnnSpec.Lsh(), AnnSpec.Hamming1))),
     "s4_ann_ivf_multiprobe" -> ((s, dir) => {
       // recall knob one step past s2's shipped nprobe=4 default: 8 probes
       // over the ⌈√N⌉ spaced-centroid buckets (s23 sweeps the full curve)
       val emb = Tables.embeddings(s, dir)
-      Vectors.ivfTopKMultiProbe(emb, Vectors.spacedCentroidIds(emb.count()),
-        0L until 8L, k = 5, nprobe = 8)
+      Vectors.topK(emb, Left(0L until 8L), k = 5,
+        AnnSpec(AnnSpec.Ivf(Vectors.spacedCentroidIds(emb.count())), AnnSpec.Nearest(8)))
     }),
     "s5_ann_lsh_multitable" -> ((s, dir) =>
       // recall amplifier: candidate iff colliding in ANY of 4 hash tables
-      Vectors.lshTopKMultiTable(Tables.embeddings(s, dir), 0L until 8L, k = 5)),
+      Vectors.topK(Tables.embeddings(s, dir), Left(0L until 8L), k = 5,
+        AnnSpec(AnnSpec.LshTables()))),
     "s6_ann_ivf_twolevel" -> ((s, dir) => {
       // hierarchical assignment: O(N·√C·d) instead of O(N·C·d) — the
       // routing that keeps IVF assignment affordable at 100 TB. Round 5:
@@ -360,16 +367,15 @@ private[graft] object RegistryS {
       // there and the single-probe form retrieved 0.16 recall@5)
       val emb = Tables.embeddings(s, dir)
       val fine = Vectors.spacedCentroidIds(emb.count())
-      Vectors.ivfTopKTwoLevelMultiProbe(emb, fine, Vectors.coarseSubset(fine),
-        0L until 8L, k = 5, nprobe = 4)
+      Vectors.topK(emb, Left(0L until 8L), k = 5,
+        AnnSpec(AnnSpec.IvfTwoLevel(fine, Vectors.coarseSubset(fine)), AnnSpec.Nearest(4)))
     }),
     "s22_cross_knn" -> ((s, dir) => {
       // the embedding-match join: every test vector's top-3 train
       // neighbors among its bucket candidates — s14 across two corpora
       val emb = Tables.embeddings(s, dir)
-      Vectors.crossCorpusTopK(
-        emb.filter(col("vec_id") % 10 < 2),
-        emb.filter(col("vec_id") % 10 >= 2), k = 3)
+      Vectors.topK(emb.filter(col("vec_id") % 10 >= 2),
+        Right(emb.filter(col("vec_id") % 10 < 2)), k = 3, AnnSpec(AnnSpec.LshTables()))
     })
   )
 
@@ -520,8 +526,8 @@ private[graft] object RegistryS {
     // of PqEncode/PqAdcDot — so codes, sims, and ranks match bit-for-bit
     "s9_ann_pq" ->
       // round-5 shipped point: m=16/ks=64 codes, ADC shortlist 80, exact
-      // re-rank top-10 — mirrors Vectors.pqRerankTopK(shortlist=80, m=16,
-      // ks=64) stage-for-stage
+      // re-rank top-10 — mirrors Vectors.topK with AnnSpec(score = Pq(16,
+      // 64), refine = Rerank(80)) stage-for-stage
       s"""WITH $oracleEmbCte,
          |${oraclePqCtesFor(16, 64)},
          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8),
@@ -560,8 +566,8 @@ private[graft] object RegistryS {
     "s11_ann_ivfpq" ->
       // round-5 shipped composition: multi-probe routing (nprobe=4), PQ
       // codes m=16/ks=64, ADC shortlist 40 across the probed buckets,
-      // exact re-rank top-5 — mirrors Vectors.ivfPqRerankTopK stage-for-
-      // stage (probes rank ties to the smaller centroid id, shortlist and
+      // exact re-rank top-5 — mirrors s11's AnnSpec stage-for-stage
+      // (probes rank ties to the smaller centroid id, shortlist and
       // final ranks tie to the smaller neighbor id)
       s"""WITH $oracleEmbCte,
          |$oracleSpacedAssigned,
@@ -591,7 +597,7 @@ private[graft] object RegistryS {
     "s27_ann_default" ->
       // the one-call production default: s8's SQ8 decode-corrected scan
       // shortlists rn <= 40, exact re-rank over the normalized vectors
-      // orders the final top-10 — mirrors Vectors.annTopK stage-for-stage
+      // orders the final top-10 — mirrors AnnSpec.Production stage-for-stage
       s"""WITH $oracleEmbCte,
          |ex AS (SELECT vec_id, unnest(range(1, len(v) + 1)) AS i, unnest(v) AS x FROM e),
          |stats AS (SELECT i, min(x) AS mn, max(x) AS mx FROM ex GROUP BY i),

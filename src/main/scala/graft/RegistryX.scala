@@ -50,7 +50,7 @@ private[graft] object RegistryX {
       val queries = Seq((0L, "hash join batch"), (1L, "vector scan filter"),
         (2L, "window agg order"))
       TextOps.hybridRrf(Tables.documents(s, dir), queries,
-        Vectors.bruteForceTopK(Tables.embeddings(s, dir), queries.map(_._1), 10))
+        Vectors.topK(Tables.embeddings(s, dir), Left(queries.map(_._1)), 10))
     }),
     "x56_dsir_weights" -> ((s, dir) =>
       // DSIR importance weights against the English subset as the target

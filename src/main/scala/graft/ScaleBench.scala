@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Vectors, Vocab}
+import graft.ops.{AnnSpec, Dedup, Vectors, Vocab}
 
 /** Synthetic scale probe for the dedup/ANN surface (round-3 verdict "next"
   * #5): no sf1 testdata exists, so build one in-bench — the sf0.1 corpus
@@ -96,16 +96,17 @@ object ScaleBench {
         Dedup.simhashPairsFromArrays(Vocab.hashTokenIdArrays(d)), true),
       ("s2_ann_ivf", (e: DataFrame) => {
         val n = e.count()
-        Vectors.ivfTopK(e, Vectors.spacedCentroidIds(n), 0L until 8L, k = 5)
+        Vectors.topK(e, Left(0L until 8L), k = 5, AnnSpec(AnnSpec.Ivf(Vectors.spacedCentroidIds(n))))
       }, false),
       ("s6_ann_ivf_twolevel", (e: DataFrame) => {
         val n = e.count()
         val fine = Vectors.spacedCentroidIds(n)
-        Vectors.ivfTopKTwoLevel(e, fine, Vectors.coarseSubset(fine), 0L until 8L, k = 5)
+        Vectors.topK(e, Left(0L until 8L), k = 5,
+          AnnSpec(AnnSpec.IvfTwoLevel(fine, Vectors.coarseSubset(fine))))
       }, false),
       ("s9_ann_pq", (e: DataFrame) =>
         // the full-corpus encode pass + byte-code scan — the PQ cost model
-        Vectors.pqTopK(e, 0L until 8L, k = 10), false),
+        Vectors.topK(e, Left(0L until 8L), k = 10, AnnSpec(score = AnnSpec.Pq())), false),
       ("x11_pack_sequences", (d: DataFrame) =>
         // the three-level prefix scan — must stay flat as groups multiply
         graft.ops.TextOps.packSequences(d, budget = 2048L, groupSize = 8L), true),
@@ -140,7 +141,8 @@ object ScaleBench {
       ("s16_ann_jl", (e: DataFrame) =>
         // projection pass is O(N·planes·d); shortlist join carries 16-dim
         // rows only
-        Vectors.jlRerankTopK(e, 0L until 8L, k = 10), false),
+        Vectors.topK(e, Left(0L until 8L), k = 10,
+          AnnSpec(score = AnnSpec.Jl(16), refine = AnnSpec.Rerank(40))), false),
       ("d28_semantic_dedup", (e: DataFrame) =>
         Vectors.semanticDedupKeep(e), false),
       ("d32_dup_spans", (d: DataFrame) =>
@@ -188,7 +190,7 @@ object ScaleBench {
       ("s27_ann_default", (e: DataFrame) =>
         // the compressed full scan: cost must track N (one byte-code pass
         // per query batch), never N² — the production default's cost model
-        Vectors.annTopK(e, 0L until 8L, k = 10), false),
+        Vectors.topK(e, Left(0L until 8L), k = 10, AnnSpec.Production), false),
       ("s30_cluster_balanced", (e: DataFrame) =>
         // assignment + per-bucket windows over √(8N) balanced buckets
         Vectors.clusterBalancedSample(e, quota = 5), false),

@@ -1,5 +1,6 @@
 package graft.binlog
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +15,9 @@ import org.apache.spark.sql.functions._
   *     row-group min/max stats → data skipping, the sparse-index analog.
   *   - K4 TTL: `TTL execute_time + toIntervalMonth(30)` (`README.md:117`) →
   *     a retention job dropping expired `day=` partitions.
-  *   - W5 idempotent window write: existence probe before insert
-  *     (`compute_transaction_info.py:132-150`).
+  *
+  * W5 idempotent window writes (`compute_transaction_info.py:132-150`) are
+  * one anti join inside [[Pipeline.runCompute]].
   */
 object Maintenance {
 
@@ -38,12 +40,7 @@ object Maintenance {
     * O(expired partitions) — the same cost model as CH dropping TTL'd parts.
     */
   def applyTtl(spark: SparkSession, path: String, months: Int = 30): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration
-    )
-    val base = new org.apache.hadoop.fs.Path(path)
+    val (fs, base) = fileSystem(spark, path)
     if (!fs.exists(base)) return Seq.empty
     val cutoff = java.time.LocalDate.now(java.time.ZoneOffset.UTC).minusMonths(months.toLong)
     val expired = fs
@@ -77,47 +74,21 @@ object Maintenance {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     recoverCompaction(spark, path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val base = p(path)
+    val (fs, base) = fileSystem(spark, path)
     def dataFiles = fs.listStatus(base).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
     val before = dataFiles.size
     val totalBytes = dataFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (before <= nOut) return (before, before) // already compact: no rewrite
-    val tmp = path.stripSuffix("/") + "_compacting"
-    val old = path.stripSuffix("/") + "_old"
-    spark.read.parquet(path).repartition(nOut)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    fs.delete(p(old), true)
-    fs.rename(base, p(old))
-    fs.rename(p(tmp), base)
-    fs.delete(p(old), true)
+    swapIn(spark, path)(spark.read.parquet(path).repartition(nOut)
+      .write.mode(SaveMode.Overwrite).parquet(_))
     (before, dataFiles.size)
   }
 
-  /** W5: idempotent append of a window result — skip if any row for this
-    * `end_time` already exists (`compute_transaction_info.py:132-142`, the
-    * `count(*)` probe A10, done Spark-side as a pruned `isEmpty` peek).
-    * The table is read with `result`'s schema, so an empty directory needs
-    * no inference. Returns true if the write happened.
-    */
-  def idempotentAppend(spark: SparkSession, result: DataFrame, path: String,
-      endTime: java.sql.Timestamp): Boolean = {
-    // only a missing table means "nothing written yet": any other read
-    // failure propagates rather than re-appending a written window
-    val exists = pathExists(spark, path) &&
-      !spark.read.schema(result.schema).parquet(path)
-        .filter(col("end_time") === lit(endTime)).isEmpty
-    if (!exists) result.write.mode(SaveMode.Append).parquet(path)
-    !exists
-  }
-
   def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val (fs, p) = fileSystem(spark, path)
+    fs.exists(p)
   }
 
   /** A9 compaction: rewrite MV partials fully collapsed (the explicit analog
@@ -140,24 +111,11 @@ object Maintenance {
       valueCol: String = "event_count", partitionCol: Option[String] = Some("day")): Unit = {
     recoverCompaction(spark, path)
     val raw = spark.read.parquet(path)
-    // replayed streaming batches are deduped before collapsing (see
-    // StreamingMVs.partialsWriter)
-    val deduped =
-      if (raw.columns.contains("batch_id"))
-        raw.dropDuplicates("batch_id" +: keys).drop("batch_id")
-      else raw
-    val compacted = DailyCounts.compact(deduped, keys, valueCol)
-    val tmp = path.stripSuffix("/") + "_compacting"
-    val old = path.stripSuffix("/") + "_old"
+    val compacted = DailyCounts.compact(
+      graft.streaming.StreamingMVs.dedupReplays(raw, keys), keys, valueCol)
     val writer = compacted.write.mode(SaveMode.Overwrite)
-    partitionCol.filter(keys.contains).fold(writer)(c => writer.partitionBy(c)).parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    fs.delete(p(old), true)
-    fs.rename(p(path), p(old))
-    fs.rename(p(tmp), p(path))
-    fs.delete(p(old), true)
+    swapIn(spark, path)(
+      partitionCol.filter(keys.contains).fold(writer)(c => writer.partitionBy(c)).parquet(_))
   }
 
   /** Roll back a compaction that crashed between its two renames: if
@@ -166,15 +124,38 @@ object Maintenance {
     * the head of [[compactPartials]]). Returns true if a rollback happened.
     */
   def recoverCompaction(spark: SparkSession, path: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val old = path.stripSuffix("/") + "_old"
-    val needsRollback = fs.exists(p(old)) && !fs.exists(p(path))
-    if (needsRollback) fs.rename(p(old), p(path))
+    val (fs, base) = fileSystem(spark, path)
+    val (tmp, old) = staging(path)
+    val needsRollback = fs.exists(old) && !fs.exists(base)
+    if (needsRollback) fs.rename(old, base)
     // a stale tmp from a crash before the first rename is dead weight either way
-    fs.delete(p(path.stripSuffix("/") + "_compacting"), true)
+    fs.delete(tmp, true)
     needsRollback
+  }
+
+  private def fileSystem(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** A rewrite's staging copy and the displaced original's parking spot. */
+  private def staging(path: String): (Path, Path) =
+    (new Path(path.stripSuffix("/") + "_compacting"), new Path(path.stripSuffix("/") + "_old"))
+
+  /** The compaction swap: `write` stages the new table at the staging
+    * path, then `path` moves to `_old`, the staged copy takes its place and
+    * `_old` is dropped. A crash before the first rename leaves the original
+    * untouched; a crash between the renames leaves only `_old`, which
+    * [[recoverCompaction]] restores.
+    */
+  private def swapIn(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    val (fs, base) = fileSystem(spark, path)
+    val (tmp, old) = staging(path)
+    write(tmp.toString)
+    fs.delete(old, true)
+    fs.rename(base, old)
+    fs.rename(tmp, base)
+    fs.delete(old, true)
   }
 
   /** P12 done right: the reference derives the distributed-table name with

@@ -2,7 +2,10 @@ package graft.binlog
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -78,11 +81,12 @@ object Pipeline {
     // Job shape: one query plan — event scan → per-(window, gtid) agg →
     // one regroup ranking all three metrics → anti-join on (metric,
     // end_time) against the written rows — materialized once by an eager
-    // checkpoint, then one small job for the per-metric counts and one
-    // write per non-empty metric (about 10 jobs; declared schemas, so no
-    // inference jobs). A checkpoint, not a persist: appending to
-    // stats_<m> makes the CacheManager recache every cached plan reading
-    // stats_<m>, which would re-run the event scan before each later write.
+    // checkpoint whose run also fills the per-metric row counts (an
+    // observation on the checkpointed plan, no job of its own), then one
+    // write per non-empty metric (declared schemas, so no inference jobs).
+    // A checkpoint, not a persist: appending to stats_<m> makes the
+    // CacheManager recache every cached plan reading stats_<m>, which
+    // would re-run the event scan before each later write.
     val events = spark.read.schema(Schemas.binlogEvent).parquet(layout.eventTable)
     val ranked = TransactionStats.top1AllMetricsFromStats(
       TransactionStats.perWindow(events, windowSec)
@@ -96,13 +100,17 @@ object Pipeline {
       }
     val fresh = written.reduceOption(_ union _)
       .fold(ranked)(ranked.join(_, Seq("metric", "end_time"), "left_anti"))
+    val perMetric = new Observation()
+    val byMetric = TransactionStats.metrics.map(m => count(when(col("metric") === m, 1)).as(m))
     val frames = new PlanGuard.CheckpointChain
     try {
-      val snapshot = frames.eager("compute_fresh", fresh)
-      val counts = snapshot.groupBy("metric").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val snapshot = frames.eager("compute_fresh",
+        fresh.observe(perMetric, byMetric.head, byMetric.tail: _*))
+      // filled when the checkpoint's query ends; a missing fill fails loudly
+      val row = Await.result(perMetric.future, 1.minute)
+      val counts = TransactionStats.metrics.map(m => m -> row.getAs[Long](m)).toMap
       // an append of zero rows would still write an empty part file
-      TransactionStats.metrics.filter(counts.getOrElse(_, 0L) > 0).foreach { m =>
+      TransactionStats.metrics.filter(counts(_) > 0).foreach { m =>
         snapshot.filter(col("metric") === m).drop("metric")
           .write.mode("append").parquet(layout.statTable(m))
       }

@@ -1946,8 +1946,8 @@ object TextOps {
     * robust default when fusing heterogeneous retrievers.
     *
     * `vectorList` is any (query_id, neighbor_id, rank) frame — the exact
-    * [[graft.ops.Vectors.bruteForceTopK]] here (oracle-expressible); swap
-    * in [[graft.ops.Vectors.annTopK]] or the served index at 100 TB, the
+    * [[graft.ops.Vectors.topK]] here (oracle-expressible); swap in
+    * [[graft.ops.AnnSpec.Production]] or the served index at 100 TB, the
     * fusion is list-agnostic. Determinism: integer floor-division points,
     * integer sums, ties to the smaller doc_id — no float ever enters the
     * fusion, so the oracle matches bit-for-bit. The query's own document

@@ -356,7 +356,7 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
     * (deterministic contents — a rebuild is always safe).
     *
     * Centroid default (round-7, verdict #4): `maxmin`-trained spherical
-    * k-means ([[trainedCentroids]]) — ENGINE.md's own conclusion is that
+    * k-means ([[trainedCentroids]]) — ENGINE.md "Vector search" records that
     * the production recipe at 100 TB is trained centroids for both the
     * IVF index and the graph build (spaced corpus-member seeds inherit
     * whatever structure the id order carries; RECALL.json's `clustered`
@@ -532,13 +532,14 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
     // (round-9 verdict #3: each beamSearchServed call persisted its own
     // copy of the identical withUnit frame — two simultaneous corpus-
     // scale caches of the same computation), released eagerly once the
-    // |Q|-row report has materialized
+    // |Q|-row report has materialized. The exact topK's flat route caches
+    // this same plan, so the cache manager hands it this one entry.
     val unit = withUnit(embeddings).select(col("vec_id"), col("unit")).persist()
     val servedApp = beamSearchOver(unit, spark.table(oldTable),
       queryIds, oldEntries, k, beam, rounds)
     val servedReb = beamSearchOver(unit, rebuilt,
       queryIds, rebuiltEntries, k, beam, rounds)
-    val truth = bruteForceTopKOver(unit, queryIds, k)
+    val truth = topK(embeddings, Left(queryIds), k)
     def hitsOf(served: DataFrame, name: String): DataFrame = truth
       .join(served.select(col("query_id"), col("neighbor_id"))
         .withColumn("h", lit(1L)), Seq("query_id", "neighbor_id"), "left")
@@ -557,8 +558,8 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
   /** s36's scale-aware default recall floors, NAMED so the recorded
     * derivation lives next to the numbers the plan asserts (round-7
     * verdict #8 — the guard must track the fixture): the measurements
-    * behind them are the round-7 floor-of-scales (ENGINE.md round-7/8
-    * headers — serve recall 0.49/0.46/0.34 at sf0.01/sf0.1/sf0.001 under
+    * behind them are the round-7 floor-of-scales (ENGINE.md "Vector
+    * search" — serve recall 0.49/0.46/0.34 at sf0.01/sf0.1/sf0.001 under
     * the ⌈C/8⌉ probe fraction, catastrophic modes all ≤ 0.17).
     * VectorsSpec RE-MEASURES the fixture's serve recall each run and
     * asserts ≥ 0.05 headroom over these constants, so a drifting fixture
@@ -590,7 +591,7 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
     * over the C = ⌈√N⌉ centroid count is a shrinking scan fraction as the
     * corpus grows (measured: 0.76 recall at sf0.01 → 0.51 at sf0.1 for
     * nprobe = 8), while a constant ⅛ routing fraction holds its operating
-    * point at any scale — the annTopK/marginPairsScan bandwidth
+    * point at any scale — the AnnSpec.Production/marginPairsScan bandwidth
     * discipline applied to routing.
     *
     * Floor (`minRecallPpm` ≤ 0 selects the scale-aware default): the ⅛
@@ -652,7 +653,7 @@ private[ops] trait VectorArtifacts { self: VectorCore with VectorTraining =>
     */
   private def checkedAgainstBrute(embeddings: DataFrame, served: DataFrame,
       queryIds: Seq[Long], k: Int, minRecallPpm: Long, what: String): DataFrame = {
-    val truth = bruteForceTopK(embeddings, queryIds, k)
+    val truth = topK(embeddings, Left(queryIds), k)
     val rec = truth
       .join(served.select(col("query_id"), col("neighbor_id"))
         .withColumn("hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")

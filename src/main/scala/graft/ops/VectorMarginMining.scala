@@ -125,7 +125,7 @@ private[ops] trait VectorMarginMining { self: VectorCore with VectorTraining =>
     * report ([[graft.RecallReport]]) can chart candidate volume against
     * pair recovery per (tables × probe-radius) config. The TEST side probes
     * its own bucket plus every bucket within Hamming distance
-    * `probeRadius` per table (the lshTopKMultiProbe trick): candidate
+    * `probeRadius` per table (the [[AnnSpec.Hamming1]] probe): candidate
     * recall rises with the probe count at the cost of more (tiny) probe
     * keys — the train side stays one bucket per table, so candidate volume
     * remains bucket-occupancy-bounded. Output: distinct (test_id,
@@ -278,7 +278,7 @@ private[ops] trait VectorMarginMining { self: VectorCore with VectorTraining =>
     marginFromScored(scored, k, marginPpmThreshold)
   }
 
-  /** [[marginPairs]]' geometry-robust scale path — the [[annTopK]] design
+  /** [[marginPairs]]' geometry-robust scale path — the [[AnnSpec.Production]] design
     * applied to pair mining: ONE compressed scoring pass over the
     * (test × train) grid through SQ8 byte codes (1 byte/dimension — 8×
     * below the float corpus), per-side shortlists from the compressed

@@ -19,7 +19,7 @@ private[ops] trait VectorTraining { self: VectorCore =>
     * size), init spaced over the sample. Not oracle-attested (float means
     * sum in engine-dependent order) but seed-deterministic within the
     * engine; VectorsSpec pins recall ≥ the spaced codebook. Returns the
-    * flat layout [[pqTopKWithCodebook]] consumes.
+    * flat layout [[AnnSpec.PqCodebook]] consumes.
     */
   def trainedPqCodebooks(embeddings: DataFrame, m: Int = 8, ks: Int = 16,
       sampleTarget: Int = 4096, iters: Int = 10, seed: Long = 42L): Seq[Double] = {

@@ -47,34 +47,43 @@ object StreamingMVs {
     * which the dedup collapses before the re-sum.
     */
   def partialsWriter(stream: DataFrame, targetPath: String, checkpoint: String): DataStreamWriter[Row] =
+    partialsSink(stream, targetPath, checkpoint, "mv_counts_batch", byDay = true)(
+      DailyCounts.dailyEventCounts)
+
+  /** The AvailableNow sink every partials MV shares: each micro-batch's
+    * partials, tagged with its `batch_id`, pass the inner-plan guard
+    * (round-12 — see StreamingIngest.writer) and append to `targetPath`,
+    * day-partitioned when `byDay`.
+    */
+  private def partialsSink(stream: DataFrame, targetPath: String, checkpoint: String,
+      guard: String, byDay: Boolean)(partialsOf: DataFrame => DataFrame): DataStreamWriter[Row] =
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partials = DailyCounts
-          .dailyEventCounts(batch)
-          .withColumn("batch_id", lit(batchId))
-        // guard the inner batch plan (round-12 — see StreamingIngest.writer)
-        graft.plans.PlanGuard.assertNoCorpusProducts("mv_counts_batch", partials)
-        partials.write
-          .mode("append")
-          .partitionBy("day")
-          .parquet(targetPath)
+        val partials = partialsOf(batch).withColumn("batch_id", lit(batchId))
+        graft.plans.PlanGuard.assertNoCorpusProducts(guard, partials)
+        val writer = partials.write.mode("append")
+        (if (byDay) writer.partitionBy("day") else writer).parquet(targetPath)
       }
 
-  /** The M3 read path over the partials table (re-sum view). Dedups
-    * replayed batches first (see [[partialsWriter]]); tolerates compacted
-    * tables where `batch_id` no longer exists.
+  /** Replay dedup for a partials table: an at-least-once micro-batch
+    * replays identical partial rows under the same `batch_id`, so rows
+    * equal on (batch_id, keys…) collapse to one, then the tag is dropped. A
+    * compacted table no longer carries `batch_id` and passes through.
     */
-  def readDailyCounts(spark: org.apache.spark.sql.SparkSession, targetPath: String): DataFrame = {
-    val raw = spark.read.parquet(targetPath)
-    val deduped =
-      if (raw.columns.contains("batch_id"))
-        raw.dropDuplicates("batch_id", "day", "event_type").drop("batch_id")
-      else raw
-    DailyCounts.resum(deduped, Seq("day", "event_type"))
-  }
+  private[graft] def dedupReplays(raw: DataFrame, keys: Seq[String]): DataFrame =
+    if (raw.columns.contains("batch_id"))
+      raw.dropDuplicates("batch_id" +: keys).drop("batch_id")
+    else raw
+
+  /** The M3 read path over the partials table (re-sum view), replayed
+    * batches deduped first ([[dedupReplays]]).
+    */
+  def readDailyCounts(spark: org.apache.spark.sql.SparkSession, targetPath: String): DataFrame =
+    DailyCounts.resum(dedupReplays(spark.read.parquet(targetPath), Seq("day", "event_type")),
+      Seq("day", "event_type"))
 
   /** b30's mergeable-QUANTILE MV maintained by the stream — the
     * [[partialsWriter]] discipline applied to percentiles: each
@@ -88,34 +97,20 @@ object StreamingMVs {
     */
   def histogramPartialsWriter(stream: DataFrame, targetPath: String,
       checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partials = batch
-          .groupBy(to_date(col("ts")).as("day"), col("event_type"),
-            round(col("value") * 100).cast("long").as("v_c"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("batch_id", lit(batchId))
-        graft.plans.PlanGuard.assertNoCorpusProducts("mv_histogram_batch", partials)
-        partials.write.mode("append").partitionBy("day").parquet(targetPath)
-      }
+    partialsSink(stream, targetPath, checkpoint, "mv_histogram_batch", byDay = true)(
+      _.groupBy(to_date(col("ts")).as("day"), col("event_type"),
+          round(col("value") * 100).cast("long").as("v_c"))
+        .agg(count(lit(1)).as("cnt")))
 
   /** Exact percentiles from the streamed histogram partials (b30's read
     * side over the streaming MV): replay-dedup, then one re-sum into
     * [[graft.operators.Percentiles.discreteFromHistogram]].
     */
   def readPercentiles(spark: org.apache.spark.sql.SparkSession,
-      targetPath: String, ps: Seq[Double] = Seq(0.5, 0.95)): DataFrame = {
-    val raw = spark.read.parquet(targetPath)
-    val deduped =
-      if (raw.columns.contains("batch_id"))
-        raw.dropDuplicates("batch_id", "day", "event_type", "v_c").drop("batch_id")
-      else raw
+      targetPath: String, ps: Seq[Double] = Seq(0.5, 0.95)): DataFrame =
     graft.operators.Percentiles.discreteFromHistogram(
-      deduped, "event_type", "v_c", "cnt", ps, "pct_cents")
-  }
+      dedupReplays(spark.read.parquet(targetPath), Seq("day", "event_type", "v_c")),
+      "event_type", "v_c", "cnt", ps, "pct_cents")
 
   /** Count-min sketch maintained by the stream — the AggregatingMergeTree
     * half of the MV story: where b5/b30 stream SUM and HISTOGRAM partials,
@@ -131,25 +126,12 @@ object StreamingMVs {
   def countMinPartialsWriter(stream: DataFrame, targetPath: String,
       checkpoint: String, keyCol: String = "user_id",
       w: Int = 256): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partials = graft.operators.Sketches.sketchPartials(batch, keyCol, w)
-          .withColumn("batch_id", lit(batchId))
-        graft.plans.PlanGuard.assertNoCorpusProducts("mv_sketch_batch", partials)
-        partials.write.mode("append").parquet(targetPath)
-      }
+    partialsSink(stream, targetPath, checkpoint, "mv_sketch_batch", byDay = false)(
+      graft.operators.Sketches.sketchPartials(_, keyCol, w))
 
   /** The merged sketch from streamed partials (replay-dedup first). */
   def readCountMinSketch(spark: org.apache.spark.sql.SparkSession,
-      targetPath: String): DataFrame = {
-    val raw = spark.read.parquet(targetPath)
-    val deduped =
-      if (raw.columns.contains("batch_id"))
-        raw.dropDuplicates("batch_id", "r", "bucket").drop("batch_id")
-      else raw
-    graft.operators.Sketches.mergeSketch(deduped)
-  }
+      targetPath: String): DataFrame =
+    graft.operators.Sketches.mergeSketch(
+      dedupReplays(spark.read.parquet(targetPath), Seq("r", "bucket")))
 }

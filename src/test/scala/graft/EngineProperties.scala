@@ -723,11 +723,12 @@ object EngineProperties extends Properties("graft") {
       val fused = graft.ops.Vectors.probeSweep(emb, qs, k, probes).collect()
         .map(r => r.getAs[Long]("nprobe") -> r.getAs[Long]("n_hits")).toMap
       val cids = graft.ops.Vectors.spacedCentroidIds(coords.size.toLong)
-      val truth = graft.ops.Vectors.bruteForceTopK(emb, qs, k)
+      val truth = graft.ops.Vectors.topK(emb, Left(qs), k)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       probes.forall { np =>
         val perConfig = graft.ops.Vectors
-          .ivfTopKMultiProbe(emb, cids, qs, k, np)
+          .topK(emb, Left(qs), k, graft.ops.AnnSpec(graft.ops.AnnSpec.Ivf(cids),
+            graft.ops.AnnSpec.Nearest(np)))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         fused(np.toLong) == perConfig.intersect(truth).size.toLong
       }

@@ -1120,6 +1120,15 @@ class PlanSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  test("ops/Vectors.scala defines one top-k method: the AnnSpec pipeline (source check)") {
+    // every similarity-search variant is an AnnSpec value run by Vectors.topK;
+    // a new *TopK* method there would re-spell the pipeline's stages
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/ops/Vectors.scala"))
+    val defs = "def (\\w*[Tt]opK\\w*)".r.findAllMatchIn(src).map(_.group(1)).toSeq
+    assert(defs.filterNot(_ == "topKPerGroup") === Seq("topK"), defs)
+  }
+
   test("stream guard flags a hinted stream-static corpus join; the clean twin passes") {
     // round-11 verdict #3: streaming plans were guard-blind — the hinted
     // stream-static join in streamDupFlags was found only by review. The

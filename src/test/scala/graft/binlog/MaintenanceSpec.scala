@@ -38,34 +38,6 @@ class MaintenanceSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() === 1L)
   }
 
-  test("W5 idempotent window append: second write of the same window is a no-op") {
-    val path = tmpDir("stats_idem")
-    val end = Timestamp.valueOf("2024-01-01 10:05:00")
-    val result = Seq((end, "5min", "g1", 3L, 100L, 7L))
-      .toDF("end_time", "interval", "gtid", "transaction_spend_time",
-        "transaction_size", "transaction_affected_rows")
-    assert(Maintenance.idempotentAppend(spark, result, path, end) === true)
-    assert(Maintenance.idempotentAppend(spark, result, path, end) === false)
-    assert(spark.read.parquet(path).count() === 1L)
-    // a different window still goes through
-    val end2 = Timestamp.valueOf("2024-01-01 10:10:00")
-    assert(Maintenance.idempotentAppend(spark, result.withColumn("end_time", lit(end2)),
-      path, end2) === true)
-    assert(spark.read.parquet(path).count() === 2L)
-  }
-
-  test("W5 idempotent append: an unreadable table fails loudly instead of re-appending") {
-    val path = tmpDir("stats_corrupt")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "part-00000-corrupt.parquet"), "not parquet")
-    val end = Timestamp.valueOf("2024-01-01 10:05:00")
-    val result = Seq((end, "5min", "g1", 3L, 100L, 7L))
-      .toDF("end_time", "interval", "gtid", "transaction_spend_time",
-        "transaction_size", "transaction_affected_rows")
-    intercept[Exception](Maintenance.idempotentAppend(spark, result, path, end))
-    assert(new java.io.File(path).list().toSeq === Seq("part-00000-corrupt.parquet"))
-  }
-
   test("A9 compaction: totals preserved, partials collapsed") {
     val path = tmpDir("mv_compact")
     val partials = Seq(

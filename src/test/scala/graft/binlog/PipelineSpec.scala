@@ -220,7 +220,7 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("compute is one query: a tick after one new batch runs at most 10 jobs and one event scan") {
+  test("compute is one query: a tick after one new batch runs at most 8 jobs and one event scan") {
     val layout = computedLayout("pipeline_shape")
     appendLateEvent(layout, Timestamp.valueOf("2024-02-15 12:02:00"), "late-gtid")
     val sc = spark.sparkContext
@@ -254,7 +254,7 @@ class PipelineSpec extends SparkSpec {
     }
     info(s"jobs: ${jobs.get()}")
     assert(written === 3)
-    assert(jobs.get() <= 10, s"${jobs.get()} jobs")
+    assert(jobs.get() <= 8, s"${jobs.get()} jobs")
     assert(eventScans.get() === 1)
     assert(sc.getPersistentRDDs.keySet.toSet -- persistedBefore === Set.empty)
   }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 
 class VectorsSpec extends SparkSpec {
   import spark.implicits._
+  import AnnSpec._
 
   private val emb = Seq(
     (0L, Array(1.0f, 0.0f, 0.0f)),
@@ -21,7 +22,7 @@ class VectorsSpec extends SparkSpec {
       (2L, Array(0.99f, 0.01f, 0.0f)),
       (3L, Array(1.0f, 0.0f, 0.0f)),
       (4L, Array(0.98f, 0.02f, 0.0f))).toDF("vec_id", "embedding")
-    val out = Vectors.crossCorpusTopK(test, train, k = 2, dim = 3).collect()
+    val out = Vectors.topK(train, Right(test), 2, AnnSpec(LshTables(dim = 3))).collect()
       .groupBy(_.getAs[Long]("query_id"))
       .map { case (q, rs) =>
         q -> rs.sortBy(_.getAs[Long]("rank")).map(_.getAs[Long]("neighbor_id")).toSeq
@@ -110,7 +111,7 @@ class VectorsSpec extends SparkSpec {
     for (b <- Seq(2, 4, 8, 16)) {
       val single = Vectors.beamSearch(emb, qs, entries, k = 5, beam = b, rounds = 3)
         .select(c("query_id"), c("neighbor_id"))
-        .join(Vectors.bruteForceTopK(emb, qs, 5)
+        .join(Vectors.topK(emb, Left(qs), 5)
           .select(c("query_id"), c("neighbor_id")),
           Seq("query_id", "neighbor_id"), "left_semi")
         .count()
@@ -194,7 +195,7 @@ class VectorsSpec extends SparkSpec {
   }
 
   test("brute-force top-k: ranks by cosine, excludes self, deterministic ties") {
-    val out = Vectors.bruteForceTopK(emb, Seq(0L), k = 3).orderBy("rank").collect()
+    val out = Vectors.topK(emb, Left(Seq(0L)), 3).orderBy("rank").collect()
     assert(out.map(_.getAs[Long]("neighbor_id")).toSeq === Seq(1L, 2L, 3L))
     // tie between 3 and 4 (both sim 0) broken by neighbor id asc
     assert(out.map(_.getAs[Long]("rank")).toSeq === Seq(1L, 2L, 3L))
@@ -204,19 +205,20 @@ class VectorsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // codes for dim mins/maxes over the fixture: v0=[255,0,0] v2=[229,25,0];
     // sims vs q0: v1=65025, v2=58395, v3=v4=0 (tie → smaller id)
-    val out = Vectors.quantizedTopK(emb, Seq(0L), k = 3).orderBy("rank").collect()
+    val out = Vectors.topK(emb, Left(Seq(0L)), 3, AnnSpec(score = Sq8)).orderBy("rank").collect()
     assert(out.map(_.getAs[Long]("neighbor_id")).toSeq === Seq(1L, 2L, 3L))
     // a constant dimension carries no information: it must quantize to code 0
     // everywhere (no NaN/div-by-zero), leaving the ranking unchanged
     val withConst = emb.withColumn("embedding", concat(col("embedding"), array(lit(7.5f))))
-    val out2 = Vectors.quantizedTopK(withConst, Seq(0L), k = 3).orderBy("rank").collect()
+    val out2 = Vectors.topK(withConst, Left(Seq(0L)), 3,
+      AnnSpec(score = Sq8)).orderBy("rank").collect()
     assert(out2.map(_.getAs[Long]("neighbor_id")).toSeq === Seq(1L, 2L, 3L))
   }
 
   test("IVF top-k searches only the query's bucket") {
     // centroids 0 and 3: vectors 0,1,2 → bucket 0; 3 → bucket 3; 4 ties →
     // smaller centroid id (0)
-    val out = Vectors.ivfTopK(emb, Seq(0L, 3L), Seq(0L), k = 10)
+    val out = Vectors.topK(emb, Left(Seq(0L)), 10, AnnSpec(Ivf(Seq(0L, 3L))))
       .orderBy("rank").collect()
     val neighbors = out.map(_.getAs[Long]("neighbor_id")).toSeq
     assert(neighbors.startsWith(Seq(1L, 2L)))
@@ -251,12 +253,14 @@ class VectorsSpec extends SparkSpec {
 
   test("multi-probe IVF: probing all buckets recovers brute-force exactly") {
     val cents = Seq(0L, 20L, 40L)
-    val exact = hits(Vectors.bruteForceTopK(corpus, Seq(1L, 2L), k = 5))
-    val all = hits(Vectors.ivfTopKMultiProbe(corpus, cents, Seq(1L, 2L), k = 5, nprobe = cents.size))
+    val exact = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5))
+    val all = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(Ivf(cents), Nearest(cents.size))))
     assert(all === exact)
     // and recall is monotone in nprobe (vs brute-force top-5)
-    val r1 = hits(Vectors.ivfTopK(corpus, cents, Seq(1L, 2L), k = 5)).intersect(exact).size
-    val r2 = hits(Vectors.ivfTopKMultiProbe(corpus, cents, Seq(1L, 2L), k = 5, nprobe = 2))
+    val r1 = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(Ivf(cents)))).intersect(exact).size
+    val r2 = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5, AnnSpec(Ivf(cents), Nearest(2))))
       .intersect(exact).size
     assert(r2 >= r1)
   }
@@ -268,23 +272,27 @@ class VectorsSpec extends SparkSpec {
     assert(coarse.size === math.ceil(math.sqrt(fine.size.toDouble)).toInt)
     // with a single coarse parent every fine centroid is reachable, so the
     // two-level routing degenerates to the flat assignment exactly
-    val flat = Vectors.ivfTopK(corpus, fine, Seq(1L, 2L), k = 5)
+    val flat = Vectors.topK(corpus, Left(Seq(1L, 2L)), 5, AnnSpec(Ivf(fine)))
       .orderBy("query_id", "rank").collect().map(_.toSeq)
-    val twoLevelOneCoarse = Vectors.ivfTopKTwoLevel(corpus, fine, Seq(fine.head), Seq(1L, 2L), k = 5)
+    val twoLevelOneCoarse = Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(IvfTwoLevel(fine, Seq(fine.head))))
       .orderBy("query_id", "rank").collect().map(_.toSeq)
     assert(twoLevelOneCoarse.toSeq === flat.toSeq)
     // and with the real coarse set the search still returns ranked results
-    val hier = Vectors.ivfTopKTwoLevel(corpus, fine, coarse, Seq(1L, 2L), k = 5).collect()
+    val hier = Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(IvfTwoLevel(fine, coarse))).collect()
     assert(hier.nonEmpty)
   }
 
   test("multi-table LSH: recall vs brute force is monotone in table count") {
-    val exact = hits(Vectors.bruteForceTopK(corpus, Seq(1L, 2L), k = 5))
-    val one = hits(Vectors.lshTopKMultiTable(corpus, Seq(1L, 2L), k = 5, nTables = 1, dim = 8))
-    val four = hits(Vectors.lshTopKMultiTable(corpus, Seq(1L, 2L), k = 5, nTables = 4, dim = 8))
+    val exact = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5))
+    val one = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(LshTables(nTables = 1, dim = 8))))
+    val four = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(LshTables(nTables = 4, dim = 8))))
     assert(four.intersect(exact).size >= one.intersect(exact).size)
     // table 0 of the multi-table scheme IS the single-table scheme
-    assert(one === hits(Vectors.lshTopK(corpus, Seq(1L, 2L), k = 5, dim = 8)))
+    assert(one === hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5, AnnSpec(Lsh(dim = 8)))))
   }
 
   test("trained centroids: recall@k on fixture embeddings ≥ spaced centroids") {
@@ -295,8 +303,8 @@ class VectorsSpec extends SparkSpec {
     val n = emb.count()
     val spacedIds = Vectors.spacedCentroidIds(n)
     val queries = (0L until 8L).toSeq
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k = 5))
-    val spaced = hits(Vectors.ivfTopK(emb, spacedIds, queries, k = 5))
+    val exact = hits(Vectors.topK(emb, Left(queries), 5))
+    val spaced = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(Ivf(spacedIds))))
     val trained = Vectors.trainedCentroids(emb, c = spacedIds.size, sampleTarget = 512)
     assert(trained.size === spacedIds.size)
     // unit-norm centroids (spherical k-means invariant)
@@ -304,7 +312,7 @@ class VectorsSpec extends SparkSpec {
       val nrm = math.sqrt(v.map(x => x * x).sum)
       assert(math.abs(nrm - 1.0) < 1e-9)
     }
-    val trainedHits = hits(Vectors.ivfTopKTrained(emb, trained, queries, k = 5))
+    val trainedHits = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(IvfTrained(trained))))
     val rSpaced = spaced.intersect(exact).size
     val rTrained = trainedHits.intersect(exact).size
     assert(rTrained >= rSpaced, s"trained recall $rTrained < spaced $rSpaced")
@@ -328,7 +336,7 @@ class VectorsSpec extends SparkSpec {
     val probes = Vectors.topProbeBuckets(qUnit, "query_id", "q",
       Vectors.centroidFrame(spark, ledger), 0, ledger.size)
     val served = hits(Vectors.ivfBatchTopKFromIndex(index, broadcast(probes), 10))
-    val truth = hits(Vectors.bruteForceTopK(emb, queries, 10))
+    val truth = hits(Vectors.topK(emb, Left(queries), 10))
     val recallPpm = 1000000L * served.intersect(truth).size / truth.size
     val floor = if (ledger.size >= 32) Vectors.trainedIvfFloorLargeC
       else Vectors.trainedIvfFloorSmallC
@@ -363,7 +371,7 @@ class VectorsSpec extends SparkSpec {
     // driver trainer (same sample, same Lloyd semantics)
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = (0L until 8L).toSeq
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k = 5))
+    val exact = hits(Vectors.topK(emb, Left(queries), 5))
     val dist = Vectors.trainedCentroidsDistributed(emb, c = 8, sampleTarget = 512)
     assert(dist.size === 8)
     dist.foreach { case (_, v) =>
@@ -371,9 +379,9 @@ class VectorsSpec extends SparkSpec {
       assert(math.abs(nrm - 1.0) < 1e-9)
     }
     val driver = Vectors.trainedCentroids(emb, c = 8, sampleTarget = 512, init = "maxmin")
-    val rDist = hits(Vectors.ivfTopKTrained(emb, dist, queries, k = 5))
+    val rDist = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(IvfTrained(dist))))
       .intersect(exact).size
-    val rDriver = hits(Vectors.ivfTopKTrained(emb, driver, queries, k = 5))
+    val rDriver = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(IvfTrained(driver))))
       .intersect(exact).size
     // same-bucket recall is the operating quantity; allow small drift from
     // the batched init (8 queries × 5 = 40 truth slots)
@@ -411,7 +419,7 @@ class VectorsSpec extends SparkSpec {
     val probes = Vectors.topProbeBuckets(qUnit, "query_id", "q",
       Vectors.centroidFrame(spark, back), 0, back.size)
     val served = hits(Vectors.ivfBatchTopKFromIndex(index, broadcast(probes), 10))
-    val truth = hits(Vectors.bruteForceTopK(emb, queries, 10))
+    val truth = hits(Vectors.topK(emb, Left(queries), 10))
     val recallPpm = 1000000L * served.intersect(truth).size / truth.size
     assert(recallPpm >= Vectors.trainedIvfFloorSmallC,
       s"distributed-trained artifact serve recall $recallPpm ppm under the floor")
@@ -593,12 +601,12 @@ class VectorsSpec extends SparkSpec {
   test("filtered ANN: neighbors come only from the allowed set, ranks re-close") {
     import org.apache.spark.sql.functions._
     val allowed = Seq(0L, 2L, 4L, 6L, 8L).toDF("vec_id")
-    val filtered = Vectors.bruteForceTopKFiltered(emb, allowed, Seq(1L), k = 3)
+    val filtered = Vectors.topK(emb, Left(Seq(1L)), 3, AnnSpec(Flat(Some(allowed))))
       .collect().map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Long]("rank")))
     assert(filtered.map(_._1).forall(Set(0L, 2L, 4L, 6L, 8L)))
     assert(filtered.map(_._2).sorted.toSeq === Seq(1L, 2L, 3L))
     // equals brute force restricted post-hoc, re-ranked
-    val full = Vectors.bruteForceTopK(emb, Seq(1L), k = 100)
+    val full = Vectors.topK(emb, Left(Seq(1L)), 100)
       .collect().map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Long]("rank")))
       .filter(p => Set(0L, 2L, 4L, 6L, 8L)(p._1))
       .sortBy(_._2).map(_._1).take(3)
@@ -625,10 +633,10 @@ class VectorsSpec extends SparkSpec {
     // n = ks = 16 → step 1, centroids = all vectors; each encodes to its own
     // index (squared distance 0), so the ADC score IS the true unit dot and
     // the PQ ranking must reproduce brute force
-    val brute = Vectors.bruteForceTopK(pq16, Seq(0L, 5L), k = 5)
+    val brute = Vectors.topK(pq16, Left(Seq(0L, 5L)), 5)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("neighbor_id")).toMap
-    val pq = Vectors.pqTopK(pq16, Seq(0L, 5L), k = 5, m = 4, ks = 16)
+    val pq = Vectors.topK(pq16, Left(Seq(0L, 5L)), 5, AnnSpec(score = Pq(m = 4, ks = 16)))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("neighbor_id")).toMap
     assert(pq === brute)
@@ -638,11 +646,10 @@ class VectorsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = (0L until 8L).toSeq
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k = 5))
-    val spaced = hits(Vectors.pqTopK(emb, queries, k = 5))
+    val exact = hits(Vectors.topK(emb, Left(queries), 5))
+    val spaced = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(score = Pq())))
     val book = Vectors.trainedPqCodebooks(emb, sampleTarget = 512)
-    val trained = hits(Vectors.pqTopKWithCodebook(
-      Vectors.withUnit(emb).select(col("vec_id"), col("unit")), queries, k = 5, 8, book))
+    val trained = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(score = PqCodebook(8, book))))
     val rSpaced = spaced.intersect(exact).size
     val rTrained = trained.intersect(exact).size
     assert(rTrained >= rSpaced, s"trained PQ recall $rTrained < spaced $rSpaced")
@@ -652,12 +659,13 @@ class VectorsSpec extends SparkSpec {
 
   test("ivf-pq: a single routing bucket degenerates to plain PQ") {
     // one centroid → every vector lands in bucket 0 → the candidate set is
-    // the whole corpus and IVF-PQ must reproduce pqTopK exactly (same
+    // the whole corpus and IVF-PQ must reproduce flat PQ exactly (same
     // spaced codebook, same ADC arithmetic)
-    val pq = Vectors.pqTopK(pq16, Seq(0L, 3L), k = 5, m = 4, ks = 16)
+    val pq = Vectors.topK(pq16, Left(Seq(0L, 3L)), 5, AnnSpec(score = Pq(m = 4, ks = 16)))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("neighbor_id")).toMap
-    val ivfpq = Vectors.ivfPqTopK(pq16, Seq(0L), Seq(0L, 3L), k = 5, m = 4, ks = 16)
+    val ivfpq = Vectors.topK(pq16, Left(Seq(0L, 3L)), 5,
+      AnnSpec(Ivf(Seq(0L)), score = Pq(m = 4, ks = 16)))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("neighbor_id")).toMap
     assert(ivfpq === pq)
@@ -667,21 +675,23 @@ class VectorsSpec extends SparkSpec {
     // shortlist = whole corpus → stage 2 re-scores everything exactly, so
     // the final ranking must BE the brute-force ranking regardless of how
     // lossy the PQ shortlist scores were
-    val brute = Vectors.bruteForceTopK(corpus, Seq(1L, 2L), k = 5)
+    val brute = Vectors.topK(corpus, Left(Seq(1L, 2L)), 5)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("neighbor_id")).toMap
-    val full = Vectors.pqRerankTopK(corpus, Seq(1L, 2L), k = 5, shortlist = 60)
+    val full = Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(score = Pq(), refine = Rerank(60)))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
         r.getAs[Long]("neighbor_id")).toMap
     assert(full === brute)
     // a partial shortlist can only improve on the raw PQ ranking (same
-    // candidates, exact scores) — recall is monotone vs plain pqTopK
-    val exact = hits(Vectors.bruteForceTopK(corpus, Seq(1L, 2L), k = 5))
-    val plain = hits(Vectors.pqTopK(corpus, Seq(1L, 2L), k = 5))
-    val rerank = hits(Vectors.pqRerankTopK(corpus, Seq(1L, 2L), k = 5, shortlist = 20))
+    // candidates, exact scores) — recall is monotone vs plain PQ
+    val exact = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5))
+    val plain = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5, AnnSpec(score = Pq())))
+    val rerank = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5,
+      AnnSpec(score = Pq(), refine = Rerank(20))))
     assert(rerank.intersect(exact).size >= plain.intersect(exact).size)
     // and the re-ranked neighbors are drawn from the PQ shortlist
-    val shortlist = hits(Vectors.pqTopK(corpus, Seq(1L, 2L), k = 20))
+    val shortlist = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 20, AnnSpec(score = Pq())))
     assert(rerank.subsetOf(shortlist))
   }
 
@@ -781,7 +791,7 @@ class VectorsSpec extends SparkSpec {
     assert(Set(10L, 11L).contains(mmr(0)._1))
     assert(!Set(10L, 11L).contains(mmr(1)._1))
     // the full plain top-3 WOULD have taken both twins
-    val plain = Vectors.bruteForceTopK(emb, Seq(0L), k = 3)
+    val plain = Vectors.topK(emb, Left(Seq(0L)), 3)
       .collect().map(_.getAs[Long]("neighbor_id")).toSet
     assert(Set(10L, 11L).subsetOf(plain))
     assert(mmr.map(_._2).toSeq === Seq(1L, 2L, 3L))
@@ -795,8 +805,9 @@ class VectorsSpec extends SparkSpec {
       (i, Array.fill(24)(rnd.nextFloat() * 2f - 1f))).toDF("vec_id", "embedding")
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"), r.getAs[Long]("rank"))).toSet
-    val jl = pairs(Vectors.jlRerankTopK(vecs, 0L until 4L, k = 5, planes = 8, shortlist = 40))
-    val bf = pairs(Vectors.bruteForceTopK(vecs, 0L until 4L, k = 5))
+    val jl = pairs(Vectors.topK(vecs, Left(0L until 4L), 5,
+      AnnSpec(score = Jl(8), refine = Rerank(40))))
+    val bf = pairs(Vectors.topK(vecs, Left(0L until 4L), 5))
     assert(jl === bf)
   }
 
@@ -814,8 +825,9 @@ class VectorsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     def hits(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val jl = hits(Vectors.jlRerankTopK(vecs, 0L until 8L, k = 5, planes = 16, shortlist = 40))
-    val bf = hits(Vectors.bruteForceTopK(vecs, 0L until 8L, k = 5))
+    val jl = hits(Vectors.topK(vecs, Left(0L until 8L), 5,
+      AnnSpec(score = Jl(16), refine = Rerank(40))))
+    val bf = hits(Vectors.topK(vecs, Left(0L until 8L), 5))
     val recall = jl.intersect(bf).size.toDouble / bf.size
     assert(recall >= 0.5, s"JL recall@5 was $recall")
   }
@@ -859,28 +871,28 @@ class VectorsSpec extends SparkSpec {
     // enough that the shortlist contains the whole true top-k
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = (0L until 8L).toSeq
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k = 10))
-    assert(hits(Vectors.annTopK(emb, queries, k = 10)) === exact)
+    val exact = hits(Vectors.topK(emb, Left(queries), 10))
+    assert(hits(Vectors.topK(emb, Left(queries), 10, Production)) === exact)
   }
 
   test("trained multi-probe: probing all trained buckets recovers brute force exactly") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val trained = Vectors.trainedCentroids(emb, c = 8, sampleTarget = 512)
     val queries = Seq(0L, 1L, 2L)
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k = 5))
-    val all = hits(Vectors.ivfTopKMultiProbeTrained(emb, trained, queries, k = 5,
-      nprobe = trained.size))
+    val exact = hits(Vectors.topK(emb, Left(queries), 5))
+    val all = hits(Vectors.topK(emb, Left(queries), 5,
+      AnnSpec(IvfTrained(trained), Nearest(trained.size))))
     assert(all === exact)
     // and the trained mp4 path is at least as good as trained single-probe
-    val mp4 = hits(Vectors.ivfTopKMultiProbeTrained(emb, trained, queries, k = 5, nprobe = 4))
-    val single = hits(Vectors.ivfTopKTrained(emb, trained, queries, k = 5))
+    val mp4 = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(IvfTrained(trained), Nearest(4))))
+    val single = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(IvfTrained(trained))))
     assert(mp4.intersect(exact).size >= single.intersect(exact).size)
   }
 
   test("multi-probe LSH: recall ≥ single-bucket; dense ranks per query") {
-    val exact = hits(Vectors.bruteForceTopK(corpus, Seq(1L, 2L), k = 5))
-    val single = hits(Vectors.lshTopK(corpus, Seq(1L, 2L), k = 5, dim = 8))
-    val mp = Vectors.lshTopKMultiProbe(corpus, Seq(1L, 2L), k = 5, dim = 8)
+    val exact = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5))
+    val single = hits(Vectors.topK(corpus, Left(Seq(1L, 2L)), 5, AnnSpec(Lsh(dim = 8))))
+    val mp = Vectors.topK(corpus, Left(Seq(1L, 2L)), 5, AnnSpec(Lsh(dim = 8), Hamming1))
     val mpHits = hits(mp)
     assert(mpHits.intersect(exact).size >= single.intersect(exact).size)
     // ranks are dense from 1 within each query (no dup candidates from the
@@ -896,14 +908,14 @@ class VectorsSpec extends SparkSpec {
     val queries = (0L until 8L).toSeq
     val target = 0.6
     val p = Vectors.tunedNprobe(emb, trained, queries, k = 5, target = target)
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k = 5))
-    val got = hits(Vectors.ivfTopKMultiProbeTrained(emb, trained, queries, k = 5, nprobe = p))
+    val exact = hits(Vectors.topK(emb, Left(queries), 5))
+    val got = hits(Vectors.topK(emb, Left(queries), 5, AnnSpec(IvfTrained(trained), Nearest(p))))
     val recall = got.intersect(exact).size.toDouble / exact.size
     assert(recall >= target || p === trained.size)
     // and it is minimal on the doubling grid: half the probes miss the target
     if (p > 1) {
-      val below = hits(Vectors.ivfTopKMultiProbeTrained(emb, trained, queries, k = 5,
-        nprobe = p / 2))
+      val below = hits(Vectors.topK(emb, Left(queries), 5,
+        AnnSpec(IvfTrained(trained), Nearest(p / 2))))
       assert(below.intersect(exact).size.toDouble / exact.size < target)
     }
   }
@@ -925,11 +937,11 @@ class VectorsSpec extends SparkSpec {
       .sortBy(_._1).zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }.toSeq
     val codebook = Vectors.spacedPqCodebook(unit, 16)
     val queries = (0L until 4L).toSeq
-    val parity = Vectors.ivfPqRerankTopK(emb, spacedIds, queries, k = 5,
-      nprobe = 2, shortlist = 20, m = 8, ks = 16)
+    val parity = Vectors.topK(emb, Left(queries), 5,
+      AnnSpec(Ivf(spacedIds), Nearest(2), Pq(8, 16), Rerank(20)))
       .orderBy("query_id", "rank").collect().map(_.toSeq)
-    val viaTrained = Vectors.ivfPqRerankTopKTrained(emb, centVecs, queries, k = 5,
-      nprobe = 2, shortlist = 20, m = 8, codebook = codebook)
+    val viaTrained = Vectors.topK(emb, Left(queries), 5,
+      AnnSpec(IvfTrained(centVecs), Nearest(2), PqCodebook(8, codebook), Rerank(20)))
       .orderBy("query_id", "rank").collect().map(_.toSeq)
     assert(viaTrained.toSeq === parity.toSeq)
   }
@@ -1211,9 +1223,10 @@ class VectorsSpec extends SparkSpec {
       .select(org.apache.spark.sql.functions.col("vec_id"),
         org.apache.spark.sql.functions.col("unit"))
     val queries = Seq(0L, 1L)
-    val exact = hits(Vectors.bruteForceTopK(emb, queries, k = 5))
-    val wide = hits(Vectors.pqRerankTopKWithCodebook(unit, queries, k = 5,
-      shortlist = emb.count().toInt, m = 16, centFlat = Vectors.spacedPqCodebook(unit, 64)))
+    val exact = hits(Vectors.topK(emb, Left(queries), 5))
+    val wide = hits(Vectors.topK(emb, Left(queries), 5,
+      AnnSpec(score = PqCodebook(16, Vectors.spacedPqCodebook(unit, 64)),
+        refine = Rerank(emb.count().toInt))))
     assert(wide === exact)
   }
 

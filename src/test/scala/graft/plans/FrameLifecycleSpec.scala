@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Every iterative loop, run through its registry entry at sf0.001, under
-  * two checks on the frames its [[PlanGuard.CheckpointChain]] manages:
+/** Every iterative loop and every registry entry of the one ANN pipeline
+  * (`Vectors.topK`), run through its registry entry at sf0.001, under two
+  * checks on the frames its [[PlanGuard.CheckpointChain]] manages:
   *   - use-after-release: no executed plan scans a checkpoint RDD that was
   *     already released when the plan ran. Unpersist events and query
   *     completions share the listener bus's shared queue, so they arrive
@@ -30,7 +31,11 @@ class FrameLifecycleSpec extends SparkSpec {
     "d9_dedup_groups_star", "t56_components", "s13_ann_mmr", "s24_ann_beam",
     "s26_beam_sweep", "s33_ann_beam_served", "s34_ann_beam_pruned",
     "x62_bpe_merges", "x63_bpe_fertility", "x65_bpe_fertility_deep",
-    "x66_bpe_fertility_served"
+    "x66_bpe_fertility_served",
+    "s1_ann_bruteforce", "s2_ann_ivf", "s3_ann_lsh", "s4_ann_ivf_multiprobe",
+    "s5_ann_lsh_multitable", "s6_ann_ivf_twolevel", "s7_ann_filtered",
+    "s8_ann_quantized", "s9_ann_pq", "s11_ann_ivfpq", "s12_ann_pq_rerank",
+    "s16_ann_jl", "s22_cross_knn", "s27_ann_default"
   ).map(n => n -> (() => SparkEntry.queries(n)(spark, dir))) ++ Seq(
     "artifact:dedup_groups" -> (() => {
       spark.sql(s"DROP TABLE IF EXISTS dedup_groups_$sfx")
