@@ -74,6 +74,17 @@ object Schemas {
   /** MV1 target: daily event-type counts (`README.md:155-165`). */
   final case class DailyEventCount(day: java.sql.Date, event_type: String, event_count: Long)
 
+  /** The MV1 partials table as [[graft.streaming.StreamingMVs.partialsWriter]]
+    * writes it: one micro-batch's counts per (day, event_type), tagged with
+    * its `batch_id` (null in rows a compaction rewrote), partitioned by
+    * `day`.
+    */
+  val dailyEventCountPartial: StructType = StructType(Seq(
+    StructField("event_type", StringType),
+    StructField("event_count", LongType),
+    StructField("batch_id", LongType),
+    StructField("day", DateType)))
+
   /** MV2 target: daily per-table event counts (`README.md:206-218`). */
   final case class DailyTableEventCount(
       day: java.sql.Date,

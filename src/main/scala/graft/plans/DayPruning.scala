@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{DateType, TimestampType}
 
-/** The one planning extension the engine ships (SURVEY.md §4): rewrite
+/** The engine's logical planning extension (SURVEY.md §4): rewrite
   * event-time range predicates to also constrain the `day` partition column.
+  * Its physical counterpart is [[BindTimesRule]].
   *
   * The storage layout partitions by `day = to_date(execute_time)`
   * ([[graft.binlog.Maintenance.writeEvents]], reference `README.md:115`),
@@ -118,13 +120,18 @@ object DayPruningRule extends Rule[LogicalPlan] {
   }
 }
 
-/** `SparkSessionExtensions` installer: the day-pruning rewrite plus the
-  * SQL-callable registration of the engine's custom expressions.
+/** `SparkSessionExtensions` installer: the day-pruning rewrite (optimizer),
+  * the time-bound binding ([[BindTimesRule]], before the columnar
+  * transitions and so before whole-stage codegen collapses the plan), and
+  * the SQL-callable registration of the engine's custom expressions.
   * Wire with `SparkSession.builder().withExtensions(GraftExtensions(_))`.
   */
 object GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DayPruningRule)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = BindTimesRule
+    })
     ext.injectFunction(org.apache.spark.sql.graft.DotProduct.registration)
     ext.injectFunction(org.apache.spark.sql.graft.QuantizeCode.registration)
     ext.injectFunction(org.apache.spark.sql.graft.DequantizeDot.registration)

@@ -431,6 +431,8 @@ object PlanGuard {
       case a: Alias => boundedKeyClass(a.child)
       case c: Cast => boundedKeyClass(c.child)
       case l: Literal => l.foldable
+      // a time literal that BindTimesRule bound in a physical plan
+      case _: BoundTime => true
       case Pmod(_, r, _) => r.foldable
       case Remainder(_, r, _) => r.foldable
       case BitwiseAnd(l, r) => l.foldable || r.foldable
@@ -980,7 +982,9 @@ object PlanGuard {
   }
 
   /** Does the predicate contain a literal IN-list (In with literal values,
-    * or the optimizer's InSet form)? The bounded-key filter idiom.
+    * or the optimizer's InSet form)? The bounded-key filter idiom. Exact on
+    * physical plans too: [[BindTimesRule]] binds comparison operands and
+    * aliased values only, never `In`/`InSet` value lists.
     */
   private def hasLiteralInList(cond: Expression): Boolean = cond.exists {
     case In(_, values) =>

@@ -79,11 +79,20 @@ object StreamingMVs {
     else raw
 
   /** The M3 read path over the partials table (re-sum view), replayed
-    * batches deduped first ([[dedupReplays]]).
+    * batches deduped first ([[dedupReplays]]). Two jobs: the table is read
+    * with its declared schema ([[graft.binlog.Schemas.dailyEventCountPartial]],
+    * no schema-inference job), and one exchange on (day, event_type) serves
+    * both the dedup on (batch_id, day, event_type) and the re-sum, so the
+    * plan is one shuffle-map job and one result job. Compacted rows read a
+    * null `batch_id`; compaction leaves one row per (day, event_type), so the
+    * dedup keeps each of them.
     */
-  def readDailyCounts(spark: org.apache.spark.sql.SparkSession, targetPath: String): DataFrame =
-    DailyCounts.resum(dedupReplays(spark.read.parquet(targetPath), Seq("day", "event_type")),
-      Seq("day", "event_type"))
+  def readDailyCounts(spark: org.apache.spark.sql.SparkSession, targetPath: String): DataFrame = {
+    val keys = Seq("day", "event_type")
+    val partials = spark.read.schema(graft.binlog.Schemas.dailyEventCountPartial)
+      .parquet(targetPath).repartition(keys.map(col): _*)
+    DailyCounts.resum(dedupReplays(partials, keys), keys)
+  }
 
   /** b30's mergeable-QUANTILE MV maintained by the stream — the
     * [[partialsWriter]] discipline applied to percentiles: each

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.graft.TestHooks
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -79,6 +82,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case r: ReusedSubqueryExec => Seq(r.child)
       case other => other.children ++ other.subqueries
     }).foreach(foreachNode(_)(f))
+  }
+
+  /** The result of `body` and the number of classes codegen compiled while
+    * it ran (codegen cache misses; suites run one at a time in the JVM).
+    */
+  def compiledClasses[T](body: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+  }
+
+  /** The result of `body` and the number of Spark jobs started while it ran. */
+  def jobsRun[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val bus = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    TestHooks.drainListeners(sc)
+    sc.addSparkListener(bus)
+    val out = try { val o = body; TestHooks.drainListeners(sc); o }
+      finally sc.removeSparkListener(bus)
+    (out, jobs.get())
   }
 
   /** The session is shared across every suite in the JVM, and many ops

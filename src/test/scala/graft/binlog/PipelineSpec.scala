@@ -2,8 +2,6 @@ package graft.binlog
 
 import java.sql.Timestamp
 
-import org.apache.spark.graft.TestHooks
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions._
@@ -224,12 +222,8 @@ class PipelineSpec extends SparkSpec {
     val layout = computedLayout("pipeline_shape")
     appendLateEvent(layout, Timestamp.valueOf("2024-02-15 12:02:00"), "late-gtid")
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val eventScans = new java.util.concurrent.atomic.AtomicInteger()
     val eventRoot = new org.apache.hadoop.fs.Path(layout.eventTable).toUri.getPath
-    val bus = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
     val queries = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         foreachNode(qe.executedPlan) {
@@ -240,21 +234,13 @@ class PipelineSpec extends SparkSpec {
         }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    TestHooks.drainListeners(sc)
     val persistedBefore = sc.getPersistentRDDs.keySet.toSet
-    sc.addSparkListener(bus)
     spark.listenerManager.register(queries)
-    val written = try {
-      val n = Pipeline.runCompute(spark, layout, now)
-      TestHooks.drainListeners(sc)
-      n
-    } finally {
-      spark.listenerManager.unregister(queries)
-      sc.removeSparkListener(bus)
-    }
-    info(s"jobs: ${jobs.get()}")
+    val (written, jobs) = try jobsRun(Pipeline.runCompute(spark, layout, now))
+      finally spark.listenerManager.unregister(queries)
+    info(s"jobs: $jobs")
     assert(written === 3)
-    assert(jobs.get() <= 8, s"${jobs.get()} jobs")
+    assert(jobs <= 8, s"$jobs jobs")
     assert(eventScans.get() === 1)
     assert(sc.getPersistentRDDs.keySet.toSet -- persistedBefore === Set.empty)
   }
