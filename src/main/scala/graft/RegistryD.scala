@@ -4,7 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 import graft.binlog.{BinlogEvents, DailyCounts, Ingest, TransactionStats}
-import graft.ops.{Dedup, TextOps, Vectors, Vocab}
+import graft.ops.{Dedup, PairSpec, TextOps, Vectors, Vocab}
+import graft.ops.PairSpec._
 
 import RegistryLib._
 
@@ -42,17 +43,15 @@ private[graft] object RegistryD {
     "d2_jaccard_pairs" -> ((s, dir) => {
       // hash token ids are a pure projection (no vocabulary build / join),
       // then the inverted shingle-id index
-      val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir))
-      Dedup.jaccardPairsFromShingles(Dedup.shingleIdsFromArrays(ids, 5), threshold = 0.5)
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)), PairSpec(Grams(5)))
     }),
     "d7_dedup_groups" -> ((s, dir) => {
       // the step after pair generation: connected components over the
       // near-dup graph (keep-min canonical representative per group).
       // Auto form: min-label rounds for the tight-cluster common case,
       // star-contraction fallback if a long chain keeps it from converging
-      val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir))
       Dedup.dedupGroupsAuto(
-        Dedup.jaccardPairsFromShingles(Dedup.shingleIdsFromArrays(ids, 5), threshold = 0.5))
+        Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)), PairSpec(Grams(5))))
     }),
     "d23_dup_cluster_profile" -> ((s, dir) => {
       // the governance histogram over d7's components: how many duplicate
@@ -73,9 +72,8 @@ private[graft] object RegistryD {
       // small-star contraction — the variant adversarially long chains need
       // (min-label propagation is diameter-bound); same output contract,
       // same recursive-CTE oracle
-      val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir))
       Dedup.dedupGroupsStar(
-        Dedup.jaccardPairsFromShingles(Dedup.shingleIdsFromArrays(ids, 5), threshold = 0.5))
+        Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)), PairSpec(Grams(5))))
     }),
     "d3_minhash_sigs" -> ((s, dir) =>
       // all k signatures as ONE codegen projection over the token-id array
@@ -84,13 +82,13 @@ private[graft] object RegistryD {
       Dedup.minhashSignaturesFromIdArrays(
         Vocab.hashTokenIdArrays(Tables.documents(s, dir)))),
     "d4_minhash_pairs" -> ((s, dir) =>
-      Dedup.candidatePairsFromSignatures(
-        Dedup.minhashShingleSignaturesFromArrays(
-          Vocab.hashTokenIdArrays(Tables.documents(s, dir)), 5), bands = 4)),
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+        PairSpec(Grams(5), MinHash(4), verify = Keys))),
     "d26_winnow_overlap" -> ((s, dir) =>
       // plagiarism-style overlap: pairs sharing >= 3 winnowed fingerprints
       // under the df cap — the sparse-index pair join winnowing exists for
-      Dedup.winnowOverlapPairs(Tables.documents(s, dir))),
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+        PairSpec(Winnow(5, 4), verify = Shared(3L)))),
     "d25_snapshot_diff" -> ((s, dir) => {
       // rev-over-rev governance: docs <400 play the old rev, docs ≥100
       // the new (every-7th modified) — added/removed/changed/same counts
@@ -108,8 +106,8 @@ private[graft] object RegistryD {
       // once (threshold 0), histogrammed by score decile — one pass
       // answers "what would each cutoff keep?" instead of re-running d2
       // per candidate threshold
-      val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir))
-      Dedup.jaccardPairsFromShingles(Dedup.shingleIdsFromArrays(ids, 5), threshold = 0.0)
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+          PairSpec(Grams(5), verify = Jaccard(0.0)))
         .groupBy(floor(col("jaccard") * 10).cast("long").as("score_band"))
         .agg(count(lit(1)).as("n_pairs"), max(col("jaccard")).as("max_jaccard"))
     }),
@@ -117,9 +115,8 @@ private[graft] object RegistryD {
       // the LSH candidates scored by the signature-slot-match estimator
       // itself (no shingle re-read per pair — candidate scoring touches
       // only k-long signature rows, metadata-sized at any document length)
-      Dedup.minhashEstimatedPairs(
-        Dedup.minhashShingleSignaturesFromArrays(
-          Vocab.hashTokenIdArrays(Tables.documents(s, dir)), 5), bands = 4)),
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+        PairSpec(Grams(5), MinHash(4), verify = Estimate))),
     "d30_idf_cosine" -> ((s, dir) =>
       // IR-weighted near-dup scoring: sparse cosine over 5-gram shingle
       // features with quantized ⌊10⁶/df⌋ weights — rare shared shingles
@@ -129,22 +126,19 @@ private[graft] object RegistryD {
       // rare-feature index, verified over full feature sets. Unigram
       // features would be vacuous here: the corpus has 31 distinct tokens,
       // every one hot — shingles are where rarity lives (as d2 relies on)
-      Dedup.idfCosinePairs(
-        Dedup.shingleIdsFromArrays(
-          Vocab.hashTokenIdArrays(Tables.documents(s, dir)), 5)
-          .withColumnRenamed("shingle_id", "token_id"),
-        threshold = 0.5)),
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+        PairSpec(Grams(5), verify = IdfCosine(0.5)))),
     "d36_band_sweep" -> ((s, dir) => {
       // d29 swept across configurations: precision/recall of 2/4/8-band
       // LSH vs the same exact-Jaccard truth — the (bands, rows) tuning
       // table read BEFORE committing a 100 TB banding pass. One shared
-      // signature table; each config adds only its band-key join
+      // signature table (the aggregated signature frame `pairs` persists);
+      // each config adds only its band-key join
       val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir)).persist()
       val sh = Dedup.shingleIdsFromArrays(ids, 5)
-      val sigs = Dedup.minhashSignaturesFromShingles(sh).persist()
-      val truth = Dedup.jaccardPairsFromShingles(sh, threshold = 0.5).persist()
+      val truth = Dedup.pairs(sh, PairSpec()).persist()
       Seq(2, 4, 8).map { b =>
-        Dedup.sketchConfusion(truth, Dedup.candidatePairsFromSignatures(sigs, b))
+        Dedup.sketchConfusion(truth, Dedup.pairs(sh, PairSpec(sign = MinHash(b), verify = Keys)))
           .withColumn("bands", lit(b.toLong))
       }.reduce(_ unionByName _)
     }),
@@ -156,9 +150,8 @@ private[graft] object RegistryD {
       // are df/bucket-capped, the outer join is pair-set-sized
       val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir)).persist()
       Dedup.sketchConfusion(
-        Dedup.jaccardPairsFromShingles(Dedup.shingleIdsFromArrays(ids, 5), threshold = 0.5),
-        Dedup.candidatePairsFromSignatures(
-          Dedup.minhashShingleSignaturesFromArrays(ids, 5), bands = 4))
+        Dedup.pairs(ids, PairSpec(Grams(5))),
+        Dedup.pairs(ids, PairSpec(Grams(5), MinHash(4), verify = Keys)))
     }),
     "d5_simhash" -> ((s, dir) =>
       // the codegen projection form — identical to the ±1-sum aggregation
@@ -169,7 +162,8 @@ private[graft] object RegistryD {
       // codegen projection pass — no explode, no 60-wide agg), 4×15-bit
       // band keys (pigeonhole covers hamming ≤ 3), df-capped buckets, one
       // XOR popcount per candidate — no shingle re-read, no float
-      Dedup.simhashPairsFromArrays(Vocab.hashTokenIdArrays(Tables.documents(s, dir)))),
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+        PairSpec(Ids, SimHash(60, 4), verify = Hamming(3)))),
     "d10_neardup_keep_first" -> ((s, dir) =>
       // ingest-order near-dup filter (batch twin of streamingNearDup):
       // keep a doc iff no smaller doc_id claims any of its band signatures
@@ -183,9 +177,8 @@ private[graft] object RegistryD {
       // character 3-gram Jaccard (tokenization-free near-dup) with the
       // df-capped index: hot trigrams never enter the candidate self-join;
       // verification recomputes exact intersections over the full sets
-      Dedup.jaccardPairsBlocked(
-        Dedup.shingleIdsFromArrays(Dedup.charIds(Tables.documents(s, dir)), 3),
-        threshold = 0.5, maxDf = 20L)),
+      Dedup.pairs(Dedup.charIds(Tables.documents(s, dir)),
+        PairSpec(Grams(3), candidates = Candidates(Some(20L)), verify = Jaccard(0.5)))),
     "d14_incremental_dedup" -> ((s, dir) => {
       // ingestion-time screen for a growing corpus: which docs of the
       // incoming batch (src0/src1 play the new arrivals) are already
@@ -260,10 +253,8 @@ private[graft] object RegistryD {
       // governance view: which source pairs re-serve each other's content —
       // the d2 near-dup pair graph rolled up to canonical source pairs
       val docs = Tables.documents(s, dir)
-      val ids = Vocab.hashTokenIdArrays(docs)
       Dedup.crossSourceDupMatrix(
-        Dedup.jaccardPairsFromShingles(Dedup.shingleIdsFromArrays(ids, 5), threshold = 0.5),
-        docs)
+        Dedup.pairs(Vocab.hashTokenIdArrays(docs), PairSpec(Grams(5))), docs)
     }),
     "d37_source_overlap" -> ((s, dir) =>
       // corpus cartography: exact shingle-set Jaccard between every source
@@ -277,9 +268,9 @@ private[graft] object RegistryD {
       // index — the point-query twin of d2's all-pairs sweep (and of the
       // ANN point lookups s1/s22 on the vector side). Integer-ppm scores
       // keep the per-query ranking cross-engine exact
-      val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir))
-      Dedup.similarDocsTopK(Dedup.shingleIdsFromArrays(ids, 5),
-        queryPred = col("doc_id") % 7 === 0, k = 3)
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+        PairSpec(Grams(5), candidates = Candidates(queries = Some(col("doc_id") % 7 === 0)),
+          verify = TopK(3)))
     }),
     "d39_index_staleness" -> ((s, dir) => {
       // the shingle index's maintenance path is a REBUILD DECISION, not
@@ -304,8 +295,8 @@ private[graft] object RegistryD {
       // asymmetric near-dup: excerpt/quote detection — containment
       // |∩|/min(|A|,|B|) catches a short doc embedded in a long one where
       // Jaccard ≈ |A|/|B| stays under any threshold
-      val ids = Vocab.hashTokenIdArrays(Tables.documents(s, dir))
-      Dedup.containmentPairs(Dedup.shingleIdsFromArrays(ids, 5), threshold = 0.8)
+      Dedup.pairs(Vocab.hashTokenIdArrays(Tables.documents(s, dir)),
+        PairSpec(Grams(5), verify = Containment(0.8)))
     }),
     "d17_incremental_vector_dedup" -> ((s, dir) => {
       // d14's embedding analog: new vectors (vec_id % 10 < 2 plays the

@@ -159,8 +159,8 @@ private[graft] object RegistryLib {
   val oracleJaccardCtes: String = oracleJaccardCtesAt(0.5)
 
   /** The df-capped candidate/verify tail over ANY `sh(doc_id, shingle_id)`
-    * relation — the identical cap [[graft.ops.Dedup.jaccardPairsFromShingles]]
-    * applies (candidates must share a feature with 1 < df ≤ cap; scores
+    * relation — the identical cap [[graft.ops.Dedup.pairs]]' default
+    * candidates stage applies (candidates must share a feature with 1 < df ≤ cap; scores
     * are exact over the full sets). Shared by the token-5-gram front-end
     * (d2/d7/d9) and the frame-fingerprint front-end (m8).
     */
@@ -550,12 +550,12 @@ private[graft] object RegistryLib {
 
   /** LSH band pairs over the 8-hash MinHash signature of *shingle* ids
     * (5-gram rolling polynomial over token ids): 4 bands × 2 rows — matches
-    * [[Dedup.minhashCandidatePairs]] with bands = 4, shingleK = 5. The
+    * [[Dedup.pairs]] with `PairSpec(Grams(5), MinHash(4), verify = Keys)`. The
     * shingle fold is `list_reduce` with an explicit 0 seed, mirroring
     * Spark's `aggregate(slice(ids, i, 5), 0, (a,t) -> (a*37 + t + 1) % p)`.
     */
   /** Band-collision predicate over the 8-sig table aliases x/y (4 bands ×
-    * 2 rows — matches [[Dedup.candidatePairsFromSignatures]] with bands=4).
+    * 2 rows — matches [[Dedup.pairs]]' `MinHash(4)` band keys).
     */
   val oracleBandEq: String = (0 until 4)
     .map(bi => s"(x.sig_${2 * bi} = y.sig_${2 * bi} AND x.sig_${2 * bi + 1} = y.sig_${2 * bi + 1})")
@@ -589,7 +589,7 @@ private[graft] object RegistryLib {
 
   val oracleMinhashPairs: String = {
     // band-key membership cap — the identical cap
-    // [[Dedup.candidatePairsFromSignatures]] applies (keys claimed by more
+    // [[Dedup.pairs]] applies to `MinHash` band keys (keys claimed by more
     // than `cap` documents are dropped from pair enumeration)
     val cap = graft.ops.Dedup.defaultMaxDf
     s"""WITH $oracleSigCtes,

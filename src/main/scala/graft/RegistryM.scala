@@ -26,9 +26,9 @@ private[graft] object RegistryM {
       // fingerprint SETS through the shared df-capped candidate/verify
       // machinery — m4 asks "which frames repeat", this asks "which
       // documents overlap"; a viral intro frame is capped at the index
-      Dedup.jaccardPairsFromShingles(
+      Dedup.pairs(
         graft.ops.Multimodal.frameSignatures(Tables.documents(s, dir), frameChars = 100),
-        threshold = 0.5)),
+        graft.ops.PairSpec())),
     // ---- multimodal plumbing ----
     "m1_binary_meta" -> ((s, dir) =>
       graft.ops.Multimodal.decodeExpr(Tables.documents(s, dir))),
@@ -61,7 +61,7 @@ private[graft] object RegistryM {
   val oracles: Map[String, String] = Map(
     "m8_frame_jaccard" ->
       // the frame-set front-end + the shared df-capped Jaccard tail —
-      // mirrors Multimodal.frameSignatures → Dedup.jaccardPairsFromShingles
+      // mirrors Multimodal.frameSignatures → Dedup.pairs (given shingles, Jaccard)
       s"""WITH sh AS (
          |  SELECT DISTINCT doc_id,
          |         md5(substring(text, CAST(i * 100 + 1 AS INT), 100)) AS shingle_id

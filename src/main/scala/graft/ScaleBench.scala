@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{AnnSpec, Dedup, Vectors, Vocab}
+import graft.ops.{AnnSpec, Dedup, PairSpec, Vectors, Vocab}
 
 /** Synthetic scale probe for the dedup/ANN surface (round-3 verdict "next"
   * #5): no sf1 testdata exists, so build one in-bench — the sf0.1 corpus
@@ -75,25 +75,23 @@ object ScaleBench {
     var scaleTag = "warm"
     val queries: Seq[(String, DataFrame => DataFrame, Boolean)] = Seq(
       ("d2_jaccard_pairs", (d: DataFrame) =>
-        Dedup.jaccardPairsFromShingles(
-          Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5), threshold = 0.5), true),
+        Dedup.pairs(Vocab.hashTokenIdArrays(d), PairSpec(PairSpec.Grams(5))), true),
       ("d4_minhash_pairs", (d: DataFrame) =>
-        Dedup.candidatePairsFromSignatures(
-          Dedup.minhashSignaturesFromShingles(
-            Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5)), bands = 4), true),
+        Dedup.pairs(Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5),
+          PairSpec(sign = PairSpec.MinHash(4), verify = PairSpec.Keys)), true),
       ("d7_dedup_groups", (d: DataFrame) =>
         Dedup.dedupGroupsAuto(
-          Dedup.jaccardPairsFromShingles(
-            Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5), threshold = 0.5)), true),
+          Dedup.pairs(Vocab.hashTokenIdArrays(d), PairSpec(PairSpec.Grams(5)))), true),
       ("d10_neardup_keep_first", (d: DataFrame) => Dedup.nearDupKeepFirst(d), true),
       ("d38_similar_docs", (d: DataFrame) =>
         // point-query retrieval through the df-capped index: query count
         // grows 8× with the corpus, candidates stay postings-bounded
-        Dedup.similarDocsTopK(
-          Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5),
-          queryPred = col("doc_id") % 97 === 0, k = 3), true),
+        Dedup.pairs(Vocab.hashTokenIdArrays(d), PairSpec(PairSpec.Grams(5),
+          candidates = PairSpec.Candidates(queries = Some(col("doc_id") % 97 === 0)),
+          verify = PairSpec.TopK(3))), true),
       ("d22_simhash_pairs", (d: DataFrame) =>
-        Dedup.simhashPairsFromArrays(Vocab.hashTokenIdArrays(d)), true),
+        Dedup.pairs(Vocab.hashTokenIdArrays(d),
+          PairSpec(PairSpec.Ids, PairSpec.SimHash(60, 4), verify = PairSpec.Hamming(3))), true),
       ("s2_ann_ivf", (e: DataFrame) => {
         val n = e.count()
         Vectors.topK(e, Left(0L until 8L), k = 5, AnnSpec(AnnSpec.Ivf(Vectors.spacedCentroidIds(n))))
@@ -132,9 +130,8 @@ object ScaleBench {
       ("d30_idf_cosine", (d: DataFrame) =>
         // weighted-cosine candidate/verify split: candidates stay rare-
         // feature-bounded as the corpus multiplies
-        Dedup.idfCosinePairs(
-          Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5)
-            .withColumnRenamed("shingle_id", "token_id"), threshold = 0.5), true),
+        Dedup.pairs(Vocab.hashTokenIdArrays(d),
+          PairSpec(PairSpec.Grams(5), verify = PairSpec.IdfCosine(0.5))), true),
       ("x37_cdc_chunks", (d: DataFrame) =>
         // per-char lead-chain window — must scale with chars, not chars²
         graft.ops.TextOps.cdcChunks(d), true),
@@ -185,8 +182,7 @@ object ScaleBench {
       ("m8_frame_jaccard", (d: DataFrame) =>
         // frame-set Jaccard rides the same df-capped machinery as d2 —
         // repeated frames across the ×8 copies must stay cap-bounded
-        Dedup.jaccardPairsFromShingles(
-          graft.ops.Multimodal.frameSignatures(d, frameChars = 100), threshold = 0.5), true),
+        Dedup.pairs(graft.ops.Multimodal.frameSignatures(d, frameChars = 100), PairSpec()), true),
       ("s27_ann_default", (e: DataFrame) =>
         // the compressed full scan: cost must track N (one byte-code pass
         // per query batch), never N² — the production default's cost model
@@ -613,8 +609,7 @@ object ScaleBench {
     val hotDocs = scaledDocs(8).select(col("doc_id"),
       concat(col("text"), lit(" standard legal disclaimer boilerplate appended to every document")).as("text"))
     val (hotSec, hotRows) = time("hot_shingle", () =>
-      Dedup.jaccardPairsFromShingles(
-        Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(hotDocs), 5), threshold = 0.5))
+      Dedup.pairs(Vocab.hashTokenIdArrays(hotDocs), PairSpec(PairSpec.Grams(5))))
     System.err.println(f"[scale hot] d2_jaccard_pairs          $hotSec%8.2f s  $hotRows%10d rows")
 
     def sect(rs: Seq[(String, Double, Long)]): String =

@@ -91,11 +91,14 @@ object Maintenance {
     fs.exists(p)
   }
 
-  /** A9 compaction: rewrite MV partials fully collapsed (the explicit analog
-    * of a SummingMergeTree background merge, `README.md:143-145`).
-    * Preserves the hive layout when a partition column is given (the MV
-    * writers partition by `day` — rewriting flat would make later
-    * partitioned appends unreadable). The swap keeps the old table as
+  /** A9 compaction of the MV1 partials table
+    * ([[Schemas.dailyEventCountPartial]]): rewrite it fully collapsed on
+    * (day, event_type), replayed batches deduped first (the explicit
+    * analog of a SummingMergeTree background merge, `README.md:143-145`).
+    * The table is read with its declared schema, so a replayed batch is
+    * deduped even when the table already holds compacted files. Keeps the
+    * `day` hive layout the MV writer appends to (rewriting flat would make
+    * later partitioned appends unreadable). The swap keeps the old table as
     * `<path>_old` until the new one is in place, so a crash mid-swap never
     * loses both copies.
     *
@@ -107,15 +110,13 @@ object Maintenance {
     * (or [[recoverCompaction]] at startup) rolls `_old` back before
     * proceeding, so no manual surgery is needed.
     */
-  def compactPartials(spark: SparkSession, path: String, keys: Seq[String],
-      valueCol: String = "event_count", partitionCol: Option[String] = Some("day")): Unit = {
+  def compactPartials(spark: SparkSession, path: String): Unit = {
     recoverCompaction(spark, path)
-    val raw = spark.read.parquet(path)
+    val keys = Seq("day", "event_type")
+    val raw = spark.read.schema(Schemas.dailyEventCountPartial).parquet(path)
     val compacted = DailyCounts.compact(
-      graft.streaming.StreamingMVs.dedupReplays(raw, keys), keys, valueCol)
-    val writer = compacted.write.mode(SaveMode.Overwrite)
-    swapIn(spark, path)(
-      partitionCol.filter(keys.contains).fold(writer)(c => writer.partitionBy(c)).parquet(_))
+      graft.streaming.StreamingMVs.dedupReplays(raw, keys, "event_count"), keys)
+    swapIn(spark, path)(compacted.write.mode(SaveMode.Overwrite).partitionBy("day").parquet(_))
   }
 
   /** Roll back a compaction that crashed between its two renames: if

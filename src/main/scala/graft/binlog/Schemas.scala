@@ -85,6 +85,28 @@ object Schemas {
     StructField("batch_id", LongType),
     StructField("day", DateType)))
 
+  /** b30's histogram partials table as
+    * [[graft.streaming.StreamingMVs.histogramPartialsWriter]] writes it:
+    * one micro-batch's (day, event_type, value-cent) counts, tagged with its
+    * `batch_id`, partitioned by `day`.
+    */
+  val histogramPartial: StructType = StructType(Seq(
+    StructField("event_type", StringType),
+    StructField("v_c", LongType),
+    StructField("cnt", LongType),
+    StructField("batch_id", LongType),
+    StructField("day", DateType)))
+
+  /** The count-min partials table as
+    * [[graft.streaming.StreamingMVs.countMinPartialsWriter]] writes it: one
+    * micro-batch's (row, bucket) counters, tagged with its `batch_id`.
+    */
+  val sketchPartial: StructType = StructType(Seq(
+    StructField("r", IntegerType),
+    StructField("bucket", LongType),
+    StructField("c", LongType),
+    StructField("batch_id", LongType)))
+
   /** MV2 target: daily per-table event counts (`README.md:206-218`). */
   final case class DailyTableEventCount(
       day: java.sql.Date,

@@ -1,12 +1,21 @@
 package graft.ops
 
 import graft.plans.PlanGuard.GuardedCheckpointOps
+import graft.sources.BucketedLayout
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{MinHashSigs, PositionalShingleHash, ShingleHash, SimHashBits,
+  TokenHashArray, WinnowHash}
 
 /** Deduplication operators for training-data curation over `documents`:
-  * exact, shingle-Jaccard near-dup, MinHash signatures + LSH banding, and
-  * SimHash. (Embedding-cosine near-dup lives in [[Vectors]].)
+  * exact, near-dup pairs, grouping and keep-best, block and span dedup,
+  * and decontamination. (Embedding-cosine near-dup lives in [[Vectors]].)
+  *
+  * Every near-dup pair operator — shingle Jaccard, containment, idf
+  * cosine, winnow overlap, MinHash-LSH candidates and estimates, SimHash
+  * Hamming pairs and the per-doc more-like-this top-k — is one
+  * [[PairSpec]](shingle, sign, candidates, verify) run by [[pairs]].
   *
   * Scale design notes:
   *   - Exact dedup is one hash aggregation on the text (or a digest of it) —
@@ -106,25 +115,6 @@ object Dedup {
       .select(col("doc_id"), explode(array_distinct(sh)).as("shingle"))
   }
 
-  /** Near-duplicate pairs by shingle Jaccard ≥ `threshold`, via inverted
-    * index self-join (no O(n²) cross join): candidate pairs are documents
-    * sharing ≥ 1 shingle; Jaccard = |∩| / (|A| + |B| − |∩|).
-    * Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
-    */
-  def jaccardPairs(docs: DataFrame, k: Int = 5, threshold: Double = 0.5): DataFrame =
-    jaccardPairsFromShingles(
-      shingles(docs, k).withColumnRenamed("shingle", "shingle_id"), threshold)
-
-  /** Jaccard near-dup over *shingle ids* (the rolling-polynomial k-gram ids
-    * of [[shingleIds]]) instead of shingle strings: the inverted-index
-    * self-join keys become fixed-width longs, cutting shuffle bytes and
-    * comparison cost several-fold at corpus scale. Identical output to the
-    * string form up to (engine-consistent) fold collisions — the oracle
-    * computes the same ids, so results always agree.
-    */
-  def jaccardPairsById(tokenIds: DataFrame, k: Int = 5, threshold: Double = 0.5): DataFrame =
-    jaccardPairsFromShingles(shingleIds(tokenIds, k), threshold)
-
   /** Default document-frequency cap for candidate generation (shingle df in
     * the Jaccard index, membership per LSH band key). Every pairwise
     * candidate join in this file runs behind this cap: a feature shared by
@@ -141,159 +131,183 @@ object Dedup {
     */
   val defaultMaxDf: Long = 20L
 
-  /** Core inverted-index Jaccard over a (doc_id, shingle_id) table —
-    * df-capped ([[defaultMaxDf]]): candidates must share a RARE shingle;
-    * scores are then exact over the FULL sets (see [[jaccardPairsBlocked]],
-    * the single code path d2/d7/d9/d11 all run through).
+  /** Near-duplicate pairs: the one pair-producing code path. Every pair
+    * operator is a [[PairSpec]] run through the same four stages:
+    *
+    *   1. shingle: per-document features as (doc_id, keys…) rows, or as an
+    *      id-array projection ([[PairSpec.Grams]], [[PairSpec.Winnow]],
+    *      [[PairSpec.Ids]]) that stays inside whole-stage codegen;
+    *   2. sign: the join key — the feature itself, or a MinHash band /
+    *      SimHash chunk generated at the join from a signature projection
+    *      (keys stored as an array column cost about 3× more);
+    *   3. candidates: keys claimed by more than `maxDf` documents never
+    *      enter the join ([[dfCappedIndex]]), then one self-join on the key
+    *      with `doc_a < doc_b`, or `query ≠ neighbor` in the point-query
+    *      form;
+    *   4. verify: the candidate pairs themselves, or scores over the FULL
+    *      feature sets, signatures or fingerprints — the cap bounds
+    *      candidates, never scores (the classic candidate-generation /
+    *      verification split: only recall is capped).
+    *
+    * Persist points: the feature rows when verify reads them again; a
+    * signature frame when it is an aggregation (a band sweep over one
+    * shingle frame shares it) or the estimate re-reads it; capped LSH key
+    * rows, which feed the cap count and both join sides.
+    *
+    * Output per verify: `Keys` (doc_a, doc_b); `Jaccard` (doc_a, doc_b,
+    * n_common, jaccard); `Containment` (doc_a, doc_b, n_common,
+    * containment); `IdfCosine` (doc_a, doc_b, dw, cos_ppm); `Estimate`
+    * (doc_a, doc_b, est_jaccard); `Hamming` (doc_a, doc_b, hamming);
+    * `Shared` (doc_a, doc_b, n_shared); `TopK` (query_id, neighbor_id,
+    * n_common, sim_ppm, rank).
     */
-  def jaccardPairsFromShingles(shingles: DataFrame, threshold: Double,
-      maxDf: Long = defaultMaxDf): DataFrame =
-    jaccardPairsBlocked(shingles, threshold, maxDf)
+  def pairs(features: DataFrame, spec: PairSpec): DataFrame = {
+    import PairSpec._
+    val grams: Option[Column] = spec.shingle match {
+      case Grams(k) => Some(ShingleHash.column(col("ids"), k))
+      case Winnow(k, w) => Some(WinnowHash.column(col("ids"), k, w))
+      case Ids => Some(col("ids"))
+      case _ => None
+    }
+    val exploded = grams.fold(spec.shingle match {
+      case Words(k) => shingles(features, k).withColumnRenamed("shingle", "shingle_id")
+      case _ => features
+    })(g => features.select(col("doc_id"), explode(g).as("shingle_id")))
+    val rows = spec.verify match {
+      // idf weights count each (doc, feature) once
+      case IdfCosine(_) => exploded.select(col("doc_id"), col("shingle_id")).distinct().persist()
+      case Jaccard(_) | Containment(_) | TopK(_) => exploded.persist()
+      case _ => exploded
+    }
+    val featureKeys = spec.shingle match { case Given(ks) => ks; case _ => Seq("shingle_id") }
+    lazy val sigs = {
+      val s = grams.fold(signaturesOver(rows, "shingle_id"))(signatures(features, _))
+      if (grams.isEmpty || spec.verify == Estimate) s.persist() else s
+    }
+    val (keyed, keys, carry) = spec.sign match {
+      case Unsigned => (rows, featureKeys, Nil)
+      case MinHash(bands) => (keyRows(sigs, minhashBands(bands)), Seq("band", "key"), Nil)
+      case SimHash(bits, chunks) =>
+        require(bits % chunks == 0 && bits < 63, s"bits=$bits must split into $chunks bands")
+        require(spec.verify match { case Hamming(h) => chunks > h; case _ => true },
+          "pigeonhole needs more bands than differing bits")
+        val ids = grams.getOrElse(throw new IllegalArgumentException("SimHash signs an id array"))
+        (keyRows(simhashFromArrays(features.select(col("doc_id"), ids.as("ids")), bits),
+          simhashChunks(bits, chunks), Seq("simhash")), Seq("band", "key"), Seq("simhash"))
+    }
+    val idx = spec.candidates.maxDf.fold(keyed) { cap =>
+      dfCappedIndex(if (spec.sign == Unsigned) keyed else keyed.persist(), cap, keys)
+    }
+    val joined = keyJoin(idx, keys, carry, spec.candidates.queries)
+    lazy val cand = joined.select(col("doc_a"), col("doc_b")).distinct()
+    spec.verify match {
+      case Keys => cand
+      case Shared(m) =>
+        joined.groupBy(col("doc_a"), col("doc_b"))
+          .agg(count(lit(1)).as("n_shared")).filter(col("n_shared") >= m)
+      case Hamming(h) =>
+        // one XOR popcount per candidate: no feature re-read, no float
+        joined.select(col("doc_a"), col("doc_b"),
+            bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).cast("long").as("hamming"))
+          .filter(col("hamming") <= h).distinct()
+      case Estimate =>
+        // matching slots / k: an unbiased Jaccard estimate from the k-long
+        // signature rows alone, exact in binary for k = 8
+        def side(s: String) = sigs.select(col("doc_id").as(s"doc_$s") +:
+          minhashCoeffs.indices.map(i => col(s"sig_$i").as(s"${s}_$i")): _*)
+        val matches = minhashCoeffs.indices
+          .map(i => when(col(s"a_$i") === col(s"b_$i"), 1).otherwise(0)).reduce(_ + _)
+        cand.join(side("a"), Seq("doc_a")).join(side("b"), Seq("doc_b")).select(col("doc_a"),
+          col("doc_b"), (matches.cast("double") / minhashCoeffs.size).as("est_jaccard"))
+      case v => setScores(cand, rows, keys, v)
+    }
+  }
 
-  /** Shared scoring tail of the Jaccard variants: attach set sizes to the
-    * (doc_a, doc_b, n_common) intersections, compute |∩|/(|A|+|B|−|∩|),
-    * threshold. One definition keeps d2 and d11 in lockstep with the
-    * oracle's formula.
+  /** The candidate join: `idx` (doc_id, keys…, carry…) against itself on
+    * the keys, as (doc_a, doc_b, keys…, carry_a…, carry_b…) rows — one row
+    * per shared key, `doc_a < doc_b`, or `doc_a ≠ doc_b` with only
+    * `queries` rows probing.
     */
-  private def jaccardFromIntersections(inter: DataFrame, sizes: DataFrame,
-      threshold: Double): DataFrame =
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_shingles", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_shingles", "nb"), "doc_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
+  private def keyJoin(idx: DataFrame, keys: Seq[String], carry: Seq[String],
+      queries: Option[Column]): DataFrame = {
+    def side(s: String, df: DataFrame) = df.select(col("doc_id").as(s"doc_$s") +:
+      (keys.map(col) ++ carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a", queries.fold(idx)(idx.filter))
+      .join(side("b", idx), keys)
+      .filter(if (queries.isEmpty) col("doc_a") < col("doc_b") else col("doc_a") =!= col("doc_b"))
+  }
+
+  /** Verification over the FULL feature sets `rows` (doc_id, keys…): each
+    * candidate's overlap — shared rows, or Σ w² of the quantized
+    * w = ⌊10⁶/df⌋ idf weights — against each side's own (`sizes`, if a
+    * ledger already holds it), then the spec's score and cut. Each
+    * candidate costs |A| join rows, and candidates are few by
+    * construction.
+    *
+    * Weights are integers so every partial sum is a long: exact,
+    * overflow-safe (≤ 10¹² per term) and independent of aggregation order
+    * — a float idf would hit libm `log` rounding and fold-order
+    * nondeterminism across engines. The only float math left is one
+    * division and two IEEE-exact sqrts per pair. Top-k scores are integer
+    * ppm, so the (sim_ppm desc, neighbor_id asc) ranking is cross-engine
+    * exact.
+    */
+  private def setScores(cand: DataFrame, rows: DataFrame, keys: Seq[String],
+      verify: PairSpec.Verify, sizes: Option[DataFrame] = None): DataFrame = {
+    val (sets, weight, overlap, name) = verify match {
+      case PairSpec.IdfCosine(_) =>
+        val w = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
+          .select(keys.map(col) :+ floor(lit(1000000L) / col("df")).cast("long").as("w"): _*)
+        (rows.join(w, keys).persist(), Seq("w"), sum(col("w") * col("w")), "dw")
+      case _ => (rows, Nil, count(lit(1)), "n_common")
+    }
+    val own = sizes.getOrElse(sets.groupBy(col("doc_id")).agg(overlap.as("n")))
+    val scored = cand
+      .join(sets.select(col("doc_id").as("doc_a") +: (keys ++ weight).map(col): _*), Seq("doc_a"))
+      .join(sets.select(col("doc_id").as("doc_b") +: keys.map(col): _*), "doc_b" +: keys)
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(overlap.as(name))
+      .join(own.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
+      .join(own.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
+    def cut(score: String, value: Column, t: Double, out: Column*) = scored.withColumn(score, value)
+      .filter(col(score) >= t).select(col("doc_a") +: col("doc_b") +: out: _*)
+    val common = col("n_common").cast("double")
+    verify match {
+      case PairSpec.Jaccard(t) => cut("jaccard", common / (col("na") + col("nb") - col("n_common")),
+        t, col("n_common"), col("jaccard"))
+      case PairSpec.Containment(t) => cut("containment", common / least(col("na"), col("nb")),
+        t, col("n_common"), col("containment"))
+      case PairSpec.IdfCosine(t) => cut("cosine", col("dw").cast("double") /
+          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))),
+        t, col("dw"), floor(lit(1e6) * col("cosine")).cast("long").as("cos_ppm"))
+      case PairSpec.TopK(k) =>
+        val perQuery = Window.partitionBy(col("query_id"))
+          .orderBy(col("sim_ppm").desc, col("neighbor_id").asc)
+        scored
+          .select(col("doc_a").as("query_id"), col("doc_b").as("neighbor_id"), col("n_common"),
+            expr("n_common * 1000000 div (na + nb - n_common)").as("sim_ppm"))
+          .withColumn("rank", row_number().over(perQuery))
+          .filter(col("rank") <= k)
+          .select(col("query_id"), col("neighbor_id"), col("n_common"),
+            col("sim_ppm"), col("rank").cast("long").as("rank"))
+      case v => throw new IllegalArgumentException(s"$v does not score feature sets")
+    }
+  }
 
   /** Character code-point id sequence per document — the tokenization-free
     * front-end for CHARACTER n-gram near-dup (whitespace tokenization is
-    * meaningless for unsegmented scripts). `token_hash` of a 1-char string
-    * is its code point (one fold step), so the same codegen'd expression
-    * serves both granularities and the oracle's `unicode(c)` matches
-    * exactly.
+    * meaningless for unsegmented scripts): [[PairSpec.Grams]] over this
+    * frame. `token_hash` of a 1-char string is its code point (one fold
+    * step), so the same codegen'd expression serves both granularities and
+    * the oracle's `unicode(c)` matches exactly.
     */
   def charIds(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      org.apache.spark.sql.graft.TokenHashArray.column(split(col("text"), "")).as("ids"))
-
-  /** Jaccard near-dup with a document-frequency-capped inverted index — the
-    * hot-shingle mitigation char n-grams REQUIRE: a trigram like "the"
-    * appears in nearly every document, so the plain inverted-index
-    * self-join would generate Θ(f²) candidate rows per hot shingle
-    * (quadratic in corpus size — the d2 word-5-gram surface dodges this
-    * only because 5-token shingles are rare by construction). Here the
-    * index keeps only shingles with `1 < df ≤ maxDf`; candidate pairs must
-    * share a RARE shingle, then the exact intersection over the FULL
-    * shingle sets (hot included) computes the true Jaccard — the classic
-    * candidate-generation / verification split, so scores are exact and
-    * only recall changes (a pair whose every shared shingle is hot is
-    * missed; at any real similarity threshold such pairs share rare
-    * shingles too). The SQL oracle applies the identical cap, so results
-    * match row-for-row.
-    */
-  def jaccardPairsBlocked(shingles: DataFrame, threshold: Double, maxDf: Long): DataFrame = {
-    val sh = shingles.persist()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val idx = dfCappedIndex(sh, maxDf)
-    val cand = idx.as("x")
-      .join(idx.as("y"),
-        col("x.shingle_id") === col("y.shingle_id") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    // verification: exact |A ∩ B| over the full sets — each candidate pair
-    // costs |A| join rows, and candidates are few by construction
-    val inter = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle_id")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle_id")), Seq("doc_b", "shingle_id"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    jaccardFromIntersections(inter, sizes, threshold)
-  }
-
-  /** Containment near-dup pairs — the ASYMMETRIC similarity that catches
-    * excerpts, quotes, and truncated variants Jaccard misses: a short
-    * document wholly contained in a long one has |∩|/|∪| ≈ |A|/|B| (tiny)
-    * but containment |∩|/min(|A|,|B|) = 1. Same df-capped candidate
-    * generation / exact verification as [[jaccardPairsBlocked]] — only the
-    * scoring formula differs. Output: (doc_a, doc_b, n_common, containment)
-    * with doc_a < doc_b, containment ≥ `threshold`.
-    */
-  def containmentPairs(shingles: DataFrame, threshold: Double,
-      maxDf: Long = defaultMaxDf): DataFrame = {
-    val sh = shingles.persist()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val idx = dfCappedIndex(sh, maxDf)
-    val cand = idx.as("x")
-      .join(idx.as("y"),
-        col("x.shingle_id") === col("y.shingle_id") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val inter = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle_id")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle_id")), Seq("doc_b", "shingle_id"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_shingles", "na"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_shingles", "nb"), "doc_b")
-      .withColumn("containment",
-        col("n_common").cast("double") / least(col("na"), col("nb")))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("containment"))
-  }
-
-  /** Lexical "more-like-this" retrieval — the point-query form of the pair
-    * surface: for every QUERY document (rows matching `queryPred`), the
-    * `k` corpus documents with the highest exact Jaccard similarity, found
-    * through the same df-capped inverted index as [[jaccardPairsBlocked]]
-    * (candidates must share a rare shingle with the query; scores are then
-    * exact over the FULL sets). This is what d2's all-pairs sweep can't
-    * answer cheaply: "given THIS doc, what already looks like it?" — the
-    * curation-time lookup (and the lexical twin of the ANN point queries
-    * s1/s22, as BM25/x33 is of term search).
-    *
-    * Similarity is emitted as integer ppm (`n_common·10⁶ div union`) so the
-    * top-k ordering — (sim_ppm DESC, neighbor_id ASC) — is cross-engine
-    * exact, the t19/x29 integer-score discipline. The per-query rank window
-    * partitions on query_id and candidates per query are index-bounded
-    * (df ≤ cap per shared shingle), so no window partition can melt a task.
-    *
-    * Output: (query_id, neighbor_id, n_common, sim_ppm, rank ≤ k).
-    */
-  def similarDocsTopK(shingles: DataFrame, queryPred: Column, k: Int = 3,
-      maxDf: Long = defaultMaxDf): DataFrame = {
-    val sh = shingles.persist()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val idx = dfCappedIndex(sh, maxDf)
-    val qidx = idx.filter(queryPred)
-      .select(col("doc_id").as("query_id"), col("shingle_id"))
-    val cand = qidx.join(idx, Seq("shingle_id"))
-      .filter(col("query_id") =!= col("doc_id"))
-      .select(col("query_id"), col("doc_id").as("neighbor_id"))
-      .distinct()
-    val inter = cand
-      .join(sh.select(col("doc_id").as("query_id"), col("shingle_id")), Seq("query_id"))
-      .join(sh.select(col("doc_id").as("neighbor_id"), col("shingle_id")),
-        Seq("neighbor_id", "shingle_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(count(lit(1)).as("n_common"))
-    val scored = inter
-      .join(sizes.withColumnRenamed("doc_id", "query_id").withColumnRenamed("n_shingles", "na"), "query_id")
-      .join(sizes.withColumnRenamed("doc_id", "neighbor_id").withColumnRenamed("n_shingles", "nb"), "neighbor_id")
-      .withColumn("sim_ppm", expr("n_common * 1000000 div (na + nb - n_common)"))
-    val perQuery = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim_ppm").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(perQuery))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("n_common"),
-        col("sim_ppm"), col("rank").cast("long").as("rank"))
-  }
+      TokenHashArray.column(split(col("text"), "")).as("ids"))
 
   /** Build-if-absent persisted SHINGLE index — the postings/IVF build-once
     * discipline applied to the lexical more-like-this surface
-    * ([[similarDocsTopK]], the x60/x64 eval's TRUTH side): three tables,
+    * ([[pairs]] with `TopK`, the x60/x64 eval's TRUTH side): three tables,
     * built from one shingle pass —
     *
     *   - `table`: the df-capped candidate index (shingle_id, doc_id),
@@ -314,9 +328,8 @@ object Dedup {
   def materializedShingleIndex(docs: DataFrame, table: String, k: Int = 5,
       maxDf: Long = defaultMaxDf, buckets: Int = 32): Unit = {
     val spark = docs.sparkSession
-    graft.sources.BucketedLayout.buildIfAbsent(spark, table) {
-      val sh = shingleIdsFromArrays(graft.ops.Vocab.hashTokenIdArrays(docs), k)
-        .persist()
+    BucketedLayout.buildIfAbsent(spark, table) {
+      val sh = shingleIdsFromArrays(Vocab.hashTokenIdArrays(docs), k).persist()
       // the side tables are dropped UNCONDITIONALLY inside the main table's
       // cold-build block (the writeCentroidLedger discipline, round-8
       // ADVICE): a build-if-absent here would let _sh/_sizes survive a torn
@@ -327,63 +340,34 @@ object Dedup {
       // location sweep.
       spark.sql(s"DROP TABLE IF EXISTS ${table}_sh")
       spark.sql(s"DROP TABLE IF EXISTS ${table}_sizes")
-      graft.sources.BucketedLayout.buildIfAbsent(spark, table + "_sh") {
-        graft.sources.BucketedLayout.writeBucketed(
-          sh.select(col("doc_id"), col("shingle_id")), table + "_sh",
-          "doc_id", buckets)
+      BucketedLayout.buildIfAbsent(spark, table + "_sh") {
+        BucketedLayout.writeBucketed(sh, table + "_sh", "doc_id", buckets)
       }
-      graft.sources.BucketedLayout.buildIfAbsent(spark, table + "_sizes") {
-        graft.sources.BucketedLayout.writeBucketed(
-          sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles")),
+      BucketedLayout.buildIfAbsent(spark, table + "_sizes") {
+        BucketedLayout.writeBucketed(sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles")),
           table + "_sizes", "doc_id", 8)
       }
-      graft.sources.BucketedLayout.writeBucketed(
-        dfCappedIndex(sh, maxDf).select(col("shingle_id"), col("doc_id")),
-        table, "shingle_id", buckets)
+      val capped = dfCappedIndex(sh, maxDf).select(col("shingle_id"), col("doc_id"))
+      BucketedLayout.writeBucketed(capped, table, "shingle_id", buckets)
       sh.unpersist()
       ()
     }
     ()
   }
 
-  /** [[similarDocsTopK]] SERVED from a persisted
-    * [[materializedShingleIndex]] — identical candidate generation
-    * (df-capped index), identical exact scoring (full sets + the sizes
-    * ledger), identical integer-ppm ranking, zero shingle derivation per
-    * query: results hash-equal the recompute form (spec-pinned), which is
-    * what lets the x67 eval run its truth side build-once.
+  /** The [[pairs]] `TopK` point query SERVED from a persisted
+    * [[materializedShingleIndex]] — the same candidate join (over the
+    * df-capped index) and the same set scores (over the full sets and the
+    * sizes ledger), zero shingle derivation per query: results hash-equal
+    * the recompute form (spec-pinned), which is what lets the x67 eval run
+    * its truth side build-once.
     */
   def similarDocsTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, queryPred: Column, k: Int = 3): DataFrame = {
-    val idx = spark.table(table)
-    val sh = spark.table(table + "_sh")
-    val sizes = spark.table(table + "_sizes")
-    val qidx = idx.filter(queryPred)
-      .select(col("doc_id").as("query_id"), col("shingle_id"))
-    val cand = qidx.join(idx, Seq("shingle_id"))
-      .filter(col("query_id") =!= col("doc_id"))
-      .select(col("query_id"), col("doc_id").as("neighbor_id"))
-      .distinct()
-    val inter = cand
-      .join(sh.select(col("doc_id").as("query_id"), col("shingle_id")), Seq("query_id"))
-      .join(sh.select(col("doc_id").as("neighbor_id"), col("shingle_id")),
-        Seq("neighbor_id", "shingle_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(count(lit(1)).as("n_common"))
-    val scored = inter
-      .join(sizes.withColumnRenamed("doc_id", "query_id")
-        .withColumnRenamed("n_shingles", "na"), "query_id")
-      .join(sizes.withColumnRenamed("doc_id", "neighbor_id")
-        .withColumnRenamed("n_shingles", "nb"), "neighbor_id")
-      .withColumn("sim_ppm", expr("n_common * 1000000 div (na + nb - n_common)"))
-    val perQuery = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim_ppm").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(perQuery))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("n_common"),
-        col("sim_ppm"), col("rank").cast("long").as("rank"))
+    setScores(keyJoin(spark.table(table), Seq("shingle_id"), Nil, Some(queryPred))
+        .select(col("doc_a"), col("doc_b")).distinct(),
+      spark.table(table + "_sh"), Seq("shingle_id"), PairSpec.TopK(k),
+      Some(spark.table(table + "_sizes").select(col("doc_id"), col("n_shingles").as("n"))))
   }
 
   /** Staleness / REBUILD-decision report for a persisted
@@ -439,43 +423,18 @@ object Dedup {
     } finally { missing.unpersist(); () }
   }
 
-  /** Winnowing overlap pairs — what winnowing fingerprints exist FOR
-    * (plagiarism / near-copy detection, Schleimer et al. SIGMOD 2003):
-    * document pairs sharing at least `minShared` SELECTED fingerprints
-    * (each shared fingerprint certifies a shared token run of ≥ w+k−1).
-    * The candidate index is the winnowed set — ~2/(w+1) the density of
-    * d2's full shingle index, so the pair join costs that factor SQUARED
-    * less — under the same df cap (a fingerprint in more than `maxDf`
-    * docs is boilerplate, not copying evidence, and counting it would
-    * both melt the join and inflate scores; capped-index sharing IS the
-    * operator's score, by design, on both engine and oracle).
-    */
-  def winnowOverlapPairs(docs: DataFrame, k: Int = 5, w: Int = 4,
-      minShared: Long = 3L, maxDf: Long = defaultMaxDf): DataFrame = {
-    // per-doc distinct is guaranteed by the expression itself
-    val fps = graft.ops.Vocab.hashTokenIdArrays(docs).select(col("doc_id"),
-      explode(org.apache.spark.sql.graft.WinnowHash.column(col("ids"), k, w))
-        .as("shingle_id"))
-    val idx = dfCappedIndex(fps, maxDf)
-    idx.as("a")
-      .join(idx.as("b"),
-        col("a.shingle_id") === col("b.shingle_id") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
-
-  /** The df-capped inverted index: rows of `sh` whose shingle has
-    * `1 < df ≤ maxDf` (singletons can never produce a pair; hot shingles
+  /** The df-capped inverted index: rows of `sh` whose key has
+    * `1 < df ≤ maxDf` (singletons can never produce a pair; hot keys
     * must never enter a self-join). Index SIZE is O(rows kept) — linear in
-    * f per shingle, never Θ(f²) — which DedupSpec pins with a
-    * 10 000-document boilerplate-shingle corpus.
+    * f per key, never Θ(f²) — which DedupSpec pins with a 10 000-document
+    * boilerplate-shingle corpus.
     */
-  private[graft] def dfCappedIndex(sh: DataFrame, maxDf: Long): DataFrame = {
-    val rare = sh.groupBy(col("shingle_id")).agg(count(lit(1)).as("c"))
+  private[graft] def dfCappedIndex(sh: DataFrame, maxDf: Long,
+      keys: Seq[String] = Seq("shingle_id")): DataFrame = {
+    val rare = sh.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1 && col("c") <= maxDf)
-      .select(col("shingle_id"))
-    sh.join(rare, Seq("shingle_id"), "left_semi")
+      .select(keys.map(col): _*)
+    sh.join(rare, keys, "left_semi")
   }
 
   /** MinHash parameters: k independent linear hashes over token ids,
@@ -486,12 +445,10 @@ object Dedup {
   val minhashCoeffs: Seq[(Long, Long)] =
     Seq((7L, 3L), (11L, 5L), (13L, 17L), (19L, 23L), (29L, 31L), (37L, 41L), (43L, 47L), (53L, 59L))
 
-  /** MinHash signatures over [[Vocab.tokenIds]] (distinct token ids per doc):
-    * one aggregation computing all k minima. Output: doc_id, sig_0 … sig_{k-1}.
+  /** MinHash signatures as one aggregation computing all k minima over
+    * (doc_id, `featureCol`) rows (duplicates are harmless: min is
+    * duplicate-insensitive). Output: doc_id, sig_0 … sig_{k-1}.
     */
-  def minhashSignatures(tokenIds: DataFrame): DataFrame =
-    signaturesOver(tokenIds.select(col("doc_id"), col("token_id")).distinct(), "token_id")
-
   private def signaturesOver(features: DataFrame, featureCol: String): DataFrame = {
     val aggs = minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
       min((col(featureCol) * a + b) % minhashPrime).as(s"sig_$i")
@@ -504,8 +461,19 @@ object Dedup {
     * arrays ("too short to sign").
     */
   def minhashSigsCol(ids: Column): Column =
-    org.apache.spark.sql.graft.MinHashSigs.column(ids,
+    MinHashSigs.column(ids,
       typedlit(minhashCoeffs.map(_._1)), typedlit(minhashCoeffs.map(_._2)))
+
+  /** Signatures as a pure PROJECTION of an id-array column: (doc_id,
+    * carry…, sig_0 … sig_{k−1}); documents whose array is empty or null
+    * emit no row.
+    */
+  private def signatures(df: DataFrame, ids: Column, carry: Seq[String] = Nil): DataFrame = {
+    val kept = col("doc_id") +: carry.map(col)
+    df.select(kept :+ minhashSigsCol(ids).as("sigs"): _*)
+      .filter(col("sigs").isNotNull)
+      .select(kept ++ minhashCoeffs.indices.map(i => col("sigs")(i).as(s"sig_$i")): _*)
+  }
 
   /** Signatures as a pure PROJECTION over an id-array frame
     * (doc_id, `idsCol`: array<bigint>) — the no-shuffle form of
@@ -518,10 +486,7 @@ object Dedup {
     * pins both equivalences). Output: doc_id, sig_0 … sig_{k−1}.
     */
   def minhashSignaturesFromIdArrays(idsDf: DataFrame, idsCol: String = "ids"): DataFrame =
-    idsDf
-      .withColumn("sigs", minhashSigsCol(col(idsCol)))
-      .filter(col("sigs").isNotNull)
-      .select(col("doc_id") +: minhashCoeffs.indices.map(i => col("sigs")(i).as(s"sig_$i")): _*)
+    signatures(idsDf, col(idsCol))
 
   /** Shingle-set signatures over a (doc_id, ids) token-id-array frame
     * ([[Vocab.hashTokenIdArrays]] shape) — the shingle fold and all k
@@ -529,29 +494,16 @@ object Dedup {
     * never exploded.
     */
   def minhashShingleSignaturesFromArrays(idsDf: DataFrame, k: Int = 5): DataFrame =
-    minhashSignaturesFromIdArrays(
-      idsDf.select(col("doc_id"),
-        org.apache.spark.sql.graft.ShingleHash.column(col("ids"), k).as("sids")),
-      "sids")
+    signatures(idsDf, ShingleHash.column(col("ids"), k))
 
-  /** Shingle-id stream: ordered token-id array per doc, folded into k-gram
-    * ids with a rolling polynomial `(acc·37 + id + 1) mod p`. Shingle-set
-    * MinHash (vs token-set) is what makes LSH meaningful when the vocabulary
-    * is small relative to the corpus: token *sets* of long documents over a
-    * small vocabulary are all nearly identical (every band collides — the
-    * candidate set degenerates to all-pairs, O(n²) again), while k-gram
-    * sequences stay discriminative.
-    */
-  def shingleIds(tokenIds: DataFrame, k: Int = 5): DataFrame =
-    shingleIdsFromArrays(
-      tokenIds
-        .groupBy(col("doc_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("token_id")))).as("pt"))
-        .select(col("doc_id"), transform(col("pt"), p => p.getField("token_id")).as("ids")),
-      k)
-
-  /** Same, over a pre-assembled (doc_id, ids) table ([[Vocab.tokenIdArrays]]
-    * fast path — no explode/regroup). The fold runs in the codegen'd
+  /** Shingle-id stream: the ordered token-id array per doc ((doc_id, ids),
+    * [[Vocab.hashTokenIdArrays]] or [[Vocab.tokenIdArrays]]) folded into
+    * k-gram ids with a rolling polynomial `(acc·37 + id + 1) mod p`.
+    * Shingle-set MinHash (vs token-set) is what makes LSH meaningful when
+    * the vocabulary is small relative to the corpus: token *sets* of long
+    * documents over a small vocabulary are all nearly identical (every band
+    * collides — the candidate set degenerates to all-pairs, O(n²) again),
+    * while k-gram sequences stay discriminative. The fold runs in the codegen'd
     * [[org.apache.spark.sql.graft.ShingleHash]] expression (higher-order
     * functions are interpreted — the HOF chain this replaces paid n·k lambda
     * evaluations plus a per-window slice allocation per document, and this
@@ -561,149 +513,53 @@ object Dedup {
     */
   def shingleIdsFromArrays(idsDf: DataFrame, k: Int = 5): DataFrame =
     idsDf.select(col("doc_id"),
-      explode(org.apache.spark.sql.graft.ShingleHash.column(col("ids"), k)).as("shingle_id"))
-
-  /** MinHash signatures over shingle ids — the scale-correct variant used by
-    * the LSH banding query.
-    */
-  def minhashShingleSignatures(tokenIds: DataFrame, k: Int = 5): DataFrame =
-    signaturesOver(shingleIds(tokenIds, k), "shingle_id")
+      explode(ShingleHash.column(col("ids"), k)).as("shingle_id"))
 
   /** Signatures over a precomputed (doc_id, shingle_id) table. */
   def minhashSignaturesFromShingles(shingles: DataFrame): DataFrame =
     signaturesOver(shingles, "shingle_id")
 
-  /** LSH banding over the minhash signature: `bands` bands of
-    * k/bands rows each; candidate pairs collide on (band, band-signature).
-    * Output: (doc_a, doc_b) distinct candidate pairs.
+  /** LSH key rows: one (doc_id, carry…, band, key) row per struct of
+    * `keys`. The keys are generated here, at the join: stored as an array
+    * column they took about 3× longer to compute.
     */
-  def minhashCandidatePairs(tokenIds: DataFrame, bands: Int = 4, shingleK: Int = 0,
-      maxBucket: Long = defaultMaxDf): DataFrame =
-    candidatePairsFromSignatures(
-      if (shingleK > 0) minhashShingleSignatures(tokenIds, shingleK)
-      else minhashSignatures(tokenIds),
-      bands, maxBucket)
-
-  /** LSH banding over a precomputed signature table (doc_id, sig_0…), with
-    * the band-key twin of the Jaccard df cap ([[defaultMaxDf]]): a band
-    * signature claimed by f documents would emit Θ(f²) pairs in one join
-    * key — exactly the hot-shingle failure mode, with a near-clone cluster
-    * playing the viral boilerplate. Keys with membership > maxBucket are
-    * dropped from pair enumeration (such clusters belong to the O(m)
-    * keep-first / grouping screens, not pairwise output); the oracle
-    * applies the identical cap.
-    */
-  def candidatePairsFromSignatures(sigs: DataFrame, bands: Int,
-      maxBucket: Long = defaultMaxDf): DataFrame = {
-    val rowsPerBand = minhashCoeffs.size / bands
-    val bandCols = (0 until bands).map { bi =>
-      struct(
-        lit(bi).as("band"),
-        // uniform inner field names so the band structs share one type
-        struct((0 until rowsPerBand).map(ri => col(s"sig_${bi * rowsPerBand + ri}").as(s"r$ri")): _*)
-          .as("sig")
-      )
-    }
-    val banded = sigs
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.sig").as("sig"))
-      .persist() // both self-join sides share the signature computation
-    val cool = banded.groupBy(col("band"), col("sig")).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= maxBucket)
-      .select(col("band"), col("sig"))
-    val b = banded.join(cool, Seq("band", "sig"), "left_semi")
-    b.as("x")
-      .join(b.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
+  private def keyRows(frame: DataFrame, keys: Seq[Column], carry: Seq[String] = Nil): DataFrame = {
+    val kept = col("doc_id") +: carry.map(col)
+    frame.select(kept :+ explode(array(keys: _*)).as("b"): _*)
+      .select(kept ++ Seq(col("b.band").as("band"), col("b.key").as("key")): _*)
   }
 
-  /** LSH candidates scored by the MinHash ESTIMATE itself — the stage a
-    * 100 TB near-dup pass actually runs when exact verification is too
-    * expensive to afford per pair: est_jaccard = (matching signature
-    * slots) / k, an unbiased estimator of the true shingle Jaccard
-    * (E[1{min_i(A)=min_i(B)}] = J). The exact paths (d2/d11) re-read the
-    * full shingle sets per candidate; this one touches only the k-long
-    * signature rows — candidate scoring is metadata-sized regardless of
-    * document length. Signature frames join back on doc id (hash joins on
-    * the capped candidate set). Output: (doc_a, doc_b, est_jaccard),
-    * est exact in binary for k = 8 (eighths), so cross-engine hash-stable.
+  /** The MinHash-LSH band key, defined once: band b of `bands` is the
+    * struct of signature rows b·r … b·r+r−1 (r = k/bands). Two documents
+    * collide iff some band's rows all match.
     */
-  def minhashEstimatedPairs(sigsIn: DataFrame, bands: Int,
-      maxBucket: Long = defaultMaxDf): DataFrame = {
-    val k = minhashCoeffs.size
-    // the signature projection feeds the band join AND both score sides —
-    // persist it so the corpus front-end runs once, not three times
-    val sigs = sigsIn.persist()
-    val cand = candidatePairsFromSignatures(sigs, bands, maxBucket)
-    val sa = sigs.select(col("doc_id").as("doc_a") +:
-      minhashCoeffs.indices.map(i => col(s"sig_$i").as(s"a_$i")): _*)
-    val sb = sigs.select(col("doc_id").as("doc_b") +:
-      minhashCoeffs.indices.map(i => col(s"sig_$i").as(s"b_$i")): _*)
-    val matches = minhashCoeffs.indices
-      .map(i => when(col(s"a_$i") === col(s"b_$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    cand
-      .join(sa, Seq("doc_a"))
-      .join(sb, Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        (matches.cast("double") / k).as("est_jaccard"))
+  private def minhashBands(bands: Int): Seq[Column] = {
+    val r = minhashCoeffs.size / bands
+    // uniform inner field names so the band structs share one type
+    (0 until bands).map(b => struct(lit(b).as("band"),
+      struct((0 until r).map(i => col(s"sig_${b * r + i}").as(s"r$i")): _*).as("key")))
   }
 
-  /** Inverse-df-weighted sparse cosine similarity pairs — the IR-style
-    * complement of set Jaccard (d2/d11): two documents score high for
-    * sharing RARE terms even when their full vocabularies diverge, the
-    * weighting that finds topical twins where Jaccard needs verbatim
-    * overlap. Candidate generation reuses the df-capped inverted index
-    * (candidates must share a term with 1 < df ≤ maxDf), verification runs
-    * over the FULL term sets — the d11 candidate/verify split, so scores
-    * are exact and only recall is capped.
-    *
-    * Weights are QUANTIZED to integers — w_t = ⌊10⁶/df_t⌋ — so every
-    * partial sum (norms, dot products) is a long: exact, overflow-safe
-    * (≤ 10¹² per term, docs have ≲ 10³ distinct terms), and independent of
-    * aggregation order. A float idf (ln N/df) would hit two cross-engine
-    * traps at once: libm `log` is not correctly rounded, and double sums
-    * depend on partition fold order. The only float math left is one
-    * division and two IEEE-exact sqrts per PAIR, identical operand bits in
-    * both engines — the same discipline as d6's threshold compare.
-    *
-    * Input: exploded (doc_id, token_id) rows (dupes fine — distinct'd
-    * here). Output: (doc_a, doc_b, dw, cos_ppm) for cosine ≥ threshold.
+  /** SimHash chunk keys: chunk i is bits [i·w, (i+1)·w) of the fingerprint
+    * (w = bits/chunks). Hamming ≤ h with chunks > h forces one identical
+    * chunk by pigeonhole, so chunk equality enumerates a candidate
+    * superset.
     */
-  def idfCosinePairs(tokenIds: DataFrame, threshold: Double = 0.5,
-      maxDf: Long = defaultMaxDf): DataFrame = {
-    val terms = tokenIds.select(col("doc_id"), col("token_id")).distinct().persist()
-    val w = terms.groupBy(col("token_id"))
-      .agg(count(lit(1)).as("df"))
-      .select(col("token_id"), floor(lit(1000000L) / col("df")).cast("long").as("w"))
-    val tw = terms.join(w, Seq("token_id")).persist()
-    val norms = tw.groupBy(col("doc_id")).agg(sum(col("w") * col("w")).as("nsq"))
-    val idx = dfCappedIndex(
-      terms.select(col("doc_id"), col("token_id").as("shingle_id")), maxDf)
-    val cand = idx.as("x")
-      .join(idx.as("y"),
-        col("x.shingle_id") === col("y.shingle_id") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    // shared-term weight products: w_t is term-determined, so the pair dot
-    // is Σ w_t² over A ∩ B — each candidate costs |A| join rows, and
-    // candidates are few by construction
-    val dots = cand
-      .join(tw.select(col("doc_id").as("doc_a"), col("token_id"), col("w")), Seq("doc_a"))
-      .join(tw.select(col("doc_id").as("doc_b"), col("token_id")), Seq("doc_b", "token_id"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(sum(col("w") * col("w")).as("dw"))
-    dots
-      .join(norms.select(col("doc_id").as("doc_a"), col("nsq").as("na")), Seq("doc_a"))
-      .join(norms.select(col("doc_id").as("doc_b"), col("nsq").as("nb")), Seq("doc_b"))
-      .withColumn("cosine", col("dw").cast("double") /
-        (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-      .filter(col("cosine") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("dw"),
-        floor(lit(1e6) * col("cosine")).cast("long").as("cos_ppm"))
+  private def simhashChunks(bits: Int, chunks: Int): Seq[Column] = {
+    val w = bits / chunks
+    (0 until chunks).map(i => struct(lit(i).as("band"),
+      shiftright(col("simhash"), i * w).bitwiseAND((1L << w) - 1).as("key")))
+  }
+
+  /** MinHash-LSH band keys of documents' text: (doc_id, carry…, band,
+    * key), one row per band — the front end of [[nearDupKeepFirst]],
+    * [[incrementalDedup]], the band-key index and both streaming screens.
+    * Signatures are one codegen projection (token ids → k-gram ids → all k
+    * minima); documents too short to shingle emit no rows.
+    */
+  private def bandKeys(docs: DataFrame, k: Int, bands: Int, carry: String*): DataFrame = {
+    val sids = ShingleHash.column(TokenHashArray.column(TextOps.tokens(col("text"))), k)
+    keyRows(signatures(docs, sids, carry), minhashBands(bands), carry)
   }
 
   /** Sketch-quality confusion report — the b13/t37/x32 "checked sketch"
@@ -751,33 +607,13 @@ object Dedup {
     // min claimant is smaller" — per-key window-min is O(m) per band key
     // where a bucket self-join is O(m²); a boilerplate-heavy corpus (many
     // docs sharing one band key) can't quadratically explode a task.
-    val perKey = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("sig"))
+    val perKey = Window.partitionBy(col("band"), col("key"))
     val dropped = bandKeys(docs, k, bands)
       .withColumn("min_id", min(col("doc_id")).over(perKey))
       .filter(col("min_id") < col("doc_id"))
       .select(col("doc_id"))
       .distinct()
     docs.select(col("doc_id")).join(dropped, Seq("doc_id"), "left_anti")
-  }
-
-  /** MinHash-LSH band keys per document: (doc_id, band, sig) — one row per
-    * band, `sig` a struct of that band's signature rows. The shared front
-    * end of [[nearDupKeepFirst]] and [[incrementalDedup]]; documents too
-    * short to shingle have no signature and emit no rows.
-    */
-  private def bandKeys(docs: DataFrame, k: Int, bands: Int): DataFrame = {
-    val sigs = minhashShingleSignaturesFromArrays(Vocab.hashTokenIdArrays(docs), k)
-    val rowsPerBand = minhashCoeffs.size / bands
-    val bandCols = (0 until bands).map { bi =>
-      struct(
-        lit(bi).as("band"),
-        // uniform inner field names so the band structs share one type
-        struct((0 until rowsPerBand).map(ri => col(s"sig_${bi * rowsPerBand + ri}").as(s"r$ri")): _*)
-          .as("sig"))
-    }
-    sigs
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.sig").as("sig"))
   }
 
   /** Incremental corpus dedup — the ingestion-time question a growing
@@ -804,25 +640,35 @@ object Dedup {
     */
   def incrementalDedup(newBatch: DataFrame, corpus: DataFrame,
       k: Int = 5, bands: Int = 4): DataFrame = {
-    val nbDigests = newBatch.select(col("doc_id"), xxhash64(col("text")).as("digest"), col("text"))
-    val corpusDigests = corpus.select(xxhash64(col("text")).as("digest"), col("text").as("ctext"))
-    val exactHits = nbDigests
-      .join(corpusDigests, Seq("digest"))
+    val nearHits = bandKeys(newBatch, k, bands)
+      .join(bandKeys(corpus, k, bands).select(col("band"), col("key")),
+        Seq("band", "key"), "left_semi")
+      .select(col("doc_id"))
+      .distinct()
+    flags(newBatch, "dup_exact" -> verbatimHits(newBatch, corpus), "dup_near" -> nearHits)
+  }
+
+  /** Batch doc_ids whose text appears verbatim in `corpus`: an `xxhash64`
+    * digest equi-join (fixed-width rows; `screen` may prefilter the batch
+    * on `digest`), then the text re-confirmed, so a 64-bit collision never
+    * flags a non-duplicate.
+    */
+  private def verbatimHits(newBatch: DataFrame, corpus: DataFrame,
+      screen: DataFrame => DataFrame = identity): DataFrame =
+    screen(newBatch.select(col("doc_id"), xxhash64(col("text")).as("digest"), col("text")))
+      .join(corpus.select(xxhash64(col("text")).as("digest"), col("text").as("ctext")),
+        Seq("digest"))
       .filter(col("text") === col("ctext"))
       .select(col("doc_id"))
       .distinct()
-    val nearHits = bandKeys(newBatch, k, bands)
-      .join(bandKeys(corpus, k, bands).select(col("band"), col("sig")),
-        Seq("band", "sig"), "left_semi")
-      .select(col("doc_id"))
-      .distinct()
-    newBatch.select(col("doc_id"))
-      .join(exactHits.withColumn("e", lit(1L)), Seq("doc_id"), "left")
-      .join(nearHits.withColumn("n", lit(1L)), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("e"), lit(0L)).as("dup_exact"),
-        coalesce(col("n"), lit(0L)).as("dup_near"))
-  }
+
+  /** (doc_id, flag…) for every batch document: each flag is 1 if the doc is
+    * in that flag's hit frame, else 0 (BIGINT).
+    */
+  private def flags(newBatch: DataFrame, hits: (String, DataFrame)*): DataFrame =
+    hits.foldLeft(newBatch.select(col("doc_id"))) { case (df, (flag, h)) =>
+      df.join(h.withColumn(flag, lit(1L)), Seq("doc_id"), "left")
+    }.select(col("doc_id") +: hits.map(h => coalesce(col(h._1), lit(0L)).as(h._1)): _*)
 
   /** Corpus snapshot diff — the rev-over-rev governance query a managed
     * dataset runs after every rebuild: match documents by doc_id across
@@ -853,57 +699,22 @@ object Dedup {
     * bucketed, the per-batch screen plans with ZERO exchanges on the
     * corpus side (BucketedLayoutSpec pins it) — a batch costs
     * O(batch + matches), and the 100 TB corpus is never re-shingled or
-    * re-shuffled per ingest.
+    * re-shuffled per ingest. The index also feeds pair generation:
+    * [[pairs]] over it with `Given(Seq("band", "r0", "r1"))` keys and a
+    * batch's doc ids as `queries` gives that batch's band-collision pairs
+    * without re-shingling the corpus.
     */
   def writeBandKeyIndex(docs: DataFrame, table: String, buckets: Int = 32,
       k: Int = 5, bands: Int = 4): Unit =
-    bandKeys(docs, k, bands)
-      .select(col("band"), col("sig.r0").as("r0"), col("sig.r1").as("r1"), col("doc_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
+    writeBandKeys(docs, table, buckets, k, bands, org.apache.spark.sql.SaveMode.Overwrite)
+
+  /** Writes the band-key index rows (band, r0, r1, doc_id), key flattened. */
+  private def writeBandKeys(docs: DataFrame, table: String, buckets: Int, k: Int,
+      bands: Int, mode: org.apache.spark.sql.SaveMode): Unit =
+    bandKeys(docs, k, bands).select(col("band"), col("key.*"), col("doc_id"))
+      .write.mode(mode).format("parquet")
       .bucketBy(buckets, "band", "r0", "r1")
       .saveAsTable(table)
-
-  /** Within-corpus MinHash band-collision candidate pairs (canonical
-    * doc_a < doc_b, distinct) — the PAIR form of [[nearDupKeepFirst]]'s
-    * collision rule, and the batch-internal half of the incremental
-    * groups lifecycle ([[incrementalGroups]]): the rule is pair-LOCAL
-    * (two docs collide iff they share a band signature, no global
-    * df/corpus state), so the union of per-batch pair sets over any
-    * chunking of a corpus equals the whole corpus's pair set — the
-    * property that makes the streaming fold-in ≡ a batch rebuild
-    * (StreamingDedupGroupsSpec pins it end-to-end).
-    */
-  def bandCandidatePairs(docs: DataFrame, k: Int = 5, bands: Int = 4): DataFrame = {
-    val keys = bandKeys(docs, k, bands)
-    keys.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(keys.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-  }
-
-  /** Batch-vs-corpus candidate pairs through a persisted
-    * [[writeBandKeyIndex]] table — the pair-producing twin of
-    * [[incrementalNearFromIndex]] (which only flags): each colliding
-    * (batch doc, index claimant) pair, both orientations collapsed to
-    * distinct rows. This is exactly the `newPairs` feed
-    * [[incrementalGroups]]'s contract asks for (batch–corpus half;
-    * [[bandCandidatePairs]] over the batch supplies batch–batch), without
-    * re-shingling the corpus: only the batch side computes signatures,
-    * and with the index bucketed on the key the corpus side plans
-    * exchange-free.
-    */
-  def bandPairsFromIndex(newBatch: DataFrame, index: DataFrame,
-      k: Int = 5, bands: Int = 4): DataFrame =
-    bandKeys(newBatch, k, bands)
-      .select(col("doc_id").as("doc_a"), col("band"),
-        col("sig.r0").as("r0"), col("sig.r1").as("r1"))
-      .join(index.select(col("band"), col("r0"), col("r1"),
-        col("doc_id").as("doc_b")), Seq("band", "r0", "r1"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
 
   /** Append one ingest batch's band keys to a persisted
     * [[writeBandKeyIndex]] table (same flattened layout and bucketing
@@ -914,11 +725,7 @@ object Dedup {
     */
   def appendBandKeys(docs: DataFrame, table: String, buckets: Int = 32,
       k: Int = 5, bands: Int = 4): Unit = {
-    bandKeys(docs, k, bands)
-      .select(col("band"), col("sig.r0").as("r0"), col("sig.r1").as("r1"), col("doc_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .bucketBy(buckets, "band", "r0", "r1")
-      .saveAsTable(table)
+    writeBandKeys(docs, table, buckets, k, bands, org.apache.spark.sql.SaveMode.Append)
     // an already-resolved relation for this table may have cached its file
     // listing; without the refresh a reader planned after the append can
     // still scan the pre-append file set
@@ -932,8 +739,7 @@ object Dedup {
     */
   def incrementalNearFromIndex(newBatch: DataFrame, index: DataFrame,
       k: Int = 5, bands: Int = 4): DataFrame =
-    bandKeys(newBatch, k, bands)
-      .select(col("doc_id"), col("band"), col("sig.r0").as("r0"), col("sig.r1").as("r1"))
+    bandKeys(newBatch, k, bands).select(col("doc_id"), col("band"), col("key.*"))
       .join(index.select(col("band"), col("r0"), col("r1")),
         Seq("band", "r0", "r1"), "left_semi")
       .select(col("doc_id"))
@@ -1047,8 +853,7 @@ object Dedup {
     val blocks = docs
       .select(col("doc_id"), explode(blockStructs(blockTokens)).as("b"))
       .select(col("doc_id"), col("b.block").as("block"))
-    val perContent = org.apache.spark.sql.expressions.Window
-      .partitionBy(xxhash64(col("block")), col("block"))
+    val perContent = Window.partitionBy(xxhash64(col("block")), col("block"))
     blocks
       .withColumn("shared",
         when(min(col("doc_id")).over(perContent) =!= max(col("doc_id")).over(perContent), 1L)
@@ -1075,18 +880,21 @@ object Dedup {
     * dupes?" at O(corpus shingles), where d2/d4 answer "of WHAT?" at pair
     * cost.
     */
-  def ngramNovelty(docs: DataFrame, k: Int = 5): DataFrame = {
-    val sh = shingleIdsFromArrays(Vocab.hashTokenIdArrays(docs), k)
-    val perShingle = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle_id"))
-    sh
-      .withColumn("first_id", min(col("doc_id")).over(perShingle))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_shingles"),
-        sum(when(col("first_id") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
+  def ngramNovelty(docs: DataFrame, k: Int = 5): DataFrame =
+    firstClaims(shingleIdsFromArrays(Vocab.hashTokenIdArrays(docs), k), "shingle_id",
+        "n_shingles", "n_novel")
       .select(col("doc_id"), col("n_shingles"), col("n_novel"),
         (col("n_novel").cast("double") / col("n_shingles")).as("novelty"))
-  }
+
+  /** Per document: its (distinct) `key` rows, counted as `n`, and how many
+    * of them it claims first — smallest doc_id anywhere — counted as
+    * `claimed`. One window-min per key, no pair join.
+    */
+  private def firstClaims(rows: DataFrame, key: String, n: String, claimed: String): DataFrame =
+    rows.withColumn("first_id", min(col("doc_id")).over(Window.partitionBy(col(key))))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as(n),
+        sum(when(col("first_id") === col("doc_id"), 1L).otherwise(0L)).as(claimed))
 
   /** Token-level novelty — [[ngramNovelty]]'s vocabulary sibling (the
     * Heaps'-law check): for each document in ingest order, how many of its
@@ -1097,16 +905,9 @@ object Dedup {
     * the (doc_id, token_id) index — no pair join — then an aggregation
     * back on doc_id. Output: (doc_id, n_distinct_tokens, n_new_tokens).
     */
-  def tokenNovelty(tokenIds: DataFrame): DataFrame = {
-    val dt = tokenIds.select(col("doc_id"), col("token_id")).distinct()
-    val perTok = org.apache.spark.sql.expressions.Window.partitionBy(col("token_id"))
-    dt
-      .withColumn("first_id", min(col("doc_id")).over(perTok))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_distinct_tokens"),
-        sum(when(col("first_id") === col("doc_id"), 1L).otherwise(0L)).as("n_new_tokens"))
-  }
+  def tokenNovelty(tokenIds: DataFrame): DataFrame =
+    firstClaims(tokenIds.select(col("doc_id"), col("token_id")).distinct(), "token_id",
+      "n_distinct_tokens", "n_new_tokens")
 
   /** Cross-source duplication matrix — the data-governance view of dedup:
     * for every (source, source) pair, how many duplicate pairs span them?
@@ -1263,7 +1064,7 @@ object Dedup {
     val corpusDigests = corpus
       .select(xxhash64(col("text")).as("digest"), col("text").as("ctext")).distinct()
     val corpusKeys = bandKeys(corpus, k, bands)
-      .select(col("band"), col("sig")).distinct().withColumn("hit", lit(1L))
+      .select(col("band"), col("key")).distinct().withColumn("hit", lit(1L))
     // exact evidence: one row per arriving doc, flag from a stream-static
     // left join (digest equi-join + exact text confirm — collision-safe)
     val exactEv = docs
@@ -1276,26 +1077,7 @@ object Dedup {
     // near evidence: one row per (doc, band), flag iff the corpus claims
     // the key. Docs too short to shingle emit no band rows — their exact
     // row alone decides (dup_near stays 0, matching the batch form)
-    val sidsCol = org.apache.spark.sql.graft.ShingleHash.column(
-      org.apache.spark.sql.graft.TokenHashArray.column(TextOps.tokens(col("text"))), k)
-    val rowsPerBand = minhashCoeffs.size / bands
-    // all k minima in one codegen pass (the HOF form re-entered the lambda
-    // interpreter once per coefficient per row)
-    val sigged = docs
-      .withColumn("sids", coalesce(sidsCol, array().cast("array<bigint>")))
-      .filter(size(col("sids")) > 0)
-      .withColumn("sigs", minhashSigsCol(col("sids")))
-      .select(col("doc_id") +: col(tsCol) +:
-        minhashCoeffs.indices.map(i => col("sigs")(i).as(s"sig_$i")): _*)
-    val bandCols = (0 until bands).map { bi =>
-      struct(
-        lit(bi).as("band"),
-        struct((0 until rowsPerBand).map(ri => col(s"sig_${bi * rowsPerBand + ri}").as(s"r$ri")): _*)
-          .as("sig"))
-    }
-    val nearEv = sigged
-      .select(col("doc_id"), col(tsCol), explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col(tsCol), col("b.band").as("band"), col("b.sig").as("sig"))
+    val nearEv = bandKeys(docs, k, bands, tsCol)
       // UNHINTED (round 11): corpusKeys is one row per distinct (band,
       // sig) — corpus-proportional (each doc mints `bands` signatures), so
       // a hint would force a corpus-scale broadcast onto every executor at
@@ -1304,7 +1086,7 @@ object Dedup {
       // (the honest scale path for near-dup-on-ingest is the persisted
       // index family anyway — d15's Bloom side for exact, d38's shingle
       // index for near).
-      .join(corpusKeys, Seq("band", "sig"), "left")
+      .join(corpusKeys, Seq("band", "key"), "left")
       .select(col("doc_id"), col(tsCol), lit(0L).as("e"),
         coalesce(col("hit"), lit(0L)).as("n"))
     exactEv.unionByName(nearEv)
@@ -1361,8 +1143,7 @@ object Dedup {
     */
   def decontaminateStateless(docs: DataFrame, benchShingleIds: Array[Long],
       k: Int = 5): DataFrame = {
-    val sh = org.apache.spark.sql.graft.ShingleHash.column(
-      org.apache.spark.sql.graft.TokenHashArray.column(graft.ops.TextOps.tokens(col("text"))), k)
+    val sh = ShingleHash.column(TokenHashArray.column(TextOps.tokens(col("text"))), k)
     docs.withColumn("n_hits",
       size(array_intersect(sh, typedlit(benchShingleIds.sorted.toSeq))).cast("long"))
   }
@@ -1442,7 +1223,7 @@ object Dedup {
     *
     *   1. per-row shingle ids ([[org.apache.spark.sql.graft.ShingleHash]]
     *      over [[org.apache.spark.sql.graft.TokenHashArray]]) and the k
-    *      MinHash minima (`array_min` over the linear hashes);
+    *      MinHash minima in one codegen pass ([[bandKeys]]);
     *   2. explode to one row per band, key = (band, band-signature);
     *   3. `dropDuplicatesWithinWatermark` on the band key — state is one
     *      entry per distinct band key within the horizon, expiring as the
@@ -1457,38 +1238,19 @@ object Dedup {
     */
   def streamingNearDup(docs: DataFrame, tsCol: String, delay: String,
       k: Int = 5, bands: Int = 4, windowDur: String = "10 seconds"): DataFrame = {
-    val rowsPerBand = minhashCoeffs.size / bands
-    val sidsCol = org.apache.spark.sql.graft.ShingleHash.column(
-      org.apache.spark.sql.graft.TokenHashArray.column(TextOps.tokens(col("text"))), k)
-    // null text → empty sids, NOT null: a null would match neither branch
-    // below and the document would silently vanish from the stream (the
-    // batch twin keeps null-text docs — no signature, no candidate pair)
-    val withSids = docs.withColumn("sids",
-      coalesce(sidsCol, array().cast("array<bigint>")))
-    // all k minima in one codegen pass (the HOF form re-entered the lambda
-    // interpreter once per coefficient per row)
-    val sigged = withSids
-      .filter(size(col("sids")) > 0)
-      .withColumn("sigs", minhashSigsCol(col("sids")))
-      .select(col("doc_id") +: col(tsCol) +:
-        minhashCoeffs.indices.map(i => col("sigs")(i).as(s"sig_$i")): _*)
-    val bandCols = (0 until bands).map { bi =>
-      struct(
-        lit(bi).as("band"),
-        struct((0 until rowsPerBand).map(ri => col(s"sig_${bi * rowsPerBand + ri}").as(s"r$ri")): _*)
-          .as("sig"))
-    }
-    val banded = sigged
-      .select(col("doc_id"), col(tsCol), explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col(tsCol), col("b.band").as("band"), col("b.sig").as("bsig"))
-    val kept = banded
+    val kept = bandKeys(docs, k, bands, tsCol)
       .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("band", "bsig")
+      .dropDuplicatesWithinWatermark("band", "key")
       .groupBy(window(col(tsCol), windowDur), col("doc_id"))
       .agg(count(lit(1)).as("n_bands"))
       .filter(col("n_bands") === bands)
       .select(col("doc_id"))
-    val unshingleable = withSids.filter(size(col("sids")) === 0).select(col("doc_id"))
+    // null text → empty shingles, NOT null: a null would match neither
+    // branch and the document would silently vanish from the stream (the
+    // batch twin keeps null-text docs — no signature, no candidate pair)
+    val sids = ShingleHash.column(TokenHashArray.column(TextOps.tokens(col("text"))), k)
+    val unshingleable = docs.filter(size(coalesce(sids, array().cast("array<bigint>"))) === 0)
+      .select(col("doc_id"))
     kept.union(unshingleable)
   }
 
@@ -1552,11 +1314,10 @@ object Dedup {
     */
   def materializeGroups(docs: DataFrame, table: String, buckets: Int = 8,
       shingleK: Int = 5, threshold: Double = 0.5): DataFrame =
-    graft.sources.BucketedLayout.buildIfAbsent(docs.sparkSession, table) {
-      val groups = dedupGroupsAuto(
-        jaccardPairsFromShingles(
-          shingleIdsFromArrays(Vocab.hashTokenIdArrays(docs), shingleK), threshold))
-      graft.sources.BucketedLayout.writeBucketed(groups, table, "doc_id", buckets)
+    BucketedLayout.buildIfAbsent(docs.sparkSession, table) {
+      val groups = dedupGroupsAuto(pairs(Vocab.hashTokenIdArrays(docs),
+        PairSpec(PairSpec.Grams(shingleK), verify = PairSpec.Jaccard(threshold))))
+      BucketedLayout.writeBucketed(groups, table, "doc_id", buckets)
     }
 
   /** The shared d16/d23/d27 artifact for a fixture directory — one table
@@ -1576,13 +1337,14 @@ object Dedup {
     * (certified old pairs ∪ newPairs), with the same canonical min-id
     * group labels (spec-pinned in BucketedLayoutSpec).
     *
-    * `newPairs` must cover batch–batch AND batch–corpus pairs (the
-    * persisted band-key index screens produce exactly these without
-    * re-shingling the corpus). Note the df-cap caveat: candidate rules
-    * whose pair set depends on global document frequencies can RETRACT
-    * old-corpus pairs as the corpus grows; this operator preserves the
-    * certified old connectivity by design (an artifact never un-merges),
-    * which is the standard production contract for incremental dedup.
+    * `newPairs` must cover batch–batch AND batch–corpus pairs ([[pairs]]
+    * over the persisted band-key index with the batch as `queries`
+    * produces exactly these without re-shingling the corpus). Note the
+    * df-cap caveat: candidate rules whose pair set depends on global
+    * document frequencies can RETRACT old-corpus pairs as the corpus
+    * grows; this operator preserves the certified old connectivity by
+    * design (an artifact never un-merges), which is the standard
+    * production contract for incremental dedup.
     *
     * At 100 TB: the star edges are artifact-sized (members of non-trivial
     * groups), newPairs is batch-sized — the CC runs over a graph orders of
@@ -1623,6 +1385,11 @@ object Dedup {
       val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, label))")).collect().head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
+    // the result's cached plan reads every earlier round and `sym`, so on
+    // convergence they stay persisted with it, the caller's to release (a
+    // lost block of the result recomputes from the round before it, not
+    // from the pairs); the auto form bounds them to switchAfter + 2 frames
+    val held = scala.collection.mutable.ArrayBuffer(sym, labels)
     var current = signature(labels) // materializes the persisted seed
     // empty pair set (clean corpus): nothing to group, and the loop's
     // aggregates would have nothing to fold
@@ -1644,11 +1411,10 @@ object Dedup {
       val sig = signature(next)
       converged = sig == current
       current = sig
-      labels.unpersist()
+      held += next
       labels = next
     }
-    sym.unpersist()
-    if (!converged) { labels.unpersist(); None }
+    if (!converged) { held.foreach(_.unpersist()); None }
     else Some(labels.select(col("doc_id"), col("label").as("group_id")))
   }
 
@@ -1762,60 +1528,9 @@ object Dedup {
       idsCol: String = "ids"): DataFrame =
     idsDf
       .withColumn("simhash",
-        org.apache.spark.sql.graft.SimHashBits.column(col(idsCol), bits))
+        SimHashBits.column(col(idsCol), bits))
       .filter(col("simhash").isNotNull)
       .select(col("doc_id"), col("simhash"))
-
-  /** SimHash near-dup PAIRS — the d5 signatures put to their actual dedup
-    * use, via the chunked-band scheme of the published web-dedup design
-    * (split the fingerprint into `chunks` bands; hamming(a,b) ≤ maxHamming
-    * with chunks > maxHamming forces ≥ 1 identical band by pigeonhole, so
-    * band-equality enumerates a candidate superset, then one XOR popcount
-    * per candidate verifies the exact distance). 60-bit fingerprints (not
-    * d5's 16) so a 15-bit band key is discriminative: candidate buckets
-    * stay corpus-fraction-sized, and the df cap bounds any clone cluster's
-    * key exactly as in the d4 band join (the oracle applies the identical
-    * cap). Per-candidate work is one integer XOR of two longs — no
-    * shingle-set re-read, no float. Output: (doc_a, doc_b, hamming ≤
-    * maxHamming).
-    */
-  def simhashPairs(tokenIds: DataFrame, bits: Int = 60, chunks: Int = 4,
-      maxHamming: Int = 3, maxBucket: Long = defaultMaxDf): DataFrame =
-    simhashPairsOver(simhash(tokenIds, bits), bits, chunks, maxHamming, maxBucket)
-
-  /** [[simhashPairs]] over the codegen projection front-end — fingerprints
-    * come from [[simhashFromArrays]] (one WSCG pass, no explode/agg), the
-    * banding/verify stages are shared. The d22 query path.
-    */
-  def simhashPairsFromArrays(idsDf: DataFrame, bits: Int = 60, chunks: Int = 4,
-      maxHamming: Int = 3, maxBucket: Long = defaultMaxDf): DataFrame =
-    simhashPairsOver(simhashFromArrays(idsDf, bits), bits, chunks, maxHamming, maxBucket)
-
-  private def simhashPairsOver(sh: DataFrame, bits: Int, chunks: Int,
-      maxHamming: Int, maxBucket: Long): DataFrame = {
-    require(chunks > maxHamming, "pigeonhole needs more bands than differing bits")
-    require(bits % chunks == 0 && bits < 63, s"bits=$bits must split into $chunks bands")
-    val cw = bits / chunks
-    val chunkCols = (0 until chunks).map(i =>
-      struct(lit(i).as("band"),
-        shiftright(col("simhash"), i * cw).bitwiseAND((1L << cw) - 1).as("key")))
-    val keyed = sh
-      .select(col("doc_id"), col("simhash"), explode(array(chunkCols: _*)).as("c"))
-      .select(col("doc_id"), col("simhash"), col("c.band").as("band"), col("c.key").as("key"))
-      .persist() // both self-join sides share the fingerprint computation
-    val cool = keyed.groupBy(col("band"), col("key")).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") <= maxBucket)
-      .select(col("band"), col("key"))
-    val k = keyed.join(cool, Seq("band", "key"), "left_semi")
-    k.as("x")
-      .join(k.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
 
   /** Exact duplicated-SUBSTRING span report — token-level substring dedup à
     * la Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -1861,19 +1576,10 @@ object Dedup {
     */
   def incrementalExactBloom(newBatch: DataFrame, corpus: DataFrame,
       numBits: Int = 1 << 17): DataFrame = {
-    val nb = newBatch.select(col("doc_id"), xxhash64(col("text")).as("digest"), col("text"))
-    val cd = corpus.select(xxhash64(col("text")).as("digest"), col("text").as("ctext"))
     val bits = graft.operators.BloomFilter
-      .buildBits(cd.select(col("digest")), "digest", numBits)
-    val hits = nb
-      .filter(graft.operators.BloomFilter.mightContain(bits)(col("digest")))
-      .join(cd, Seq("digest"))
-      .filter(col("text") === col("ctext"))
-      .select(col("doc_id"))
-      .distinct()
-    newBatch.select(col("doc_id"))
-      .join(hits.withColumn("e", lit(1L)), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("e"), lit(0L)).as("dup_exact"))
+      .buildBits(corpus.select(xxhash64(col("text")).as("digest")), "digest", numBits)
+    flags(newBatch, "dup_exact" -> verbatimHits(newBatch, corpus,
+      _.filter(graft.operators.BloomFilter.mightContain(bits)(col("digest")))))
   }
 
   /** The merged duplicated-span intervals behind [[dupSpans]] — one row per
@@ -1882,11 +1588,11 @@ object Dedup {
     * and the report share one definition.
     */
   def dupSpanIntervals(docs: DataFrame, k: Int = 5, minDf: Int = 2): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
+    val W = Window
     val ids = Vocab.hashTokenIdArrays(docs)
     val pos = ids
       .select(col("doc_id"), size(col("ids")).cast("long").as("n_tokens"),
-        posexplode(org.apache.spark.sql.graft.PositionalShingleHash.column(col("ids"), k))
+        posexplode(PositionalShingleHash.column(col("ids"), k))
           .as(Seq("pos", "sid")))
       .filter(col("sid").isNotNull)
       .withColumn("pos", col("pos").cast("long")) // span arithmetic in BIGINT

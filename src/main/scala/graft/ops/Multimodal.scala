@@ -128,7 +128,7 @@ object Multimodal {
     * duplicate-frame report asks "which frames repeat"; this asks "which
     * DOCUMENTS overlap"). Output (doc_id, shingle_id = frame digest)
     * feeds the SAME df-capped Jaccard candidate/verify machinery as the
-    * text near-dup surface ([[graft.ops.Dedup.jaccardPairsFromShingles]]):
+    * text near-dup surface ([[graft.ops.Dedup.pairs]] with given shingles):
     * a viral intro frame shared by f videos is capped at the index, never
     * Θ(f²) in the candidate join. Fingerprints here are md5 over fixed
     * char windows of the fixture text (the binary-frame stand-in, same as

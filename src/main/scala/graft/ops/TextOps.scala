@@ -1373,9 +1373,8 @@ object TextOps {
     * the d38 df-capped shingle index.
     */
   private def retrievalTruth(docs: DataFrame, queryPred: Column): DataFrame =
-    graft.ops.Dedup.similarDocsTopK(
-        graft.ops.Dedup.shingleIdsFromArrays(
-          graft.ops.Vocab.hashTokenIdArrays(docs), 5), queryPred, k = 1)
+    Dedup.pairs(Vocab.hashTokenIdArrays(docs), PairSpec(PairSpec.Grams(5),
+        candidates = PairSpec.Candidates(queries = Some(queryPred)), verify = PairSpec.TopK(1)))
       .select(col("query_id"), col("neighbor_id").as("truth_id"),
         col("sim_ppm").as("truth_sim_ppm"))
 

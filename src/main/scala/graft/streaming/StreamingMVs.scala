@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.binlog.DailyCounts
+import graft.binlog.{DailyCounts, Schemas}
 
 /** Continuously-maintained materialized views — the Structured Streaming
   * rendering of the reference's INSERT-triggered MVs
@@ -69,29 +69,31 @@ object StreamingMVs {
       }
 
   /** Replay dedup for a partials table: an at-least-once micro-batch
-    * replays identical partial rows under the same `batch_id`, so rows
-    * equal on (batch_id, keys…) collapse to one, then the tag is dropped. A
-    * compacted table no longer carries `batch_id` and passes through.
+    * replays identical partial rows under the same `batch_id`, so the
+    * `value` of rows equal on (batch_id, keys…) counts once; rows with no
+    * `batch_id` (rewritten by a compaction) carry no replay identity and
+    * all count. Readers re-sum `value` over the keys afterwards. Every
+    * reader declares the table's schema ([[Schemas]]), so `batch_id` is
+    * always there: schema inference reads one file's footer, and on a
+    * mixed table a compacted file has no `batch_id`.
     */
-  private[graft] def dedupReplays(raw: DataFrame, keys: Seq[String]): DataFrame =
-    if (raw.columns.contains("batch_id"))
-      raw.dropDuplicates("batch_id" +: keys).drop("batch_id")
-    else raw
+  private[graft] def dedupReplays(raw: DataFrame, keys: Seq[String], value: String): DataFrame =
+    raw.groupBy(col("batch_id") +: keys.map(col): _*)
+      .agg(when(col("batch_id").isNull, sum(col(value))).otherwise(max(col(value))).as(value))
+      .drop("batch_id")
 
   /** The M3 read path over the partials table (re-sum view), replayed
     * batches deduped first ([[dedupReplays]]). Two jobs: the table is read
-    * with its declared schema ([[graft.binlog.Schemas.dailyEventCountPartial]],
+    * with its declared schema ([[Schemas.dailyEventCountPartial]],
     * no schema-inference job), and one exchange on (day, event_type) serves
     * both the dedup on (batch_id, day, event_type) and the re-sum, so the
-    * plan is one shuffle-map job and one result job. Compacted rows read a
-    * null `batch_id`; compaction leaves one row per (day, event_type), so the
-    * dedup keeps each of them.
+    * plan is one shuffle-map job and one result job.
     */
   def readDailyCounts(spark: org.apache.spark.sql.SparkSession, targetPath: String): DataFrame = {
     val keys = Seq("day", "event_type")
-    val partials = spark.read.schema(graft.binlog.Schemas.dailyEventCountPartial)
+    val partials = spark.read.schema(Schemas.dailyEventCountPartial)
       .parquet(targetPath).repartition(keys.map(col): _*)
-    DailyCounts.resum(dedupReplays(partials, keys), keys)
+    DailyCounts.resum(dedupReplays(partials, keys, "event_count"), keys)
   }
 
   /** b30's mergeable-QUANTILE MV maintained by the stream — the
@@ -118,7 +120,8 @@ object StreamingMVs {
   def readPercentiles(spark: org.apache.spark.sql.SparkSession,
       targetPath: String, ps: Seq[Double] = Seq(0.5, 0.95)): DataFrame =
     graft.operators.Percentiles.discreteFromHistogram(
-      dedupReplays(spark.read.parquet(targetPath), Seq("day", "event_type", "v_c")),
+      dedupReplays(spark.read.schema(Schemas.histogramPartial).parquet(targetPath),
+        Seq("day", "event_type", "v_c"), "cnt"),
       "event_type", "v_c", "cnt", ps, "pct_cents")
 
   /** Count-min sketch maintained by the stream — the AggregatingMergeTree
@@ -142,5 +145,6 @@ object StreamingMVs {
   def readCountMinSketch(spark: org.apache.spark.sql.SparkSession,
       targetPath: String): DataFrame =
     graft.operators.Sketches.mergeSketch(
-      dedupReplays(spark.read.parquet(targetPath), Seq("r", "bucket")))
+      dedupReplays(spark.read.schema(Schemas.sketchPartial).parquet(targetPath),
+        Seq("r", "bucket"), "c"))
 }

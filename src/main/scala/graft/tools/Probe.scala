@@ -50,6 +50,12 @@ object Probe {
     }
     def mat(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
+    // the x60/x64 truth side: each query doc's most-Jaccard-similar neighbor
+    def truthTop1(docs: org.apache.spark.sql.DataFrame, pred: org.apache.spark.sql.Column) =
+      graft.ops.Dedup.pairs(graft.ops.Vocab.hashTokenIdArrays(docs),
+        graft.ops.PairSpec(graft.ops.PairSpec.Grams(5),
+          candidates = graft.ops.PairSpec.Candidates(queries = Some(pred)),
+          verify = graft.ops.PairSpec.TopK(1)))
 
     args.headOption.getOrElse("t56") match {
       case "t56" =>
@@ -143,9 +149,7 @@ object Probe {
           .count()))
         time("inter agg")(mat(inter))
         spark.sqlContext.clearCache()
-        time("truth end-to-end")(mat(graft.ops.Dedup.similarDocsTopK(
-          graft.ops.Dedup.shingleIdsFromArrays(
-            graft.ops.Vocab.hashTokenIdArrays(docs), 5), pred, k = 1)))
+        time("truth end-to-end")(mat(truthTop1(docs, pred)))
       case "d15" =>
         val docs = graft.Tables.documents(spark, dir)
         (1 to 3).foreach { i =>
@@ -185,9 +189,7 @@ object Probe {
         val docs = graft.Tables.documents(spark, dir)
         val pred = col("doc_id") % 31 === 0
         // phase 1: the d38 Jaccard truth side alone
-        val truth = graft.ops.Dedup.similarDocsTopK(
-          graft.ops.Dedup.shingleIdsFromArrays(
-            graft.ops.Vocab.hashTokenIdArrays(docs), 5), pred, k = 1)
+        val truth = truthTop1(docs, pred)
         time("x60 truth side")(mat(truth))
         spark.sqlContext.clearCache()
         // phase 2: the full eval (truth + BM25 rank join)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.binlog.{DailyCounts, TransactionStats}
+import graft.ops.PairSpec
+import graft.ops.PairSpec._
 
 /** Property tests (SURVEY.md §5.3). Each sample runs Spark jobs, so the
   * sample count is kept small — the properties are algebraic, not
@@ -224,9 +226,8 @@ object EngineProperties extends Properties("graft") {
       val docs = tokenLists.zipWithIndex.map { case (ts, i) =>
         (i.toLong, ts.mkString(" "))
       }.toDF("doc_id", "text")
-      def run(df: DataFrame) = graft.ops.Dedup.minhashEstimatedPairs(
-        graft.ops.Dedup.minhashShingleSignaturesFromArrays(
-          graft.ops.Vocab.hashTokenIdArrays(df), 5), bands = 4)
+      def run(df: DataFrame) = graft.ops.Dedup.pairs(graft.ops.Vocab.hashTokenIdArrays(df),
+          PairSpec(Grams(5), MinHash(4), verify = Estimate))
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       val a = run(docs)
       val b = run(docs.repartition(parts))
@@ -276,8 +277,10 @@ object EngineProperties extends Properties("graft") {
       val sh = rows.toDF("doc_id", "shingle_id")
       def toMap(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-      val full = toMap(graft.ops.Dedup.jaccardPairsFromShingles(sh, threshold = 0.0))
-      val blocked = toMap(graft.ops.Dedup.jaccardPairsBlocked(sh, threshold = 0.0, maxDf))
+      val full = toMap(graft.ops.Dedup.pairs(sh,
+        PairSpec(candidates = Candidates(None), verify = Jaccard(0.0))))
+      val blocked = toMap(graft.ops.Dedup.pairs(sh,
+        PairSpec(candidates = Candidates(Some(maxDf)), verify = Jaccard(0.0))))
       blocked.keySet.subsetOf(full.keySet) &&
         blocked.forall { case (k, v) => full(k) == v }
     }
@@ -294,9 +297,9 @@ object EngineProperties extends Properties("graft") {
     }
     Prop.forAll(genShingles, Gen.chooseNum(0.1d, 0.9d)) { (rows0, t) =>
       val sh = rows0.distinct.toDF("doc_id", "shingle_id")
-      val jac = graft.ops.Dedup.jaccardPairsFromShingles(sh, threshold = t)
+      val jac = graft.ops.Dedup.pairs(sh, PairSpec(verify = Jaccard(t)))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val cont = graft.ops.Dedup.containmentPairs(sh, threshold = t)
+      val cont = graft.ops.Dedup.pairs(sh, PairSpec(verify = Containment(t)))
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Double]("containment")).toMap
       jac.subsetOf(cont.keySet) &&
         cont.values.forall(c => c > 0.0 && c <= 1.0)
@@ -682,9 +685,9 @@ object EngineProperties extends Properties("graft") {
       val rows = docSets.zipWithIndex.flatMap { case (ids, i) =>
         ids.distinct.map(s => (i.toLong, s)) }
       val queryIds = docSets.indices.filter(_ % 2 == 0).map(_.toLong).toSet
-      val got = graft.ops.Dedup.similarDocsTopK(
-        rows.toDF("doc_id", "shingle_id"),
-        queryPred = col("doc_id") % 2 === 0, k = k, maxDf = cap)
+      val got = graft.ops.Dedup.pairs(rows.toDF("doc_id", "shingle_id"),
+          PairSpec(candidates = Candidates(Some(cap), Some(col("doc_id") % 2 === 0)),
+            verify = TopK(k)))
         .collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank")) ->
           ((r.getAs[Long]("neighbor_id"), r.getAs[Long]("n_common"),

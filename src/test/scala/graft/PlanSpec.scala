@@ -1129,6 +1129,15 @@ class PlanSpec extends SparkSpec {
     assert(defs.filterNot(_ == "topKPerGroup") === Seq("topK"), defs)
   }
 
+  test("ops/Dedup.scala defines one pair method: the PairSpec pipeline (source check)") {
+    // every near-duplicate pair variant is a PairSpec value run by
+    // Dedup.pairs; a new *Pairs* method there would re-spell its stages
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/ops/Dedup.scala"))
+    val defs = "def (\\w*[Pp]airs\\w*)".r.findAllMatchIn(src).map(_.group(1)).toSeq
+    assert(defs === Seq("pairs"), defs)
+  }
+
   test("stream guard flags a hinted stream-static corpus join; the clean twin passes") {
     // round-11 verdict #3: streaming plans were guard-blind — the hinted
     // stream-static join in streamDupFlags was found only by review. The

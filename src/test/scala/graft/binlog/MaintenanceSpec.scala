@@ -46,7 +46,7 @@ class MaintenanceSpec extends SparkSpec {
       (java.sql.Date.valueOf("2024-01-01"), "DELETE", 1L)
     ).toDF("day", "event_type", "event_count")
     partials.write.mode("overwrite").parquet(path)
-    Maintenance.compactPartials(spark, path, Seq("day", "event_type"))
+    Maintenance.compactPartials(spark, path)
     val rows = spark.read.parquet(path).orderBy("event_type").collect()
     assert(rows.length === 2)
     assert(rows.map(r => r.getAs[String]("event_type") -> r.getAs[Long]("event_count")).toSeq

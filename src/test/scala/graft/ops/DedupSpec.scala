@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.PairSpec._
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -233,7 +234,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccard pairs find exact and near duplicates, not unrelated docs") {
-    val pairs = Dedup.jaccardPairs(docs, k = 2, threshold = 0.5)
+    val pairs = Dedup.pairs(docs, PairSpec(Words(2), verify = Jaccard(0.5)))
       .orderBy("doc_a", "doc_b").collect()
     val keys = pairs.map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(keys.contains((0L, 1L)))
@@ -244,11 +245,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("string-shingle and id-shingle jaccard agree (collision-free corpus)") {
-    val byString = Dedup.jaccardPairs(docs, k = 2, threshold = 0.3)
+    val byString = Dedup.pairs(docs, PairSpec(Words(2), verify = Jaccard(0.3)))
       .select("doc_a", "doc_b", "n_common", "jaccard")
       .orderBy("doc_a", "doc_b").collect()
     val ids = Vocab.hashTokenIdArrays(docs)
-    val byId = Dedup.jaccardPairsFromShingles(Dedup.shingleIdsFromArrays(ids, 2), 0.3)
+    val byId = Dedup.pairs(ids, PairSpec(Grams(2), verify = Jaccard(0.3)))
       .select("doc_a", "doc_b", "n_common", "jaccard")
       .orderBy("doc_a", "doc_b").collect()
     assert(byString.toSeq === byId.toSeq)
@@ -296,7 +297,7 @@ class DedupSpec extends SparkSpec {
       (5L, 7L), (5L, 500L),
       (6L, 7L), (6L, 600L)
     ).toDF("doc_id", "shingle_id")
-    val out = Dedup.jaccardPairsBlocked(sh, threshold = 0.5, maxDf = 3)
+    val out = Dedup.pairs(sh, PairSpec(candidates = Candidates(Some(3L)), verify = Jaccard(0.5)))
       .collect().map(r => ((r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")),
         (r.getAs[Long]("n_common"), r.getAs[Double]("jaccard")))).toMap
     // (1,2): candidates via rare 100/101; intersection counts the hot
@@ -306,7 +307,7 @@ class DedupSpec extends SparkSpec {
     // sanity: under the DEFAULT cap (20) shingle 7's df of 6 is still
     // rare enough to generate candidates — only above-cap features are
     // excluded from pair enumeration
-    val defaultCap = Dedup.jaccardPairsFromShingles(sh, threshold = 0.0)
+    val defaultCap = Dedup.pairs(sh, PairSpec(verify = Jaccard(0.0)))
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(defaultCap.contains((3L, 4L)))
   }
@@ -320,13 +321,13 @@ class DedupSpec extends SparkSpec {
       (3L, "totally different content in this unrelated document right here")
     ).toDF("doc_id", "text")
     val sh = Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(corpus), 5)
-    val cont = Dedup.containmentPairs(sh, threshold = 0.8)
+    val cont = Dedup.pairs(sh, PairSpec(verify = Containment(0.8)))
       .collect().map(r => ((r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")),
         r.getAs[Double]("containment"))).toMap
     assert(cont.keySet === Set((1L, 2L)))
     assert(cont((1L, 2L)) === 1.0) // full containment
     // the symmetric jaccard on the same pair is well under the threshold
-    val jac = Dedup.jaccardPairsFromShingles(sh, threshold = 0.0)
+    val jac = Dedup.pairs(sh, PairSpec(verify = Jaccard(0.0)))
       .filter(col("doc_a") === 1L && col("doc_b") === 2L)
       .collect().head.getAs[Double]("jaccard")
     assert(jac < 0.8, s"jaccard $jac unexpectedly high")
@@ -346,26 +347,25 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.dfCappedIndex(sh, Dedup.defaultMaxDf).count() === 0L)
     // and the full operator completes with no candidates at all — no pair
     // shares a sub-cap shingle (threshold 0 would keep anything generated)
-    assert(Dedup.jaccardPairsFromShingles(sh, threshold = 0.0).count() === 0L)
+    assert(Dedup.pairs(sh, PairSpec(verify = Jaccard(0.0))).count() === 0L)
   }
 
   test("band-key cap: a clone cluster wider than the cap is excluded from pair output") {
     import org.apache.spark.sql.functions._
-    // 30 signature-identical docs (every band key claimed 30× > cap 20)
-    // plus one genuine near-dup pair on its own keys
-    val wide = spark.range(30).select(
-      (col("id").as("doc_id") +: (0 until 8).map(i => lit(1L).as(s"sig_$i"))): _*)
-    val pair = Seq(100L, 101L).toDF("doc_id").select(
-      (col("doc_id") +: (0 until 8).map(i => lit(50L + i).as(s"sig_$i"))): _*)
-    val out = Dedup.candidatePairsFromSignatures(wide.union(pair), bands = 4)
+    // 30 shingle-identical docs (equal signatures: every band key claimed
+    // 30× > cap 20) plus one genuine near-dup pair on its own keys
+    val wide = spark.range(30).select(col("id").as("doc_id"), lit(1L).as("shingle_id"))
+    val pair = Seq(100L, 101L).toDF("doc_id").select(col("doc_id"), lit(50L).as("shingle_id"))
+    def bandPairs(cap: Option[Long]) = Dedup.pairs(wide.union(pair),
+      PairSpec(sign = MinHash(4), candidates = Candidates(cap), verify = Keys))
+    val out = bandPairs(Some(Dedup.defaultMaxDf))
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     // uncapped this would be C(30,2) + 1 = 436 pairs; capped: just the pair
     assert(out === Set((100L, 101L)))
     // the wide cluster belongs to the O(m) keep-first screen instead, which
     // has no cap and keeps exactly one representative of the 30
-    val sigs = wide.union(pair)
-    val kept = Dedup.candidatePairsFromSignatures(sigs, bands = 4, maxBucket = 1000)
-    assert(kept.count() === 30L * 29L / 2L + 1L)
+    assert(bandPairs(Some(1000L)).count() === 30L * 29L / 2L + 1L)
+    assert(bandPairs(None).count() === 30L * 29L / 2L + 1L)
   }
 
   test("auto CC: tight clusters stay on min-label; a long chain triggers the star fallback") {
@@ -562,12 +562,13 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash: identical docs have identical signatures and become a candidate pair") {
-    val tid = Vocab.tokenIds(docs)
-    val sigs = Dedup.minhashSignatures(tid).collect()
+    // token-set MinHash: the distinct token ids are the given features
+    val tid = Vocab.tokenIds(docs).select($"doc_id", $"token_id".as("shingle_id")).distinct()
+    val sigs = Dedup.minhashSignaturesFromShingles(tid).collect()
       .map(r => r.getAs[Long]("doc_id") -> (0 until 8).map(i => r.getAs[Long](s"sig_$i")))
       .toMap
     assert(sigs(0L) === sigs(1L))
-    val pairs = Dedup.minhashCandidatePairs(tid, bands = 4)
+    val pairs = Dedup.pairs(tid, PairSpec(sign = MinHash(4), verify = Keys))
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.contains((0L, 3L)))
@@ -609,25 +610,24 @@ class DedupSpec extends SparkSpec {
     assert(!got.contains(3L))
   }
 
-  test("jaccardPairsById (exploded front-end) ≡ the array-projection path") {
-    val byId = Dedup.jaccardPairsById(graft.ops.Vocab.hashTokenIds(docs))
+  test("pairs: given shingle rows ≡ the Grams stage over id arrays") {
+    val ids = graft.ops.Vocab.hashTokenIdArrays(docs)
+    val given = Dedup.pairs(Dedup.shingleIdsFromArrays(ids, 5), PairSpec())
       .orderBy("doc_a", "doc_b").collect().map(_.toSeq)
-    val byArray = Dedup.jaccardPairsFromShingles(
-      Dedup.shingleIdsFromArrays(graft.ops.Vocab.hashTokenIdArrays(docs), 5), threshold = 0.5)
+    val grams = Dedup.pairs(ids, PairSpec(Grams(5)))
       .orderBy("doc_a", "doc_b").collect().map(_.toSeq)
-    assert(byId.toSeq === byArray.toSeq)
-    assert(byId.nonEmpty)
+    assert(given.toSeq === grams.toSeq)
+    assert(given.nonEmpty)
   }
 
   test("minhash estimate: identical docs score 1.0, pairs match the candidate set") {
-    val sigs = Dedup.minhashShingleSignaturesFromArrays(
-      graft.ops.Vocab.hashTokenIdArrays(docs), 5)
-    val est = Dedup.minhashEstimatedPairs(sigs, bands = 4)
+    val ids = graft.ops.Vocab.hashTokenIdArrays(docs)
+    val est = Dedup.pairs(ids, PairSpec(Grams(5), MinHash(4), verify = Estimate))
     val rows = est.collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) ->
         r.getAs[Double]("est_jaccard")).toMap
     // the estimator scores exactly the LSH candidate pairs, nothing else
-    val cand = Dedup.candidatePairsFromSignatures(sigs, bands = 4).collect()
+    val cand = Dedup.pairs(ids, PairSpec(Grams(5), MinHash(4), verify = Keys)).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(rows.keySet === cand)
     // identical docs: every signature slot matches → estimate exactly 1.0
@@ -643,7 +643,8 @@ class DedupSpec extends SparkSpec {
 
   test("simhash pairs: exact dups at hamming 0, all pairs within the bound, unrelated absent") {
     val tid = graft.ops.Vocab.hashTokenIds(docs)
-    val out = Dedup.simhashPairs(tid).collect()
+    val out = Dedup.pairs(graft.ops.Vocab.hashTokenIdArrays(docs),
+        PairSpec(Ids, SimHash(60, 4), verify = Hamming(3))).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) ->
         r.getAs[Long]("hamming")).toMap
     // identical docs: identical 60-bit fingerprints → distance 0
@@ -676,7 +677,9 @@ class DedupSpec extends SparkSpec {
           1L -> text(words.slice(200, 230) ++ passage)) ++
       (2L until 30L).map(i => i -> text(words.slice(240 + i.toInt * 30, 270 + i.toInt * 30)))
     ).toDF("doc_id", "text")
-    val pairs = Dedup.winnowOverlapPairs(docs, minShared = 1L).collect()
+    def overlap(d: org.apache.spark.sql.DataFrame) = Dedup.pairs(
+      graft.ops.Vocab.hashTokenIdArrays(d), PairSpec(Winnow(5, 4), verify = Shared(1L)))
+    val pairs = overlap(docs).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) -> r.getAs[Long]("n_shared"))
       .toMap
     assert(pairs.contains((0L, 1L)) && pairs((0L, 1L)) >= 1L)
@@ -685,7 +688,7 @@ class DedupSpec extends SparkSpec {
     val boiler = " standard legal disclaimer appended to every document x y z"
     val withBoiler = docs.select(col("doc_id"),
       concat(col("text"), lit(boiler)).as("text"))
-    val bp = Dedup.winnowOverlapPairs(withBoiler, minShared = 1L).collect()
+    val bp = overlap(withBoiler).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(bp.contains((0L, 1L)))
     assert(!bp.exists { case (a, b) => a >= 2L && b >= 2L })
@@ -713,8 +716,8 @@ class DedupSpec extends SparkSpec {
       (2L, 100L), (2L, 7L), (2L, 8L),
       (3L, 100L), (3L, 55L),
       (4L, 100L), (4L, 66L)
-    ).toDF("doc_id", "token_id")
-    val rows = Dedup.idfCosinePairs(tid, threshold = 0.0)
+    ).toDF("doc_id", "shingle_id")
+    val rows = Dedup.pairs(tid, PairSpec(verify = IdfCosine(0.0)))
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) -> r.getAs[Long]("cos_ppm")).toMap
     // identical vectors: cosine exactly 1.0 → 1_000_000 ppm
     assert(rows((1L, 2L)) === 1000000L)
@@ -852,7 +855,9 @@ class DedupSpec extends SparkSpec {
       (40L, "p q r s t u v w")
     ).toDF("doc_id", "text")
     val sh = Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(corpus), 5)
-    val out = Dedup.similarDocsTopK(sh, queryPred = col("doc_id") === 10L, k = 3)
+    def similar(pred: org.apache.spark.sql.Column) = Dedup.pairs(sh,
+      PairSpec(candidates = Candidates(queries = Some(pred)), verify = TopK(3)))
+    val out = similar(col("doc_id") === 10L)
       .collect().map(r => (r.getAs[Long]("rank"),
         (r.getAs[Long]("neighbor_id"), r.getAs[Long]("n_common"),
           r.getAs[Long]("sim_ppm")))).toMap
@@ -862,7 +867,7 @@ class DedupSpec extends SparkSpec {
       2L -> ((50L, 3L, 600000L)),
       3L -> ((30L, 1L, 142857L))))
     // only the query doc's rows come back — corpus docs are not queries
-    val all = Dedup.similarDocsTopK(sh, queryPred = col("doc_id") === 10L, k = 3)
+    val all = similar(col("doc_id") === 10L)
       .select("query_id").distinct().collect().map(_.getLong(0)).toSet
     assert(all === Set(10L))
   }
@@ -880,8 +885,8 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Long]("n_common"), r.getAs[Long]("sim_ppm"), r.getAs[Long]("rank"))).toSet
     val served = rows(Dedup.similarDocsTopKFromIndex(spark, t, pred, k = 3))
-    val direct = rows(Dedup.similarDocsTopK(
-      Dedup.shingleIdsFromArrays(graft.ops.Vocab.hashTokenIdArrays(docs), 5), pred, k = 3))
+    val direct = rows(Dedup.pairs(graft.ops.Vocab.hashTokenIdArrays(docs),
+      PairSpec(Grams(5), candidates = Candidates(queries = Some(pred)), verify = TopK(3))))
     assert(served.nonEmpty)
     assert(served === direct)
   }

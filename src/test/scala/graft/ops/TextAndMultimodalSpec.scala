@@ -956,7 +956,7 @@ class TextAndMultimodalSpec extends SparkSpec {
     assert(sigs.groupBy("doc_id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       Map(1L -> 2L, 2L -> 3L, 3L -> 3L, 4L -> 2L, 5L -> 2L))
-    val pairs = Dedup.jaccardPairsFromShingles(sigs, threshold = 0.5)
+    val pairs = Dedup.pairs(sigs, PairSpec())
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Double]("jaccard"))).toSet
     assert(pairs.map(p => (p._1, p._2)) === Set((1L, 2L), (1L, 5L), (2L, 5L)))

@@ -8,9 +8,10 @@ import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Every iterative loop and every registry entry of the one ANN pipeline
-  * (`Vectors.topK`), run through its registry entry at sf0.001, under two
-  * checks on the frames its [[PlanGuard.CheckpointChain]] manages:
+/** Every iterative loop, every registry entry of the one ANN pipeline
+  * (`Vectors.topK`) and every entry of the one near-duplicate pair pipeline
+  * (`Dedup.pairs`, with the band-key entries d10 and d14), run through its
+  * registry entry at sf0.001, under two checks on the frames it manages:
   *   - use-after-release: no executed plan scans a checkpoint RDD that was
   *     already released when the plan ran. Unpersist events and query
   *     completions share the listener bus's shared queue, so they arrive
@@ -35,7 +36,13 @@ class FrameLifecycleSpec extends SparkSpec {
     "s1_ann_bruteforce", "s2_ann_ivf", "s3_ann_lsh", "s4_ann_ivf_multiprobe",
     "s5_ann_lsh_multitable", "s6_ann_ivf_twolevel", "s7_ann_filtered",
     "s8_ann_quantized", "s9_ann_pq", "s11_ann_ivfpq", "s12_ann_pq_rerank",
-    "s16_ann_jl", "s22_cross_knn", "s27_ann_default"
+    "s16_ann_jl", "s22_cross_knn", "s27_ann_default",
+    "d2_jaccard_pairs", "d4_minhash_pairs", "d7_dedup_groups", "d10_neardup_keep_first",
+    "d11_char_ngram_jaccard", "d14_incremental_dedup", "d18_containment_pairs",
+    "d19_cross_source_dups", "d21_minhash_estimate", "d22_simhash_pairs",
+    "d23_dup_cluster_profile", "d24_threshold_sweep", "d26_winnow_overlap",
+    "d29_lsh_confusion", "d30_idf_cosine", "d36_band_sweep", "d38_similar_docs",
+    "m8_frame_jaccard", "x60_retrieval_eval", "x64_retrieval_eval_served"
   ).map(n => n -> (() => SparkEntry.queries(n)(spark, dir))) ++ Seq(
     "artifact:dedup_groups" -> (() => {
       spark.sql(s"DROP TABLE IF EXISTS dedup_groups_$sfx")
@@ -62,9 +69,9 @@ class FrameLifecycleSpec extends SparkSpec {
     }))
 
   private val loopInputs: Map[String, () => DataFrame] = Map(
-    "d9_dedup_groups_star" -> (() => graft.ops.Dedup.jaccardPairsFromShingles(
-      graft.ops.Dedup.shingleIdsFromArrays(
-        graft.ops.Vocab.hashTokenIdArrays(Tables.documents(spark, dir)), 5), 0.5)),
+    "d9_dedup_groups_star" -> (() => graft.ops.Dedup.pairs(
+      graft.ops.Vocab.hashTokenIdArrays(Tables.documents(spark, dir)),
+      graft.ops.PairSpec(graft.ops.PairSpec.Grams(5)))),
     "s24_ann_beam" -> (() => graft.ops.Vectors.navGraph(Tables.embeddings(spark, dir))))
 
   /** RDD ids `plan` reads: checkpoint scans, and the cached relations it

@@ -56,14 +56,13 @@ class BucketedLayoutSpec extends SparkSpec {
   }
 
   test("d7 pair graph: bucketed edge table plans a CC round with zero exchanges") {
-    import graft.ops.{Dedup, Vocab}
+    import graft.ops.{Dedup, PairSpec, Vocab}
     // the REAL d7 input shape: near-dup pairs over the fixture documents,
     // symmetrized exactly as dedupGroups does before its label-propagation
     // loop — at 100 TB this edge table is corpus-sized and re-joined every
     // CC round, so it is THE candidate for the bucketed layout
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val pairs = Dedup.jaccardPairsFromShingles(
-      Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(docs), 5), threshold = 0.5)
+    val pairs = Dedup.pairs(Vocab.hashTokenIdArrays(docs), PairSpec(PairSpec.Grams(5)))
     val sym = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
     reset("d7_edges", "d7_edges_plain")
@@ -170,7 +169,7 @@ class BucketedLayoutSpec extends SparkSpec {
   }
 
   test("materialized dedup groups: built once, hash-identical to the inline CC, exchange-free reads") {
-    import graft.ops.{Dedup, Vocab}
+    import graft.ops.{Dedup, PairSpec, Vocab}
     val sfDir = "/root/testdata/sf0.001"
     val docs = graft.Tables.documents(spark, sfDir)
     val table = "dedup_groups_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
@@ -180,8 +179,7 @@ class BucketedLayoutSpec extends SparkSpec {
     val viaArtifact = Dedup.materializedGroupsFor(docs, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val inline = Dedup.dedupGroupsAuto(
-      Dedup.jaccardPairsFromShingles(
-        Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(docs), 5), threshold = 0.5))
+      Dedup.pairs(Vocab.hashTokenIdArrays(docs), PairSpec(PairSpec.Grams(5))))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaArtifact === inline)
     spark.sqlContext.clearCache()
@@ -273,12 +271,11 @@ class BucketedLayoutSpec extends SparkSpec {
   }
 
   test("incrementalGroups: batch fold-in ≡ full CC rebuild (canonical min-id labels)") {
-    import graft.ops.{Dedup, Vocab}
+    import graft.ops.{Dedup, PairSpec, Vocab}
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val cut = 400L // corpus = ids < cut, batch = ids ≥ cut
     def pairsOf(d: org.apache.spark.sql.DataFrame) =
-      Dedup.jaccardPairsFromShingles(
-        Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5), threshold = 0.5)
+      Dedup.pairs(Vocab.hashTokenIdArrays(d), PairSpec(PairSpec.Grams(5)))
     val corpusGroups = Dedup.dedupGroupsAuto(pairsOf(docs.filter(col("doc_id") < cut)))
       .persist()
     // the batch's new connectivity: every full-corpus pair touching a

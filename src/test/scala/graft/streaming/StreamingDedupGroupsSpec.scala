@@ -6,18 +6,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.ops.Dedup
+import graft.ops.{Dedup, PairSpec, Vocab}
+import graft.ops.PairSpec._
 import graft.sources.BucketedLayout
 
 case class DocChunk(doc_id: Long, text: String)
 
 /** The full CDC-dedup lifecycle (round-5 verdict "next" #5): documents
-  * stream in micro-batches; each batch's near-dup candidate pairs come from
-  * the PERSISTED band-key index ([[Dedup.bandPairsFromIndex]] for
-  * batch–corpus, [[Dedup.bandCandidatePairs]] for batch–batch — the corpus
-  * is never re-shingled), fold into the bucketed groups artifact via
-  * [[Dedup.incrementalGroups]], and the batch's own keys append to the
-  * index. Every chunk boundary is a full kill + restart-from-checkpoint,
+  * stream in micro-batches; each batch's keys append to the PERSISTED
+  * band-key index, and its near-dup candidate pairs (batch–batch and
+  * batch–corpus) come from [[Dedup.pairs]] over that index with the
+  * batch's doc ids as queries — the corpus is never re-shingled — then
+  * fold into the bucketed groups artifact via [[Dedup.incrementalGroups]]. Every chunk boundary is a full kill + restart-from-checkpoint,
   * and one chunk's fold is deliberately REPLAYED to pin idempotence (a
   * crash between artifact write and checkpoint commit re-runs the batch —
   * folding already-certified pairs and re-appending already-present keys
@@ -66,17 +66,14 @@ class StreamingDedupGroupsSpec extends SparkSpec {
       * executes in a CLONED session, and a relation resolved in a
       * different session keeps its cached file listing across this fold's
       * appends (the read would silently miss every batch after the first;
-      * the refresh below is the same guard for the session we are in).
+      * appendBandKeys refreshes the table in the session we are in).
       */
     def fold(batch: DataFrame): Unit = {
       val ss = batch.sparkSession
-      if (ss.catalog.tableExists(indexTable)) ss.catalog.refreshTable(indexTable)
-      val internal = Dedup.bandCandidatePairs(batch)
-      val pairs =
-        if (ss.catalog.tableExists(indexTable))
-          Dedup.bandPairsFromIndex(batch, ss.table(indexTable))
-            .unionByName(internal).distinct()
-        else internal
+      Dedup.appendBandKeys(batch, indexTable)
+      val ids = batch.select(col("doc_id")).collect().map(_.getLong(0))
+      val pairs = Dedup.pairs(ss.table(indexTable), PairSpec(Given(Seq("band", "r0", "r1")),
+        candidates = Candidates(None, Some(col("doc_id").isin(ids: _*))), verify = Keys))
       val updated =
         (if (ss.catalog.tableExists(groupsTable))
           Dedup.incrementalGroups(ss.table(groupsTable), pairs)
@@ -84,7 +81,6 @@ class StreamingDedupGroupsSpec extends SparkSpec {
           .localCheckpoint(true) // materialize BEFORE overwriting the input table
       reset(groupsTable)
       BucketedLayout.writeBucketed(updated, groupsTable, "doc_id", buckets = 8)
-      Dedup.appendBandKeys(batch, indexTable)
     }
 
     val ms = MemoryStream[DocChunk]
@@ -113,8 +109,8 @@ class StreamingDedupGroupsSpec extends SparkSpec {
     assert(groupsOf(spark.table(groupsTable)) === streamed)
 
     // batch rebuild over the SAME pair rule on the whole corpus
-    val rebuilt = groupsOf(Dedup.dedupGroupsAuto(
-      Dedup.bandCandidatePairs(docs.toDF())))
+    val rebuilt = groupsOf(Dedup.dedupGroupsAuto(Dedup.pairs(Vocab.hashTokenIdArrays(docs.toDF()),
+      PairSpec(Grams(5), MinHash(4), Candidates(None), Keys))))
     assert(streamed === rebuilt)
     assert(streamed.nonEmpty)
     // the chunking actually exercised cross-chunk merges (a group spanning
