@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 import graft.binlog.{BinlogEvents, DailyCounts, Ingest, TransactionStats}
 import graft.ops.{Dedup, TextOps, Vectors, Vocab}
+import graft.ops.TextOps.Postings
 
 import RegistryLib._
 
@@ -27,9 +28,9 @@ private[graft] object RegistryX {
       // lexical retrieval next to the ANN surface: BM25 top-10 per query
       // over the inverted index; query terms broadcast, scoring touches
       // only their postings; ppm scores keep ranking cross-engine-exact
-      TextOps.bm25Search(Tables.documents(s, dir), Seq(
+      TextOps.bm25Search(Postings.Recompute(Tables.documents(s, dir)), Left(Seq(
         (0L, "hash join batch"), (1L, "vector scan filter"),
-        (2L, "window agg order")), k = 10)),
+        (2L, "window agg order"))))),
     "x58_bm25_served" -> ((s, dir) => {
       // the lexical index's build-once/serve-many path (the s29/s33
       // artifact lifecycle brought to BM25): the postings persist
@@ -38,9 +39,9 @@ private[graft] object RegistryX {
       // is layout-independent — the hash must equal x33's
       val t = "postings_" + dir.replaceAll("[^A-Za-z0-9]", "_")
       TextOps.materializedPostings(Tables.documents(s, dir), t)
-      TextOps.bm25SearchFromIndex(s, t, Seq(
+      TextOps.bm25Search(Postings.Served(t), Left(Seq(
         (0L, "hash join batch"), (1L, "vector scan filter"),
-        (2L, "window agg order")), k = 10)
+        (2L, "window agg order"))))
     }),
     "x55_hybrid_rrf" -> ((s, dir) => {
       // hybrid search: the x33 BM25 list and the exact-cosine list for the
@@ -72,22 +73,18 @@ private[graft] object RegistryX {
       // known-item QA: at which BM25 rank does each query doc's
       // most-Jaccard-similar neighbor (d38 truth) come back? rank 0 =
       // missed the top-10 — every miss is a row, not a silent drop
-      TextOps.retrievalAgreement(Tables.documents(s, dir),
-        queryPred = col("doc_id") % 31 === 0)),
+      TextOps.retrievalAgreement(Tables.documents(s, dir), col("doc_id") % 31 === 0,
+        Postings.Recompute(Tables.documents(s, dir)))),
     "x64_retrieval_eval_served" -> ((s, dir) => {
       // the corpus-scale form of x60: the SAME known-item agreement
       // (d38 Jaccard top-1 truth vs BM25 rank, self excluded) but the
-      // ranking side reads the persisted postings artifact in query
-      // batches — nothing rebuilds per eval; hash must equal x60's
+      // ranking side reads the persisted postings artifact (the query
+      // terms prune it by a semi-join and never visit the driver) —
+      // nothing rebuilds per eval; hash must equal x60's
       val t = "postings_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      // joinThreshold 16 (not the API default 128): sf0.01's 1-in-31
-      // sample is 17 queries, so the driver's correctness gate must
-      // dispatch to the PRODUCTION broadcast-semi-join plan, not the
-      // small-batch IN-list path (round-9 verdict #2 — the gate at the
-      // attested scale was executing the other branch; the paths are
-      // spec-pinned row-identical, so the hash is unchanged)
-      TextOps.retrievalAgreementServed(Tables.documents(s, dir), t,
-        queryPred = col("doc_id") % 31 === 0, joinThreshold = 16L)
+      val docs = Tables.documents(s, dir)
+      TextOps.materializedPostings(docs, t)
+      TextOps.retrievalAgreement(docs, col("doc_id") % 31 === 0, Postings.Served(t))
     }),
     "x67_retrieval_eval_indexed" -> ((s, dir) => {
       // the FULLY-indexed eval: truth from the persisted shingle index
@@ -95,11 +92,11 @@ private[graft] object RegistryX {
       // persisted postings — zero per-eval derivation on either side;
       // hash must equal x60/x64 (oracle shared verbatim)
       val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-      // joinThreshold 16 for the same reason as x64: the sf0.01 gate
-      // attests the distributed semi-join ranking plan
-      TextOps.retrievalAgreementIndexed(Tables.documents(s, dir),
-        "shingles_" + sfx, "postings_" + sfx,
-        queryPred = col("doc_id") % 31 === 0, joinThreshold = 16L)
+      val docs = Tables.documents(s, dir)
+      Dedup.materializedShingleIndex(docs, "shingles_" + sfx)
+      TextOps.materializedPostings(docs, "postings_" + sfx)
+      TextOps.retrievalAgreement(docs, col("doc_id") % 31 === 0,
+        Postings.Served("postings_" + sfx), shingleIndex = Some("shingles_" + sfx))
     }),
     "x61_budget_waterfill" -> ((s, dir) =>
       // max–min fair token allocation across sources under a 20k budget:
@@ -161,9 +158,9 @@ private[graft] object RegistryX {
       TextOps.materializedPostings(base.filter(col("doc_id") < cut), t)
       val current = base.filter(col("doc_id") % 13 =!= 5)
       TextOps.compactPostings(current, t)
-      TextOps.bm25SearchFromIndex(s, t, Seq(
+      TextOps.bm25Search(Postings.Served(t), Left(Seq(
         (0L, "hash join batch"), (1L, "vector scan filter"),
-        (2L, "window agg order")), k = 10)
+        (2L, "window agg order"))))
     }),
     "x69_postings_staleness" -> ((s, dir) => {
       // the postings index's SERVE-vs-REBUILD decision read — the

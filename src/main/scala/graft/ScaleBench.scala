@@ -77,8 +77,9 @@ object ScaleBench {
       ("d2_jaccard_pairs", (d: DataFrame) =>
         Dedup.pairs(Vocab.hashTokenIdArrays(d), PairSpec(PairSpec.Grams(5))), true),
       ("d4_minhash_pairs", (d: DataFrame) =>
-        Dedup.pairs(Dedup.shingleIdsFromArrays(Vocab.hashTokenIdArrays(d), 5),
-          PairSpec(sign = PairSpec.MinHash(4), verify = PairSpec.Keys)), true),
+        // registry d4's spec: the token-id arrays signed in one projection
+        Dedup.pairs(Vocab.hashTokenIdArrays(d),
+          PairSpec(PairSpec.Grams(5), PairSpec.MinHash(4), verify = PairSpec.Keys)), true),
       ("d7_dedup_groups", (d: DataFrame) =>
         Dedup.dedupGroupsAuto(
           Dedup.pairs(Vocab.hashTokenIdArrays(d), PairSpec(PairSpec.Grams(5)))), true),
@@ -226,9 +227,9 @@ object ScaleBench {
         // postings — cost must track corpus size, never corpus×queries
         // (x55's fusion tail is |Q|·perList metadata riding this stage +
         // the already-probed ANN scan — not separately probed)
-        graft.ops.TextOps.bm25Search(d, Seq(
+        graft.ops.TextOps.bm25Search(graft.ops.TextOps.Postings.Recompute(d), Left(Seq(
           (0L, "hash join batch"), (1L, "vector scan filter"),
-          (2L, "window agg order")), k = 10), true),
+          (2L, "window agg order")))), true),
       ("x56_dsir_weights", (d: DataFrame) =>
         // one persisted explode + broadcast vocab/model: cost must track
         // corpus size; the model stays vocab+1-sized at any scale
@@ -251,9 +252,9 @@ object ScaleBench {
         d.sparkSession.sql(s"DROP TABLE IF EXISTS $t")
         d.sparkSession.sql(s"DROP TABLE IF EXISTS ${t}_len")
         graft.ops.TextOps.materializedPostings(d, t)
-        graft.ops.TextOps.bm25SearchFromIndex(d.sparkSession, t, Seq(
+        graft.ops.TextOps.bm25Search(graft.ops.TextOps.Postings.Served(t), Left(Seq(
           (0L, "hash join batch"), (1L, "vector scan filter"),
-          (2L, "window agg order")), k = 10)
+          (2L, "window agg order"))))
       }, true),
       // --- the x70 compaction claim, isolated (three probes, run in this
       // order). The corpus is the scaled docs with text concatenated ×8
@@ -330,9 +331,9 @@ object ScaleBench {
           Vectors.trainedCentroidsDistributed(e,
             c = math.min(Vectors.spacedCentroidIds(e.count()).size, 65536))), false),
       ("x64_served_join", (d: DataFrame) => {
-        // the served eval's distributed ranking side cold (round-9: the
-        // semi-join dispatch past the query threshold): postings build +
-        // ONE distributed plan serving a fixed 1-in-31 sample of the BASE
+        // the served eval's distributed ranking side cold (the frame
+        // query form, whose terms prune the postings by a semi-join):
+        // postings build + ONE distributed plan serving a fixed 1-in-31 sample of the BASE
         // slice. Query count is pinned across scales so the ratio
         // isolates corpus reads — growing queries 8× too would put the
         // inherent Q×postings product term (present on EVERY path,
@@ -347,8 +348,7 @@ object ScaleBench {
           .filter(col("doc_id") < lit(docStride) && col("doc_id") % 31 === 0)
           .select(col("doc_id").as("query_id"),
             explode(array_distinct(split(col("text"), " "))).as("term"))
-        graft.ops.TextOps.bm25SearchFromIndexJoin(d.sparkSession, t, qterms,
-          k = 10, excludeQueryDoc = true)
+        graft.ops.TextOps.bm25Search(graft.ops.TextOps.Postings.Served(t), Right(qterms))
       }, true),
       ("x62_bpe_merges", (d: DataFrame) =>
         // tokenizer training end-to-end on the TRANSLATED (no-collapse)

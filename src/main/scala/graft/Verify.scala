@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{StructField, TimestampType}
   * came back empty and only an out-of-band judge re-run could prove the
   * round): alongside the dumps, Verify writes `outDir/verify_attest.json`
   * and prints one compact tail-surviving JSON line with, per query, the
-  * dumped parquet's row count, a SHA-256 over its part-file bytes, and
+  * dumped parquet's row count, a SHA-256 over its sorted rows, and
   * whether the PlanGuard gate passed — the Bench self-adjudication
   * discipline applied to correctness, so an empty or torn driver artifact
   * is adjudicable from the repo alone (the committed `VERIFY_attest_r<N>
@@ -55,16 +55,9 @@ object Verify {
         // its correctness row — the class is banned, not just x53
         graft.plans.PlanGuard.assertNoCorpusProducts(name, df)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // per-query attestation: row count read BACK from the dumped
-        // parquet (attests the artifact, not the in-memory frame) and a
-        // SHA-256 over its part-file bytes in name order
-        val dir = new java.io.File(s"$outDir/$name")
-        val parts = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        parts.foreach(f => md.update(Files.readAllBytes(f.toPath)))
-        val sha = md.digest().map("%02x".format(_)).mkString
-        val rows = spark.read.parquet(s"$outDir/$name").count()
+        // per-query attestation over the rows read BACK from the dumped
+        // parquet (attests the artifact, not the in-memory frame)
+        val (rows, sha) = digest(spark.read.parquet(s"$outDir/$name"))
         attest += name ->
           s"""{"ok":true,"rows":$rows,"sha256":"$sha","guard_ok":true}"""
       }
@@ -98,6 +91,18 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/verify_attest.json"), attestJson)
     println(s"""{"metric":"verify_attest","sf":${q(sfDir)},"n_queries":${attest.size},"n_ok":${attest.size - failed.size},"failed":${failed.map(q).mkString("[", ",", "]")}}""")
     spark.stop()
+  }
+
+  /** Row count and SHA-256 of a result's row multiset: each row's JSON
+    * form, sorted on the driver, one per line. Row order and partitioning
+    * do not move it, so two trees with the same rows attest the same
+    * digest.
+    */
+  private[graft] def digest(df: DataFrame): (Long, String) = {
+    val lines = df.toJSON.collect().sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    (lines.length.toLong, md.digest().map("%02x".format(_)).mkString)
   }
 
   /** Write instant timestamps as TIMESTAMP_NTZ so the parquet files carry

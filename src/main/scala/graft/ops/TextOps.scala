@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.plans.PlanGuard.GuardedCheckpointOps
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.BucketedLayout
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a large-scale training-data pipeline over the
@@ -331,10 +332,7 @@ object TextOps {
     * sort.
     */
   def topTerms(docs: DataFrame, k: Int = 5): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = postingsOf(docs)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
@@ -1056,10 +1054,7 @@ object TextOps {
     * asc, so the result is deterministic.
     */
   def corpusTopTerms(docs: DataFrame, k: Int = 25): DataFrame =
-    docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
+    postingsOf(docs)
       .groupBy(col("term"))
       .agg(sum(col("tf")).as("n_occurrences"),
         count(lit(1)).as("n_docs"))
@@ -1120,64 +1115,6 @@ object TextOps {
         (sum(term) % p).as("fingerprint"),
         count(lit(1)).as("n_tokens")
       )
-  }
-
-  /** BM25 full-text relevance search — the retrieval counterpart of the ANN
-    * surface for the lexical side: score documents against a small query
-    * batch over the corpus inverted index (term → (doc, tf) postings) and
-    * return the top-k per query.
-    *
-    *   idf(t)  = ln((N − df + 0.5) / (df + 0.5) + 1)      (Robertson/Lucene)
-    *   s(q, d) = Σ_t idf · tf·(k1+1) / (tf + k1·(1 − b + b·len/avglen))
-    *
-    * Scale shape: postings and doc lengths are one explode + two map-side-
-    * combined aggregations (the x7 machinery); the QUERY term table is
-    * tiny and broadcast, so scoring touches only postings of query terms —
-    * the posting-list intersection a search engine does, as a broadcast
-    * semi-join; top-k is a per-query window over the matched docs only.
-    * Scores are emitted as ppm longs (micro-relevance): the only
-    * cross-engine float risk is ~1 ulp of `ln`, 9 orders below the
-    * quantum, so ranking ties break identically everywhere.
-    */
-  def bm25Search(docs: DataFrame, queries: Seq[(Long, String)], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val postings = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist() // feeds lengths, df, and the scoring join
-    val lens = postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-    val dfs = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = lens.agg(count(lit(1)).as("n_docs"), avg(col("len")).as("avglen"))
-    val qterms = queries
-      .flatMap { case (qid, text) => text.split(" ").distinct.map(t => (qid, t)) }
-      .toDF("query_id", "term")
-    // (round 13: a per-term idf / per-doc denom pre-fold was measured here
-    // and REVERTED — with the |queries|-bounded batches this entry point
-    // serves, the blowup is small and the extra joins/broadcasts cost more
-    // than the per-row log they save; the batch-scale paths get the
-    // pre-fold in bm25RankMatchedHits and retrievalAgreement instead.)
-    val scored = postings
-      .join(broadcast(qterms), Seq("term"))
-      .join(broadcast(dfs.join(broadcast(qterms.select(col("term")).distinct()),
-        Seq("term"))), Seq("term"))
-      .join(lens, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"),
-        (log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
-          (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("len") / col("avglen"))))
-          .as("s"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(lit(1e6) * sum(col("s"))).cast("long").as("score_ppm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score_ppm").desc, col("doc_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
   }
 
   /** Max–min fair token-budget allocation across sources (waterfilling —
@@ -1257,482 +1194,253 @@ object TextOps {
         col("alloc_tokens"))
   }
 
+  /** Where the BM25 surface reads its postings: (term, doc_id, tf, len)
+    * index rows plus the (doc_id, len) ledger the two corpus constants
+    * (n_docs, avglen) come from.
+    */
+  sealed trait Postings
+  object Postings {
+    /** Derive the postings from the corpus on every call (x33, x55, x60). */
+    final case class Recompute(docs: DataFrame) extends Postings
+    /** Read a [[materializedPostings]] table and its `_len` ledger — no
+      * build work per query (x58, x64, x67, x70).
+      */
+    final case class Served(table: String) extends Postings
+  }
+
+  /** BM25 full-text relevance search — the lexical counterpart of the ANN
+    * surface: score the corpus against a query set over the inverted index
+    * (term → (doc, tf) postings) and return the top-k per query as
+    * (query_id, doc_id, score_ppm, rank).
+    *
+    *   idf(t)  = ln((N − df + 0.5) / (df + 0.5) + 1)      (Robertson/Lucene)
+    *   s(q, d) = Σ_t idf · tf·(k1+1) / (tf + k1·(1 − b + b·len/avglen))
+    *
+    * with k1 = 1.2 and b = 0.75, the constants every oracle fixes. One
+    * pipeline, whatever the source and the query form:
+    *
+    *   - postings: `Recompute` derives them ([[postingsOf]] plus the
+    *     length ledger, one persisted aggregate feeding both) and
+    *     repartitions them on doc_id ahead of the query-term blowup — a
+    *     fixed-count repartition is exempt from AQE coalescing, so when
+    *     the query side broadcasts, the blowup join never collapses onto
+    *     one task (doc_id, not term: a stopword's df·qf rows would all land
+    *     in one term partition). `Served` reads the term-bucketed table and
+    *     dedups the matched rows on (term, doc_id), which makes the
+    *     byte-identical rows a torn [[appendToPostings]] replay leaves
+    *     invisible;
+    *   - queries: `Left` driver literal texts, whose distinct space-split
+    *     terms push into the postings scan as a literal term IN-list (with
+    *     the served table's term-sorted buckets, row groups holding no
+    *     query term skip on min/max stats); `Right` a (query_id, term) frame
+    *     of corpus documents, one row per distinct term of each query (the
+    *     [[retrievalAgreement]] shape): the postings prune by a left-semi
+    *     join on its distinct terms, the frame never visits the driver, and
+    *     each query's own document is excluded from its ranking;
+    *   - ranking ([[rankMatched]]): df from the matched postings (each
+    *     (term, doc_id) appears once, so df = row count), the corpus
+    *     constants from the full ledger, the whole per-term addend folded
+    *     onto the matched posting row before the query-term join, so the
+    *     Σ_term qf·df blowup rows carry no arithmetic. Scores are ppm longs
+    *     (the only cross-engine float risk is ~1 ulp of `ln`, 9 orders
+    *     below the quantum), ranked per query by (score desc, doc_id asc).
+    *
+    * The matched postings persist lazily: the returned plan reads them
+    * twice (df and scoring) and a per-query cache clear releases them.
+    * Every source and query form gives the same rows for the same queries
+    * (spec-pinned; x58 ≡ x70's compacted serve ≡ x33, x64 ≡ x67 ≡ x60,
+    * oracle-attested).
+    */
+  def bm25Search(postings: Postings, queries: Either[Seq[(Long, String)], DataFrame],
+      k: Int = 10): DataFrame = {
+    val (rows, lens) = postings match {
+      case Postings.Recompute(docs) =>
+        val (rows, lens) = withLens(postingsOf(docs).persist())
+        val nPart = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+        (rows.repartition(nPart, col("doc_id")), lens.persist())
+      case Postings.Served(table) =>
+        val spark = org.apache.spark.sql.SparkSession.active
+        (spark.table(table), spark.table(table + "_len"))
+    }
+    val (qterms, matched) = queries match {
+      case Left(texts) =>
+        val spark = rows.sparkSession
+        import spark.implicits._
+        val qt = texts.flatMap { case (qid, text) => text.split(" ").distinct.map(t => (qid, t)) }
+        (broadcast(qt.toDF("query_id", "term")),
+          rows.filter(col("term").isInCollection(qt.map(_._2).distinct)))
+      case Right(qt) =>
+        // unhinted: the distinct query terms are vocabulary-of-the-query-
+        // set-sized (Heaps-law growth when the query set is corpus-
+        // proportional) — AQE broadcasts them from their true runtime size
+        // at fixture scale and shuffles at corpus scale
+        (qt, rows.join(qt.select(col("term")).distinct(), Seq("term"), "left_semi"))
+    }
+    val hits = postings match {
+      case _: Postings.Served => matched.dropDuplicates("term", "doc_id")
+      case _ => matched
+    }
+    rankMatched(hits.persist(), lens, qterms, k, excludeSelf = queries.isRight)
+  }
+
   /** Retrieval-agreement eval — the known-item QA a retrieval stack runs
     * before trusting its ranker: TRUTH is each query document's
     * most-Jaccard-similar neighbor (d38's top-1 through the df-capped
     * shingle index), the QUESTION is at which rank full-document BM25 —
-    * the x33 scorer with the query doc's own distinct tokens as the
-    * query, SELF excluded — retrieves that neighbor. Output per query
-    * doc that has a ≥-threshold neighbor: (query_id, truth_id,
-    * truth_sim_ppm, bm25_rank), rank 0 = truth missed the top-k (every
-    * miss is a row to read, not a silent drop). Both ingredients are
-    * independently oracle-attested (d38, x33); the composition stays
-    * integer-exact end to end.
+    * [[bm25Search]] with the query doc's own distinct tokens as the
+    * query, self excluded — retrieves that neighbor. Output per query doc
+    * that has a neighbor: (query_id, truth_id, truth_sim_ppm, bm25_rank),
+    * rank 0 = truth missed the top 10 (every miss is a row to read, not a
+    * silent drop). Both ingredients are independently oracle-attested
+    * (d38, x33); the composition stays integer-exact end to end.
     *
-    * Scale note: only the QUERY-derived frames broadcast (query terms and
-    * their idfs), so the predicate must select a bounded query set — x60
-    * samples 1-in-31; an eval wants a sample, not a census, because
-    * exhaustive batch BM25 scores Σ_term qf·df pairs (64M at the old
-    * 1-in-7 set on the sf0.1 fixture). The corpus-sized frames (postings,
-    * per-doc norms) stay on shuffle joins. A corpus-scale eval serves the
-    * same question through the persisted postings index (x58) in query
-    * batches.
+    * The truth side is `Dedup.pairs` with `TopK(1)`, or — when
+    * `shingleIndex` names a [[graft.ops.Dedup.materializedShingleIndex]]
+    * table — [[graft.ops.Dedup.similarDocsTopKFromIndex]] over it; the
+    * ranking side reads `postings`. x60 recomputes both, x64 serves the
+    * postings, x67 serves both; the rows are the same.
+    *
+    * Scale note: the predicate should select a bounded query set — x60
+    * samples 1-in-31; an eval wants a sample, not a census, because batch
+    * BM25 scores Σ_term qf·df pairs (64M at a 1-in-7 set on the sf0.1
+    * fixture).
     */
-  def retrievalAgreement(docs: DataFrame, queryPred: Column,
-      k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val truth = retrievalTruth(docs, queryPred)
-    val postings = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist() // feeds lengths, df, and the scoring join
-    val lens = postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-    val dfs = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = lens.agg(count(lit(1)).as("n_docs"), avg(col("len")).as("avglen"))
+  def retrievalAgreement(docs: DataFrame, queryPred: Column, postings: Postings,
+      shingleIndex: Option[String] = None): DataFrame = {
+    val truth = (shingleIndex match {
+      case Some(t) => Dedup.similarDocsTopKFromIndex(docs.sparkSession, t, queryPred, k = 1)
+      case None => Dedup.pairs(Vocab.hashTokenIdArrays(docs), PairSpec(PairSpec.Grams(5),
+        candidates = PairSpec.Candidates(queries = Some(queryPred)), verify = PairSpec.TopK(1)))
+    }).select(col("query_id"), col("neighbor_id").as("truth_id"),
+      col("sim_ppm").as("truth_sim_ppm"))
     val qterms = docs.filter(queryPred)
       .select(col("doc_id").as("query_id"),
         explode(array_distinct(tokens(col("text")))).as("term"))
-    // the scored join's row count is Σ_term qf(term)·df(term) — a stopword
-    // shared by every query and every doc contributes |Q|·|D| rows, so the
-    // per-row work must be ONE multiply-add: idf folds once per TERM and
-    // the length normalizer once per DOC before the join (bit-identical
-    // doubles — same sub-expressions over the same inputs, and the per-row
-    // tree (idf·(tf·(k1+1)))/(tf+denom) keeps the oracle's operation order)
-    val idfs = dfs
-      .join(qterms.select(col("term")).distinct(), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"),
-        log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
-          .as("idf"))
-    val norms = lens.crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (lit(k1) * (lit(1.0 - b) + lit(b) * col("len") / col("avglen"))).as("denom"))
-    // norms attaches to the postings BEFORE the query-term blowup
-    // (joining it after would move the blown-up rows through a doc_id
-    // exchange) on a SHUFFLE join — norms is corpus-sized (one row per
-    // doc), so broadcasting it would hit the 8 GB broadcast ceiling long
-    // before the corpus does (AQE still broadcasts it at fixture scale).
-    // qterms joins UNHINTED (round 10): at the default 1-in-31 sample the
-    // (query_id, term) frame is corpus-PROPORTIONAL, so a hint would
-    // force a corpus-scale broadcast at 100 TB — the round-8 x64 hazard
-    // in its recompute form. Round 11 extends the same verdict to the
-    // distinct-terms and idfs frames: one row per distinct QUERY term is
-    // vocabulary-of-the-sample-sized — Heaps-law growth over an open
-    // corpus, not a static bound — so the hardened PlanGuard (which now
-    // distrusts term-keyed aggregates) flags their hints, and they too
-    // join bare: AQE broadcasts each from its TRUE runtime size at
-    // fixture scale and shuffles at corpus scale.
-    // The EXPLICIT repartition protects the BROADCAST regime: when AQE
-    // broadcasts qterms+idfs, the blowup join runs directly over this
-    // stage, whose joined-postings exchange is only ~20 MB — AQE would
-    // coalesce it to one partition and the 64× join blowup would run on
-    // ONE task; a fixed-count repartition is exempt from coalescing and
-    // sizes the stage for its OUTPUT. In the SHUFFLE regime (qterms past
-    // the threshold) Spark inserts a term-keyed exchange after it which
-    // AQE may still coalesce — but only in the narrow mid-scale window
-    // where the joined inputs are genuinely small; at corpus scale the
-    // inputs size the stage themselves. Repartitioning on term instead
-    // would pin that regime too, but concentrates every stopword's
-    // df·qf blowup rows in ONE partition — a skew straggler at exactly
-    // the scale the guard cares about — so doc_id stays the key.
-    val nPart = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // round 14 (the bm25RankMatchedHits fold, applied to the recompute
-    // form): the idfs join moves BEFORE the q×d blowup — it both folds the
-    // whole per-term addend onto the posting row (the blowup rows carry
-    // zero arithmetic, only query_id attachment + sum) and FILTERS the
-    // corpus postings to the query vocabulary before the blowup join (the
-    // same inner-join restriction the qterms join applied, one stage
-    // earlier). Same IEEE tree over the same scalars ⇒ identical addend
-    // multiset per (query, doc) group.
-    val scored = postings
-      .join(norms, Seq("doc_id"))
-      .repartition(nPart, col("doc_id"))
-      .join(idfs, Seq("term"))
-      .select(col("term"), col("doc_id"),
-        (col("idf") * (col("tf") * lit(k1 + 1.0)) / (col("tf") + col("denom"))).as("s"))
-      .join(qterms, Seq("term"))
-      .filter(col("doc_id") =!= col("query_id")) // the query doc IS a corpus doc
-      .select(col("query_id"), col("doc_id"), col("s"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(lit(1e6) * sum(col("s"))).cast("long").as("score_ppm"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score_ppm").desc, col("doc_id").asc)
-    val ranked = scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id").as("truth_id"),
-        col("rank").as("bm25_rank"))
+    val ranked = bm25Search(postings, Right(qterms))
+      .select(col("query_id"), col("doc_id").as("truth_id"), col("rank").as("bm25_rank"))
     truth.join(ranked, Seq("query_id", "truth_id"), "left")
       .select(col("query_id"), col("truth_id"), col("truth_sim_ppm"),
         coalesce(col("bm25_rank"), lit(0L)).as("bm25_rank"))
   }
 
-  /** The eval's TRUTH side, shared by the recompute (x60) and served (x64)
-    * forms: each query document's most-Jaccard-similar neighbor through
-    * the d38 df-capped shingle index.
+  /** The one postings derivation: (doc_id, term, tf) rows, one per distinct
+    * term of each document — one explode and one map-side-combined
+    * aggregation (shared by [[topTerms]], [[corpusTopTerms]], [[bm25Search]]
+    * and the postings index lifecycle).
     */
-  private def retrievalTruth(docs: DataFrame, queryPred: Column): DataFrame =
-    Dedup.pairs(Vocab.hashTokenIdArrays(docs), PairSpec(PairSpec.Grams(5),
-        candidates = PairSpec.Candidates(queries = Some(queryPred)), verify = PairSpec.TopK(1)))
-      .select(col("query_id"), col("neighbor_id").as("truth_id"),
-        col("sim_ppm").as("truth_sim_ppm"))
+  private def postingsOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
+      .groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tf"))
 
-  /** [[retrievalAgreement]] SERVED through the persisted postings artifact
-    * (x64 — the corpus-scale eval shape [[retrievalAgreement]]'s scaladoc
-    * names): the SAME truth (d38 Jaccard top-1) and the SAME BM25
-    * arithmetic, but the ranking side reads [[materializedPostings]]
-    * through [[bm25SearchFromIndexTerms]]'s pushed term-IN-list in query
-    * BATCHES of `batchSize` when the query set is small, or — past
-    * [[servedEvalJoinThreshold]] queries — through the fully-distributed
-    * broadcast-semi-join plan ([[bm25SearchFromIndexJoin]]), where the
-    * query documents' distinct tokens are extracted Spark-side (identical
-    * `split` semantics to the recompute form) and NEVER collected: the
-    * eval's driver state stays flat no matter how many queries the
-    * predicate selects (round-8 verdict #1). Nothing rebuilds per eval
-    * on either path, and both compute identical frames, so the result is
-    * layout- AND path-independent: it hash-equals the recompute eval
-    * (x64 ≡ x60 — the x58 ≡ x33 discipline one level up; oracle-attested
-    * with x60's SQL verbatim).
+  /** [[postingsOf]] rows as index rows — (term, doc_id, tf, len), the
+    * document length denormalized onto every posting — and the
+    * (doc_id, len) ledger. `tf` is read twice, so callers pass it
+    * persisted.
     */
-  def retrievalAgreementServed(docs: DataFrame, table: String,
-      queryPred: Column, k: Int = 10, batchSize: Int = 64,
-      k1: Double = 1.2, b: Double = 0.75,
-      joinThreshold: Long = servedEvalJoinThreshold): DataFrame = {
-    materializedPostings(docs, table)
-    servedAgreementTail(docs, table, retrievalTruth(docs, queryPred),
-      queryPred, k, batchSize, k1, b, joinThreshold)
+  private def withLens(tf: DataFrame): (DataFrame, DataFrame) = {
+    val lens = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
+    (tf.join(lens, Seq("doc_id")).select(col("term"), col("doc_id"), col("tf"), col("len")),
+      lens)
   }
 
-  /** The FULLY-indexed eval (x67): truth from the persisted shingle index
-    * ([[graft.ops.Dedup.materializedShingleIndex]] — d38's more-like-this
-    * served build-once) AND ranking from the persisted postings — zero
-    * per-eval derivation on EITHER side, the shape a recurring production
-    * eval actually runs. Both serves are layout-independent, so the frame
-    * hash-equals the recompute eval (x67 ≡ x64 ≡ x60; oracle shared
-    * verbatim).
-    */
-  def retrievalAgreementIndexed(docs: DataFrame, shingleTable: String,
-      postingsTable: String, queryPred: Column, k: Int = 10,
-      batchSize: Int = 64, k1: Double = 1.2, b: Double = 0.75,
-      joinThreshold: Long = servedEvalJoinThreshold): DataFrame = {
-    graft.ops.Dedup.materializedShingleIndex(docs, shingleTable)
-    materializedPostings(docs, postingsTable)
-    val truth = graft.ops.Dedup.similarDocsTopKFromIndex(
-        docs.sparkSession, shingleTable, queryPred, k = 1)
-      .select(col("query_id"), col("neighbor_id").as("truth_id"),
-        col("sim_ppm").as("truth_sim_ppm"))
-    servedAgreementTail(docs, postingsTable, truth, queryPred, k,
-      batchSize, k1, b, joinThreshold)
-  }
-
-  /** Query-count threshold where the served evals switch from driver-side
-    * literal IN-list batches to the fully-distributed semi-join plan
-    * ([[bm25SearchFromIndexJoin]]). Below it, a handful of queries wins by
-    * pushing a literal term IN-list into the term-sorted postings scan
-    * (row-group skipping); above it, the collect itself is the scale
-    * hazard — at the default 1-in-31 query sample the term lists are
-    * corpus-proportional driver state (round-8 verdict #1).
-    */
-  private[graft] val servedEvalJoinThreshold: Long = 128L
-
-  /** The served eval's shared ranking tail. Two plans, one contract:
+  /** The ranking tail of [[bm25Search]]: `hits` are the matched
+    * (term, doc_id, tf, len) postings, `lens` the full ledger.
     *
-    *   - `|Q| ≤ joinThreshold`: the query documents' Spark-extracted term
-    *     lists collect (|Q|-bounded by the threshold) and batch through
-    *     the postings serve's literal term IN-list (self excluded,
-    *     per-batch caches released) — partition pruning wins for point
-    *     lookups;
-    *   - `|Q| > joinThreshold`: the query terms STAY a DataFrame and the
-    *     postings prune via a broadcast SEMI-join on `term`
-    *     ([[bm25SearchFromIndexJoin]]) — the same candidate restriction
-    *     with no driver literals and no O(Q) driver state, so the eval's
-    *     driver footprint is flat no matter how many queries the
-    *     predicate selects (round-8 verdict #1: the old unconditional
-    *     collect was corpus-proportional at the default 1-in-31 sample).
-    *
-    * Both plans compute identical frames (same per-term df, same scoring
-    * expression, same per-query ranking — spec-pinned), so the eval's
-    * hash is path-independent.
+    * df joins UNHINTED: it is one row per distinct matched term, which is
+    * vocabulary-of-the-query-set-sized on the frame path (AQE broadcasts
+    * from the true runtime size at fixture scale, shuffles at corpus
+    * scale). The per-term addend (idf·(tf·(k1+1)))/(tf+denom) references
+    * nothing query-specific, so it is computed once per matched posting
+    * row and the q×d join only attaches query_id and feeds the sum — the
+    * same IEEE expression tree over the same scalars as the oracle's
+    * per-row form, so every (query, doc) group sums the identical addends.
     */
-  private def servedAgreementTail(docs: DataFrame, table: String,
-      truth: DataFrame, queryPred: Column, k: Int, batchSize: Int,
-      k1: Double, b: Double,
-      joinThreshold: Long = servedEvalJoinThreshold): DataFrame = {
-    val spark = docs.sparkSession
-    val qdocs = docs.filter(queryPred)
-      .select(col("doc_id"), array_distinct(tokens(col("text"))).as("terms"))
-    // ONE bounded job answers the dispatch AND, when the small plan wins,
-    // IS the query set: collecting (threshold+1) rows proves which side of
-    // the threshold |Q| falls on, and a result of ≤ threshold rows is the
-    // complete query set (limit past the end returns everything), so the
-    // IN-list branch never re-runs the corpus-side filter+tokenize scan
-    // (round-9 ADVICE: the old count()/consume pair evaluated it twice
-    // per eval). The join branch pays only this (threshold+1)-row probe
-    // before its distributed consume.
-    val probe =
-      qdocs.limit(math.min(joinThreshold, Int.MaxValue - 2L).toInt + 1).collect()
-    // an empty query set has an empty truth side too — short-circuit to
-    // the (empty) x60-shaped frame instead of reducing over zero batches
-    // (round-8 review: `Iterator.empty.reduce` throws)
-    if (probe.isEmpty)
-      return truth.select(col("query_id"), col("truth_id"),
-        col("truth_sim_ppm"), lit(0L).as("bm25_rank"))
-    val rankedAll = if (probe.length > joinThreshold) {
-      bm25SearchFromIndexJoin(spark, table,
-        qdocs.select(col("doc_id").as("query_id"),
-          explode(col("terms")).as("term")),
-        k, k1, b, excludeQueryDoc = true)
-    } else {
-      val queryTerms = probe
-        .map(r => (r.getLong(0), r.getSeq[String](1)))
-        .sortBy(_._1).toSeq
-      // eagerRelease: each batch's ranked list materializes (|batch|·k
-      // rows) and its postings cache releases before the next batch —
-      // without it, ⌈Q/batchSize⌉ persisted postings subsets would pin
-      // until a blanket clearCache (the marginFromScored cache discipline)
-      queryTerms.grouped(batchSize).map { batch =>
-        bm25SearchFromIndexTerms(spark, table, batch, k, k1, b,
-          excludeQueryDoc = true, eagerRelease = true)
-      }.reduce(_ unionByName _)
-    }
-    val ranked = rankedAll
-      .select(col("query_id"), col("doc_id").as("truth_id"),
-        col("rank").as("bm25_rank"))
-    truth.join(ranked, Seq("query_id", "truth_id"), "left")
-      .select(col("query_id"), col("truth_id"), col("truth_sim_ppm"),
-        coalesce(col("bm25_rank"), lit(0L)).as("bm25_rank"))
-  }
-
-  /** Build-once/serve-many lifecycle for the BM25 surface — the lexical
-    * twin of [[graft.ops.Vectors.materializedIvfIndex]]. [[bm25Search]]
-    * re-derives postings, lengths, and document frequencies from the
-    * corpus on every call — right for one ad-hoc query, wrong for a
-    * serving path at 100 TB. This persists the index once per corpus as
-    * TWO tables:
-    *
-    *   - `table`: the inverted index — (term, doc_id, tf, len) rows,
-    *     term-bucketed and term-sorted, with the document length
-    *     DENORMALIZED onto every posting so serving never aggregates the
-    *     corpus per query batch;
-    *   - `table_len`: the (doc_id, len) ledger — |docs|-sized,
-    *     doc_id-bucketed; it feeds the two corpus constants (n_docs,
-    *     avglen) with one small scan and is the append path's
-    *     already-indexed ledger.
-    *
-    * [[bm25SearchFromIndex]] reads both; [[appendToPostings]] is the CDC
-    * half. Serving is layout-independent, so the served query hash-equals
-    * the [[bm25Search]] recompute form (x58 ≡ x33, oracle-attested).
-    */
-  def materializedPostings(docs: DataFrame, table: String,
-      buckets: Int = 32): DataFrame = {
-    val spark = docs.sparkSession
-    graft.sources.BucketedLayout.buildIfAbsent(spark, table) {
-      val postings = docs
-        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-        .persist() // feeds the ledger and the denormalized index rows
-      val lens = postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-      // the ledger is dropped UNCONDITIONALLY inside the main table's
-      // cold-build block (the materializedShingleIndex discipline,
-      // round-11): a build-if-absent alone would let a STALE `_len`
-      // survive a torn [[compactPostings]] swap (crash between its two
-      // drops leaves the main table absent but the pre-compaction ledger
-      // present) and pair it with freshly built postings — wrong corpus
-      // constants for every BM25 score and a poisoned append dedup. The
-      // inner buildIfAbsent still runs (now always cold) for its
-      // orphaned-location sweep. The MAIN table writes LAST: its
-      // existence is the commit point every consumer's build-if-absent
-      // checks, so main-present ⇒ ledger-present.
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_len")
-      graft.sources.BucketedLayout.buildIfAbsent(spark, table + "_len") {
-        graft.sources.BucketedLayout.writeBucketed(lens, table + "_len",
-          "doc_id", 8)
-      }
-      graft.sources.BucketedLayout.writeBucketed(
-        postings.join(lens, Seq("doc_id"))
-          .select(col("term"), col("doc_id"), col("tf"), col("len")),
-        table, "term", buckets)
-      postings.unpersist()
-    }
-  }
-
-  /** BM25 over a persisted [[materializedPostings]] index — zero build
-    * work per query batch. The index scan carries a LITERAL term IN-list,
-    * so the predicate pushes into the parquet reader and — with
-    * term-sorted buckets — row groups holding no query term skip on
-    * min/max stats: scoring touches only the query terms' postings, the
-    * inverted-index access pattern materialized into the storage layout.
-    * Document frequencies come from the matched postings alone (each
-    * (term, doc_id) appears once per indexed doc, so `df` = row count),
-    * and the corpus constants come from the |docs|-sized ledger — the
-    * corpus-sized posting table is never aggregated.
-    *
-    * Replay tolerance: a crash between the postings append and its ledger
-    * commit ([[appendToPostings]]'s torn window) can leave byte-identical
-    * duplicate posting rows; the per-(term, doc_id) dedup on the matched
-    * frame (bounded by the query terms' postings) makes them invisible
-    * here, which is what makes the append path's replay safe.
-    *
-    * Scoring is the exact [[bm25Search]] expression — same operand order,
-    * same ppm rounding — so results hash-equal the recompute form.
-    */
-  def bm25SearchFromIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: Seq[(Long, String)], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25SearchFromIndexTerms(spark, table,
-      queries.map { case (qid, text) => (qid, text.split(" ").distinct.toSeq) },
-      k, k1, b)
-
-  /** [[bm25SearchFromIndex]] with the query TERM LISTS given directly —
-    * the form [[retrievalAgreementServed]] batches through (its queries
-    * are corpus documents whose tokens are extracted Spark-side, so a
-    * driver-side string re-split must not get a vote on tokenization).
-    * `excludeQueryDoc` drops the query's own document BEFORE ranking (the
-    * recompute eval's self-exclusion — a query that is itself a corpus
-    * member would otherwise occupy a top-k slot in every result).
-    * `eagerRelease` materializes the (|queries|·k-row) result via an eager
-    * local checkpoint and unpersists the matched-postings cache before
-    * returning — the mode batched callers need, where the default lazy
-    * contract (cache pinned until the harness's per-query clearCache)
-    * would accumulate one postings subset per batch.
-    */
-  def bm25SearchFromIndexTerms(spark: org.apache.spark.sql.SparkSession,
-      table: String, queries: Seq[(Long, Seq[String])], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75,
-      excludeQueryDoc: Boolean = false,
-      eagerRelease: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val terms = queries.flatMap(_._2).distinct
-    val qterms = queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-      .toDF("query_id", "term")
-    val hits = spark.table(table)
-      .filter(col("term").isInCollection(terms))
-      .dropDuplicates("term", "doc_id")
-      .persist() // feeds df and the scoring join
-    // default: hits stays persisted — the returned frame is lazy and both
-    // the df aggregate and the scoring join read it; per-query harness
-    // cache clears release it (the charLmScore/bm25Search convention).
-    // eagerRelease: materialize now, release the postings cache here.
-    val out = bm25RankMatchedHits(spark, table, hits, broadcast(qterms),
-      k, k1, b, excludeQueryDoc)
-    if (eagerRelease) {
-      val materialized = out.guardedCheckpoint("bm25_served_batch")
-      hits.unpersist()
-      materialized
-    } else out
-  }
-
-  /** [[bm25SearchFromIndexTerms]] with the query terms kept as a
-    * DATAFRAME — the corpus-scale form the served evals dispatch to past
-    * [[servedEvalJoinThreshold]] queries (round-8 verdict #1): the
-    * postings prune via a stats-planned SEMI-join on the distinct query
-    * `term` set (the same candidate restriction the literal IN-list
-    * applies, without O(Q) driver literals — broadcast when the term set
-    * is small, shuffled when it isn't; unhinted since round 11), per-term
-    * document frequencies come from the matched postings exactly as in
-    * the batched form (df is a per-term quantity, so batching never
-    * changed it), and the per-query scoring join runs DISTRIBUTED — the
-    * (query_id, term) frame never visits the driver. Identical scoring
-    * expression, grouping, and ranking ⇒ identical rows to the IN-list
-    * path (spec-pinned), which is what keeps x64/x67 path-independent.
-    *
-    * Always materializes eagerly and releases its postings cache before
-    * returning (the batched path's `eagerRelease` contract — one call
-    * serves the whole query set here).
-    */
-  def bm25SearchFromIndexJoin(spark: org.apache.spark.sql.SparkSession,
-      table: String, qterms: DataFrame, k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75,
-      excludeQueryDoc: Boolean = false): DataFrame = {
-    // defensive per-query term dedup — the IN-list path applies
-    // `ts.distinct` per query, so a caller passing raw exploded tokens
-    // with repeats must score each term ONCE on this path too or the
-    // documented path-independence contract breaks silently (round-9
-    // ADVICE; in-repo callers already pre-apply array_distinct)
-    val qt = qterms.dropDuplicates("query_id", "term")
-    // the distinct-terms prune joins UNHINTED (round 11): one row per
-    // distinct query term is vocabulary-of-the-query-set-sized — Heaps-law
-    // growth when the query set is corpus-proportional (exactly this
-    // path's dispatch condition), so a hint would force the broadcast at
-    // every scale; AQE broadcasts the semi-join side from its TRUE
-    // runtime size at fixture scale and shuffles at corpus scale. (This
-    // frame sits behind the eager checkpoint below, where the per-query
-    // PlanGuard gate cannot see it — the unhint is the same discipline
-    // applied by code review rather than by the sweep.)
-    val hits = spark.table(table)
-      .join(qt.select(col("term")).distinct(),
-        Seq("term"), "left_semi")
-      .dropDuplicates("term", "doc_id")
-      .persist() // feeds df and the scoring join
-    val out = bm25RankMatchedHits(spark, table, hits, qt,
-      k, k1, b, excludeQueryDoc)
-    val materialized = out.guardedCheckpoint("bm25_served_join")
-    hits.unpersist()
-    materialized
-  }
-
-  /** The scoring tail both postings serves share — ONE definition so the
-    * IN-list and semi-join paths cannot drift: per-term df from the
-    * matched (deduped) postings, corpus constants from the `_len` ledger,
-    * the exact [[bm25Search]] scoring expression (same operand order,
-    * same ppm rounding), per-query dense ranking. `qterms` arrives
-    * broadcast-wrapped from the batched path (driver-built, |batch|-
-    * bounded) and bare from the join path (corpus-scale — Spark plans the
-    * shuffle).
-    */
-  private def bm25RankMatchedHits(spark: org.apache.spark.sql.SparkSession,
-      table: String, hits: DataFrame, qterms: DataFrame, k: Int,
-      k1: Double, b: Double, excludeQueryDoc: Boolean): DataFrame = {
-    // dfs joins UNHINTED (round 11): it is one row per distinct MATCHED
-    // term. On the IN-list path that is ≤ |driver literals| — statically
-    // bounded — but on the semi-join path it is vocabulary-of-the-query-
-    // set-sized (Heaps-law growth when the query set is corpus-
-    // proportional), and this tail is ONE definition shared by both
-    // paths, so it carries the weaker contract: AQE broadcasts from the
-    // TRUE runtime size at fixture scale, shuffles at corpus scale.
-    val dfs = hits.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = spark.table(table + "_len")
-      .agg(count(lit(1)).as("n_docs"), avg(col("len")).as("avglen"))
-    // pre-fold BEFORE the q×d blowup join (round 13 hoisted idf per TERM
-    // and the normalizer per POSTING row; round 14 folds the WHOLE
-    // addend): the per-term score contribution
-    // (idf·(tf·(k1+1)))/(tf+denom) references nothing query-specific, so
-    // it is computed once per MATCHED POSTING row (Σ_term df rows) and the
-    // q×d blowup join (Σ_term qf·df rows — the 100×-larger frame at a
-    // corpus-proportional query sample) carries ZERO arithmetic: it only
-    // attaches query_id and feeds the sum. Bit-identical doubles — the
-    // same IEEE expression tree evaluates over the same (tf, denom, idf)
-    // scalars, once instead of qf times, so every (query, doc) group sums
-    // the identical addend multiset.
-    val idfs = dfs
+  private def rankMatched(hits: DataFrame, lens: DataFrame, qterms: DataFrame, k: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val (k1, b) = (1.2, 0.75)
+    val stats = lens.agg(count(lit(1)).as("n_docs"), avg(col("len")).as("avglen"))
+    val idfs = hits.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(stats))
       .select(col("term"),
         log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0))
           .as("idf"))
-    val contrib = hits
+    val perTerm = hits
       .crossJoin(broadcast(stats))
       .select(col("term"), col("doc_id"), col("tf"),
         (lit(k1) * (lit(1.0 - b) + lit(b) * col("len") / col("avglen"))).as("denom"))
       .join(idfs, Seq("term"))
       .select(col("term"), col("doc_id"),
-        (col("idf") * (col("tf") * lit(k1 + 1.0)) / (col("tf") + col("denom")))
-          .as("s"))
-    val perTerm = contrib
+        (col("idf") * (col("tf") * lit(k1 + 1.0)) / (col("tf") + col("denom"))).as("s"))
       .join(qterms, Seq("term"))
       .select(col("query_id"), col("doc_id"), col("s"))
-    val scored = (if (excludeQueryDoc) perTerm.filter(col("doc_id") =!= col("query_id"))
-      else perTerm)
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(lit(1e6) * sum(col("s"))).cast("long").as("score_ppm"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("score_ppm").desc, col("doc_id").asc)
-    scored
+    (if (excludeSelf) perTerm.filter(col("doc_id") =!= col("query_id")) else perTerm)
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(round(lit(1e6) * sum(col("s"))).cast("long").as("score_ppm"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
+  }
+
+  /** Writes `docs`' postings as a term-bucketed, term-sorted index table
+    * (32 buckets) and its doc_id-bucketed `_len` ledger (8 buckets), with
+    * `keep` — already-indexed (index rows, ledger rows) — unioned in.
+    * The write order is each mode's commit point: an Overwrite build
+    * writes the ledger first and the main table LAST (main-present ⇒
+    * ledger-present, what every consumer's build-if-absent checks); an
+    * Append writes the postings first and the ledger LAST (a ledger row is
+    * its batch's commit marker — a torn replay only re-appends
+    * byte-identical postings, which readers dedup, whereas the opposite
+    * order would drop the batch's terms from every future search).
+    */
+  private def writePostings(docs: DataFrame, table: String, mode: SaveMode,
+      keep: Option[(DataFrame, DataFrame)] = None): Unit = {
+    val tf = postingsOf(docs).persist() // feeds the ledger and the index rows
+    val (fresh, freshLens) = withLens(tf)
+    val (rows, lens) = keep.fold((fresh, freshLens)) { case (kr, kl) =>
+      (kr.unionByName(fresh), kl.unionByName(freshLens)) }
+    def writeRows(): Unit = BucketedLayout.writeBucketed(rows, table, "term", 32, mode = mode)
+    def writeLens(): Unit =
+      BucketedLayout.writeBucketed(lens, table + "_len", "doc_id", 8, mode = mode)
+    if (mode == SaveMode.Append) { writeRows(); writeLens() }
+    else { writeLens(); writeRows() }
+    tf.unpersist()
+  }
+
+  /** Build-once/serve-many lifecycle for the BM25 surface — the lexical
+    * twin of [[graft.ops.Vectors.materializedIvfIndex]]. Recomputing
+    * postings, lengths and document frequencies per call is right for one
+    * ad-hoc query and wrong for a serving path at 100 TB. This persists the
+    * index once per corpus as TWO tables ([[writePostings]]):
+    *
+    *   - `table`: the inverted index — (term, doc_id, tf, len) rows,
+    *     term-bucketed and term-sorted, with the document length
+    *     DENORMALIZED onto every posting so serving never aggregates the
+    *     corpus per query;
+    *   - `table_len`: the (doc_id, len) ledger — |docs|-sized,
+    *     doc_id-bucketed; it feeds the two corpus constants with one small
+    *     scan and is the append path's already-indexed ledger.
+    *
+    * `bm25Search(Postings.Served(table), …)` reads both;
+    * [[appendToPostings]] is the CDC half.
+    *
+    * The ledger is dropped UNCONDITIONALLY inside the main table's cold
+    * build (the materializedShingleIndex discipline): a build-if-absent
+    * alone would let a STALE `_len` survive a torn [[compactPostings]]
+    * swap (a crash between its two drops leaves the main table absent but
+    * the pre-compaction ledger present) and pair it with freshly built
+    * postings — wrong corpus constants for every BM25 score and a poisoned
+    * append dedup. The drop also sweeps the ledger's orphaned location.
+    */
+  def materializedPostings(docs: DataFrame, table: String): DataFrame = {
+    val spark = docs.sparkSession
+    BucketedLayout.buildIfAbsent(spark, table) {
+      BucketedLayout.dropWithLocation(spark, table + "_len")
+      writePostings(docs, table, SaveMode.Overwrite)
+    }
   }
 
   /** Append one ingest batch's documents to a persisted
@@ -1740,38 +1448,19 @@ object TextOps {
     * [[graft.ops.Vectors.appendToIvfIndex]] /
     * [[graft.ops.Dedup.appendBandKeys]] discipline for the lexical
     * surface). Already-indexed documents (per the ledger) are skipped, so
-    * a REPLAYED batch whose previous run completed is a no-op.
-    *
-    * Commit order is postings first, ledger LAST: the ledger row is the
-    * batch's commit marker. A crash inside the torn window (postings
-    * written, ledger not) makes the replay re-append byte-identical
-    * posting rows — harmless, because every reader dedups matched
-    * postings on (term, doc_id) ([[bm25SearchFromIndex]]) — and then
-    * write the ledger once. The opposite order would be worse than
-    * duplicates: a ledger row without postings would silently drop the
-    * batch's terms from every future search.
+    * a REPLAYED batch whose previous run completed is a no-op. Postings
+    * are written first and the ledger LAST ([[writePostings]]): a crash
+    * inside that torn window makes the replay re-append byte-identical
+    * posting rows, which the served search dedups on (term, doc_id).
     *
     * Mismatched bucket/sort specs on append are refused by Spark — the
     * same layout guard [[graft.ops.Dedup.appendBandKeys]] relies on.
     */
-  def appendToPostings(newDocs: DataFrame, table: String,
-      buckets: Int = 32): Unit = {
+  def appendToPostings(newDocs: DataFrame, table: String): Unit = {
     val spark = newDocs.sparkSession
-    val fresh = newDocs.join(
-      spark.table(table + "_len").select(col("doc_id")), Seq("doc_id"), "left_anti")
-    val postings = fresh
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
-    val lens = postings.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-    postings.join(lens, Seq("doc_id"))
-      .select(col("term"), col("doc_id"), col("tf"), col("len"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .bucketBy(buckets, "term").sortBy("term").saveAsTable(table)
-    lens.write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .bucketBy(8, "doc_id").sortBy("doc_id").saveAsTable(table + "_len")
-    postings.unpersist()
+    writePostings(newDocs.join(
+      spark.table(table + "_len").select(col("doc_id")), Seq("doc_id"), "left_anti"),
+      table, SaveMode.Append)
     // appends from this (possibly cloned foreachBatch) session must be
     // visible to its own later reads; cross-session readers refresh theirs
     spark.catalog.refreshTable(table)
@@ -1802,26 +1491,19 @@ object TextOps {
     *
     * No-op fast path: when the index already covers `current` exactly
     * (no orphans, no lag — ONE metadata-bounded union-of-limits probe),
-    * the rewrite
-    * is skipped, making replays cheap (duplicate scrubbing then waits for
-    * a compaction that has real work; reads tolerate duplicates anyway).
-    * Torn window: the swap is drop+rewrite from eagerly-checkpointed
-    * frames (both MUST materialize before their source tables drop); a
-    * crash between drop and write loses the table, and the deterministic
-    * build-if-absent recovery (orphaned-location sweep) applies — the
-    * shingle-rebuild discipline.
+    * the rewrite is skipped, making replays cheap (duplicate scrubbing
+    * then waits for a compaction that has real work; reads tolerate
+    * duplicates anyway).
     */
-  def compactPostings(current: DataFrame, table: String,
-      buckets: Int = 32): Unit = {
+  def compactPostings(current: DataFrame, table: String): Unit = {
     val spark = current.sparkSession
     val curIds = current.select(col("doc_id"))
     val ledgerIds = spark.table(table + "_len").select(col("doc_id"))
     val freshDocs = current
       .join(ledgerIds, Seq("doc_id"), "left_anti")
-    // no-op probe: ONE bounded action (round-10 verdict nit — the
-    // separate orphan/fresh limit-counts cost two). Each union branch
-    // stops at its first witness row; an exact-coverage index yields an
-    // empty union, and the replay fast path costs one metadata-sized job.
+    // no-op probe: ONE bounded action. Each union branch stops at its
+    // first witness row; an exact-coverage index yields an empty union,
+    // and the replay fast path costs one metadata-sized job.
     val anyWork = ledgerIds.join(curIds, Seq("doc_id"), "left_anti")
       .select(col("doc_id")).limit(1)
       .unionAll(freshDocs.select(col("doc_id")).limit(1))
@@ -1835,34 +1517,17 @@ object TextOps {
       .join(curIds, Seq("doc_id"), "left_semi")
       .dropDuplicates("doc_id")
       .select(col("doc_id"), col("len"))
-    val posts = freshDocs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist()
-    val lens = posts.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-    val newPostings = keep.unionByName(
-        posts.join(lens, Seq("doc_id"))
-          .select(col("term"), col("doc_id"), col("tf"), col("len")))
-    val newLens = keepLen.unionByName(lens)
     // STAGE the new index into `_staged` sibling tables, then swap by
-    // metadata rename (round 14, guide §5/§6): the old shape eagerly
-    // localCheckpointed both corpus-scale frames — a SECOND full
-    // materialization, held in block-manager memory — because their plans
-    // read the very tables the swap was about to drop; the staged write
-    // IS the single materialization, reading the old index while it is
-    // still live. A crash before the swap leaves the OLD index fully
-    // serving plus orphaned staged tables, which the sweep below (and
-    // any rebuild's buildIfAbsent sweep) clears on the next attempt.
+    // metadata rename: the staged write IS the single materialization,
+    // reading the old index while it is still live. A crash before the
+    // swap leaves the OLD index fully serving plus orphaned staged tables,
+    // which the sweep below (and any rebuild's buildIfAbsent sweep) clears
+    // on the next attempt.
     val staged = table + "_staged"
-    graft.sources.BucketedLayout.dropWithLocation(spark, staged)
-    graft.sources.BucketedLayout.dropWithLocation(spark, staged + "_len")
-    graft.sources.BucketedLayout.writeBucketed(newLens, staged + "_len",
-      "doc_id", 8)
-    graft.sources.BucketedLayout.writeBucketed(newPostings, staged,
-      "term", buckets)
-    posts.unpersist()
-    // swap order is the recovery contract (round-11, spec-pinned in
+    BucketedLayout.dropWithLocation(spark, staged)
+    BucketedLayout.dropWithLocation(spark, staged + "_len")
+    writePostings(freshDocs, staged, SaveMode.Overwrite, Some((keep, keepLen)))
+    // swap order is the recovery contract (spec-pinned in
     // TextAndMultimodalSpec's torn-swap windows): the MAIN table drops
     // FIRST and commits LAST, so at every kill point inside this window
     // the main table is ABSENT — the exact signal the consumers'
@@ -1961,7 +1626,7 @@ object TextOps {
   def hybridRrf(docs: DataFrame, queries: Seq[(Long, String)],
       vectorList: DataFrame, k: Int = 5, perList: Int = 10,
       c: Int = 60): DataFrame = {
-    val lex = bm25Search(docs, queries, perList)
+    val lex = bm25Search(Postings.Recompute(docs), Left(queries), perList)
       .select(col("query_id"), col("doc_id"), col("rank"))
     val vec = vectorList
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))

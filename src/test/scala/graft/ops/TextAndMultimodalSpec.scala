@@ -521,7 +521,8 @@ class TextAndMultimodalSpec extends SparkSpec {
       (6L, "spark runtime"), (7L, "spark sql"), (8L, "spark core")
     ).toDF("doc_id", "text")
     // "spark" df=6 (common), "shuffle" df=2 (rare)
-    val out = TextOps.bm25Search(docs, Seq((0L, "spark shuffle")), k = 8)
+    val out = TextOps.bm25Search(TextOps.Postings.Recompute(docs),
+        Left(Seq((0L, "spark shuffle"))), k = 8)
       .collect().map(r => r.getAs[Long]("rank") -> r.getAs[Long]("doc_id")).toMap
     assert(out(1L) === 1L) // both terms win
     // the rare-term-only doc must outrank every common-term-only doc
@@ -531,53 +532,75 @@ class TextAndMultimodalSpec extends SparkSpec {
     assert(!rankOf.contains(5L)) // no matching term → not retrieved
   }
 
-  test("bm25SearchFromIndexJoin ≡ literal IN-list batches; no pinned cache; " +
-      "served eval path-independent") {
-    import org.apache.spark.sql.functions.{array_distinct, col, explode, split}
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"))
-    val t = "postings_join_spec"
+  private lazy val corpus = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    .select(org.apache.spark.sql.functions.col("doc_id"),
+      org.apache.spark.sql.functions.col("text"))
+
+  /** `corpus` served from a freshly built postings table. */
+  private def servedCorpus(t: String): TextOps.Postings = {
     Seq(t, t + "_len").foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    TextOps.materializedPostings(docs, t)
-    val pred = col("doc_id") % 7 === 0
-    val qdocs = docs.filter(pred)
-      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("terms"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Long]("score_ppm"), r.getAs[Long]("rank"))).toSet
-    // the driver-batched IN-list path (small-query-set branch)
-    val batches = qdocs.collect().map(r => (r.getLong(0), r.getSeq[String](1)))
-      .sortBy(_._1).toSeq
-    val inList = batches.grouped(16).map { b =>
-      TextOps.bm25SearchFromIndexTerms(spark, t, b, k = 10,
-        excludeQueryDoc = true, eagerRelease = true)
-    }.reduce(_ unionByName _)
-    // the distributed semi-join path (the >threshold branch): query terms
-    // never visit the driver
-    spark.sqlContext.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val joined = TextOps.bm25SearchFromIndexJoin(spark, t,
-      qdocs.select(col("doc_id").as("query_id"), explode(col("terms")).as("term")),
-      k = 10, excludeQueryDoc = true)
-    val joinRows = rows(joined)
-    assert(joinRows.nonEmpty)
-    assert(joinRows === rows(inList), "semi-join path drifted from the IN-list path")
-    // the join path materializes eagerly and releases its postings cache:
-    // releasing its own checkpoint restores the pre-call persistent set
-    graft.plans.PlanGuard.CheckpointChain.release(joined)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
-    // and the full served eval is PATH-independent (x64's hash contract):
-    // forcing each branch of the dispatch yields identical frames
-    val t2 = "postings_join_spec_eval"
-    Seq(t2, t2 + "_len").foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    def evalRows(joinThreshold: Long) = TextOps.retrievalAgreementServed(
-        docs, t2, pred, joinThreshold = joinThreshold)
-      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("truth_id"),
-        r.getAs[Long]("truth_sim_ppm"), r.getAs[Long]("bm25_rank"))).toSet
-    val viaJoin = evalRows(0L)
-    val viaInList = evalRows(Long.MaxValue)
-    assert(viaJoin.nonEmpty)
-    assert(viaJoin === viaInList, "served eval depends on the dispatch path")
+    TextOps.materializedPostings(corpus, t)
+    TextOps.Postings.Served(t)
+  }
+
+  private def hitRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
+      r.getAs[Long]("score_ppm"), r.getAs[Long]("rank"))).toSet
+
+  /** One (query_id, term) row per distinct term of each (query_id, text). */
+  private def queryTerms(texts: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.{array_distinct, col, explode, split}
+    texts.select(col("query_id"), explode(array_distinct(split(col("text"), " "))).as("term"))
+  }
+
+  test("bm25Search: Recompute and Served postings give identical rows, literal and frame queries") {
+    import org.apache.spark.sql.functions.col
+    import TextOps.Postings.Recompute
+    val served = servedCorpus("postings_source_spec")
+    val literal = Left(Seq((0L, "hash join batch"), (1L, "vector scan filter"),
+      (2L, "window agg order"), (3L, "the of and")))
+    val recomputed = hitRows(TextOps.bm25Search(Recompute(corpus), literal))
+    assert(recomputed.size === 40)
+    assert(hitRows(TextOps.bm25Search(served, literal)) === recomputed)
+    // corpus documents as frame queries: each excludes its own document
+    val frame = Right(queryTerms(corpus.filter(col("doc_id") % 7 === 0)
+      .select(col("doc_id").as("query_id"), col("text"))))
+    val recomputedFrame = hitRows(TextOps.bm25Search(Recompute(corpus), frame))
+    assert(recomputedFrame.nonEmpty)
+    assert(recomputedFrame.forall { case (q, d, _, _) => q != d })
+    assert(hitRows(TextOps.bm25Search(served, frame)) === recomputedFrame)
+  }
+
+  test("bm25Search: literal and frame queries agree when the query ids lie outside the corpus") {
+    import TextOps.Postings.Recompute
+    val texts = Seq((1000000L, "hash join batch"), (1000001L, "vector scan filter"),
+      (1000002L, "window agg order"), (1000003L, "the of and"))
+    val frame = Right(queryTerms(texts.toDF("query_id", "text")))
+    for (source <- Seq(Recompute(corpus), servedCorpus("postings_forms_spec"))) {
+      val literal = hitRows(TextOps.bm25Search(source, Left(texts)))
+      assert(literal.size === 40)
+      assert(hitRows(TextOps.bm25Search(source, frame)) === literal, source)
+    }
+  }
+
+  test("bm25Search and retrievalAgreement: an empty query set gives 0 rows with the contract schema") {
+    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.types.LongType
+    import TextOps.Postings.Recompute
+    def longs(df: org.apache.spark.sql.DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val hitSchema = Seq("query_id", "doc_id", "score_ppm", "rank").map(_ -> LongType)
+    val evalSchema = Seq("query_id", "truth_id", "truth_sim_ppm", "bm25_rank").map(_ -> LongType)
+    val noQueries = Right(queryTerms(Seq.empty[(Long, String)].toDF("query_id", "text")))
+    for (source <- Seq(Recompute(corpus), servedCorpus("postings_empty_spec"))) {
+      for (queries <- Seq(Left(Seq.empty[(Long, String)]), noQueries)) {
+        val out = TextOps.bm25Search(source, queries)
+        assert(out.collect().isEmpty, source)
+        assert(longs(out) === hitSchema)
+      }
+      val eval = TextOps.retrievalAgreement(corpus, lit(false), source)
+      assert(eval.collect().isEmpty, source)
+      assert(longs(eval) === evalSchema)
+    }
   }
 
   test("postingsStaleness: fresh full index reads zero lag and zero orphans; " +

@@ -4,14 +4,16 @@ import graft.{SparkEntry, SparkSpec, Tables}
 import org.apache.spark.graft.TestHooks
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Every iterative loop, every registry entry of the one ANN pipeline
-  * (`Vectors.topK`) and every entry of the one near-duplicate pair pipeline
-  * (`Dedup.pairs`, with the band-key entries d10 and d14), run through its
-  * registry entry at sf0.001, under two checks on the frames it manages:
+  * (`Vectors.topK`), every entry of the one near-duplicate pair pipeline
+  * (`Dedup.pairs`, with the band-key entries d10 and d14) and every entry
+  * and postings build of the one BM25 pipeline (`TextOps.bm25Search`), run
+  * at sf0.001, under two checks on the frames it manages:
   *   - use-after-release: no executed plan scans a checkpoint RDD that was
   *     already released when the plan ran. Unpersist events and query
   *     completions share the listener bus's shared queue, so they arrive
@@ -42,11 +44,30 @@ class FrameLifecycleSpec extends SparkSpec {
     "d19_cross_source_dups", "d21_minhash_estimate", "d22_simhash_pairs",
     "d23_dup_cluster_profile", "d24_threshold_sweep", "d26_winnow_overlap",
     "d29_lsh_confusion", "d30_idf_cosine", "d36_band_sweep", "d38_similar_docs",
-    "m8_frame_jaccard", "x60_retrieval_eval", "x64_retrieval_eval_served"
+    "m8_frame_jaccard", "x60_retrieval_eval", "x64_retrieval_eval_served",
+    "x33_bm25_search", "x55_hybrid_rrf", "x58_bm25_served", "x67_retrieval_eval_indexed",
+    "x69_postings_staleness", "x70_bm25_compacted"
   ).map(n => n -> (() => SparkEntry.queries(n)(spark, dir))) ++ Seq(
     "artifact:dedup_groups" -> (() => {
       spark.sql(s"DROP TABLE IF EXISTS dedup_groups_$sfx")
       graft.ops.Dedup.materializedGroupsFor(Tables.documents(spark, dir), dir)
+    }),
+    "artifact:postings" -> (() => {
+      Seq("", "_len").foreach(t => spark.sql(s"DROP TABLE IF EXISTS postings_$sfx$t"))
+      graft.ops.TextOps.materializedPostings(Tables.documents(spark, dir), s"postings_$sfx")
+    }),
+    "artifact:postings_cut" -> (() => {
+      Seq("", "_len").foreach(t => spark.sql(s"DROP TABLE IF EXISTS postings_cut_$sfx$t"))
+      graft.ops.TextOps.materializedPostings(
+        Tables.documents(spark, dir).filter(col("doc_id") < 438L), s"postings_cut_$sfx")
+    }),
+    "artifact:postings_compact" -> (() => {
+      val t = s"postings_compact_$sfx"
+      Seq("", "_len").foreach(n => spark.sql(s"DROP TABLE IF EXISTS $t$n"))
+      val base = Tables.documents(spark, dir)
+      graft.ops.TextOps.materializedPostings(base.filter(col("doc_id") < 438L), t)
+      graft.ops.TextOps.compactPostings(base.filter(col("doc_id") % 13 =!= 5), t)
+      spark.table(t)
     }),
     "artifact:bpe_merges" -> (() => {
       spark.sql(s"DROP TABLE IF EXISTS bpe_merges32_$sfx")

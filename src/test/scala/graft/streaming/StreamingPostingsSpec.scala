@@ -14,7 +14,7 @@ case class PostDocChunk(doc_id: Long, text: String)
   * once over the initial corpus takes per-micro-batch document appends
   * ([[TextOps.appendToPostings]]) with a kill/restart at every chunk
   * boundary, and serving from the final index must equal [[TextOps.
-  * bm25Search]] recomputed over the WHOLE corpus. Also pinned: a fully
+  * bm25Search]] over postings recomputed from the WHOLE corpus. Also pinned: a fully
   * replayed batch is a no-op (the ledger guard), and the torn window —
   * postings rows duplicated without their ledger commit — is invisible to
   * the serve path (per-(term, doc_id) dedup).
@@ -42,7 +42,7 @@ class StreamingPostingsSpec extends SparkSpec {
   }
 
   private def served(table: String): Set[(Long, Long, Long, Long)] =
-    TextOps.bm25SearchFromIndex(spark, table, queries, k = 10)
+    TextOps.bm25Search(TextOps.Postings.Served(table), Left(queries))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("score_ppm"), r.getAs[Long]("rank"))).toSet
 
@@ -82,7 +82,8 @@ class StreamingPostingsSpec extends SparkSpec {
     spark.catalog.refreshTable(table)
     spark.catalog.refreshTable(table + "_len")
 
-    val batchTwin = TextOps.bm25Search(rows.toDF("doc_id", "text"), queries, k = 10)
+    val batchTwin = TextOps.bm25Search(
+        TextOps.Postings.Recompute(rows.toDF("doc_id", "text")), Left(queries))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("score_ppm"), r.getAs[Long]("rank"))).toSet
     val afterStream = served(table)
