@@ -1219,9 +1219,11 @@ object TextOps {
     * with k1 = 1.2 and b = 0.75, the constants every oracle fixes. One
     * pipeline, whatever the source and the query form:
     *
-    *   - postings: `Recompute` derives them ([[postingsOf]] plus the
-    *     length ledger, one persisted aggregate feeding both) and
-    *     repartitions them on doc_id ahead of the query-term blowup — a
+    *   - postings: `Recompute` derives them ([[postingsOf]] and the length
+    *     ledger, both cached: the tf aggregate feeds the ledger and the
+    *     index rows, the ledger feeds the index rows and the corpus
+    *     constants) and repartitions them on doc_id ahead of the
+    *     query-term blowup — a
     *     fixed-count repartition is exempt from AQE coalescing, so when
     *     the query side broadcasts, the blowup join never collapses onto
     *     one task (doc_id, not term: a stopword's df·qf rows would all land
