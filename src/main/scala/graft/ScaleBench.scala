@@ -333,8 +333,8 @@ object ScaleBench {
       ("x64_served_join", (d: DataFrame) => {
         // the served eval's distributed ranking side cold (the frame
         // query form, whose terms prune the postings by a semi-join):
-        // postings build + ONE distributed plan serving a fixed 1-in-31 sample of the BASE
-        // slice. Query count is pinned across scales so the ratio
+        // postings build + ONE distributed plan serving a fixed 1-in-31
+        // sample of the BASE slice. Query count is pinned across scales so the ratio
         // isolates corpus reads — growing queries 8× too would put the
         // inherent Q×postings product term (present on EVERY path,
         // including the recompute eval) into the ratio. Driver state is

@@ -587,7 +587,8 @@ class TextAndMultimodalSpec extends SparkSpec {
     import org.apache.spark.sql.functions.lit
     import org.apache.spark.sql.types.LongType
     import TextOps.Postings.Recompute
-    def longs(df: org.apache.spark.sql.DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    def schemaOf(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
     val hitSchema = Seq("query_id", "doc_id", "score_ppm", "rank").map(_ -> LongType)
     val evalSchema = Seq("query_id", "truth_id", "truth_sim_ppm", "bm25_rank").map(_ -> LongType)
     val noQueries = Right(queryTerms(Seq.empty[(Long, String)].toDF("query_id", "text")))
@@ -595,11 +596,11 @@ class TextAndMultimodalSpec extends SparkSpec {
       for (queries <- Seq(Left(Seq.empty[(Long, String)]), noQueries)) {
         val out = TextOps.bm25Search(source, queries)
         assert(out.collect().isEmpty, source)
-        assert(longs(out) === hitSchema)
+        assert(schemaOf(out) === hitSchema)
       }
       val eval = TextOps.retrievalAgreement(corpus, lit(false), source)
       assert(eval.collect().isEmpty, source)
-      assert(longs(eval) === evalSchema)
+      assert(schemaOf(eval) === evalSchema)
     }
   }
 
