@@ -1319,8 +1319,21 @@ object TextOps {
       .select(col("doc_id").as("query_id"),
         explode(array_distinct(tokens(col("text")))).as("term"))
     val ranked = bm25Search(postings, Right(qterms))
-      .select(col("query_id"), col("doc_id").as("truth_id"), col("rank").as("bm25_rank"))
-    truth.join(ranked, Seq("query_id", "truth_id"), "left")
+      .select(col("query_id"), col("doc_id").as("truth_id"),
+        lit(null).cast("long").as("truth_sim_ppm"), col("rank").as("bm25_rank"))
+    // a left join of two query-set-sized sides would leave its strategy to
+    // AQE's runtime sizes, decided when the first side finishes (broadcast
+    // the other, or shuffle both): the stages run would depend on which
+    // side won. One exchange over the union of both, keyed on
+    // (query_id, truth_id), is the same plan whichever side finishes first
+    // — truth has one row per key and ranked at most one, so max() picks
+    // each side's value and a key without a truth row is a ranked-only hit
+    truth.select(col("query_id"), col("truth_id"), col("truth_sim_ppm"),
+        lit(null).cast("long").as("bm25_rank"))
+      .unionByName(ranked)
+      .groupBy(col("query_id"), col("truth_id"))
+      .agg(max(col("truth_sim_ppm")).as("truth_sim_ppm"), max(col("bm25_rank")).as("bm25_rank"))
+      .filter(col("truth_sim_ppm").isNotNull)
       .select(col("query_id"), col("truth_id"), col("truth_sim_ppm"),
         coalesce(col("bm25_rank"), lit(0L)).as("bm25_rank"))
   }

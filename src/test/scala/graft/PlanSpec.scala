@@ -691,8 +691,8 @@ class PlanSpec extends SparkSpec {
     // tables): a job more is a stage the pipeline did not run before
     val dir = "/root/testdata/sf0.001"
     val pinned = Seq("x33_bm25_search" -> 19, "x58_bm25_served" -> 12,
-      "x60_retrieval_eval" -> 44, "x64_retrieval_eval_served" -> 36,
-      "x67_retrieval_eval_indexed" -> 23, "x70_bm25_compacted" -> 19)
+      "x60_retrieval_eval" -> 43, "x64_retrieval_eval_served" -> 35,
+      "x67_retrieval_eval_indexed" -> 21, "x70_bm25_compacted" -> 19)
     for ((name, limit) <- pinned) {
       SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
       spark.sqlContext.clearCache()
